@@ -35,6 +35,7 @@ and (in streaming) checkpointed state store provide those guarantees.
 from __future__ import annotations
 
 import csv
+import functools
 import io
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
@@ -43,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from streamprocessing_spark.shipping import ensure_shippable, guard_zip_caches
 
 PluginFn = Callable[[str, str, str | None], None | str | list[tuple[str, str]]]
 # Vectorized plugin: whole pandas batch in, tagged batch out
@@ -94,12 +97,11 @@ class PluginOp:
     contract: str = "mixed"
 
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
-        from streamprocessing_spark.shipping import ensure_shippable
-
         ensure_shippable()
         fn = self.fn
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            guard_zip_caches()
             for pdf in batches:
                 kinds: list[str] = []
                 keys: list[str] = []
@@ -264,9 +266,10 @@ class BatchPluginOp:
     (regex filters, CSV projections, passthrough counts): the hot loop
     becomes pandas column ops over Arrow batches while the RainStormJob
     facade, count aggregation, and mixed-contract union stay identical.
-    Measured ~1.3× end-to-end at sf0.1 (150k rows — fixed job overhead
-    dominates there); the eliminated cost is the per-record Python loop,
-    which grows linearly with rows while the batch ops stay vectorized,
+    Measured ~1.2× end-to-end at sf0.1 (150k rows, 4-core box, median
+    of 5: 0.99 s vectorized vs 1.17 s plugin for App-2 — fixed job
+    overhead dominates there); the eliminated cost is the per-record
+    Python loop, which grows linearly with rows while the batch ops stay vectorized,
     so the gap widens with scale (bench pair: rainstorm_vectorized_app2
     vs rainstorm_plugin_app2)."""
 
@@ -274,12 +277,11 @@ class BatchPluginOp:
     contract: str = "mixed"  # same semantics as PluginOp.contract
 
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
-        from streamprocessing_spark.shipping import ensure_shippable
-
         ensure_shippable()
         fn = self.fn
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            guard_zip_caches()
             for pdf in batches:
                 out = fn(pdf, pattern)
                 yield out[["kind", "key", "value"]]
@@ -337,33 +339,10 @@ class ExecOp:
     contract: str = "mixed"
 
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
-        from streamprocessing_spark.shipping import ensure_shippable
-
-        ensure_shippable()
-        exe = self.exe
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                kinds: list[str] = []
-                keys: list[str] = []
-                vals: list[str] = []
-                for k, v in zip(pdf["key"].tolist(), pdf["value"].tolist()):
-                    r = exec_op_record(exe, k, v, pattern)
-                    if r is None:
-                        continue
-                    if isinstance(r, str):
-                        kinds.append("count")
-                        keys.append(r)
-                        vals.append("")
-                    else:
-                        for nk, nv in r:
-                            kinds.append("emit")
-                            keys.append(nk)
-                            vals.append(nv)
-                yield pd.DataFrame({"kind": kinds, "key": keys, "value": vals})
-
-        tagged = records.mapInPandas(kernel, _TAGGED_SCHEMA)
-        return _collapse_tagged(tagged, self.contract)
+        # the per-record contract lives in PluginOp's kernel alone
+        return PluginOp(functools.partial(exec_op_record, self.exe), self.contract).apply(
+            records, pattern
+        )
 
 
 Op = NativeOp | PluginOp | BatchPluginOp | ExecOp

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from streamprocessing_spark.shipping import ensure_shippable, guard_zip_caches
+
 # Canonical multimodal record: payload + metadata struct. Real pipelines
 # add modality-specific fields (duration_ms, sample_rate, codec, ...).
 MEDIA_SCHEMA = StructType(
@@ -259,11 +261,10 @@ def resize_thumbnails(media: DataFrame, target_w: int = 8, target_h: int = 8) ->
     dimensions + deterministic fingerprint (the dedup/verification key
     for derived assets). Zero shuffle — a pure per-row kernel at scan
     parallelism."""
-    from streamprocessing_spark.shipping import ensure_shippable
-
     ensure_shippable()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         for pdf in batches:
             # real bytes-in/bytes-out: the stub thumbnail bytes are
             # produced per payload (their size proves the byte path ran);
@@ -327,11 +328,10 @@ def extract_features(
     exercised on real pixels in tests/test_multimodal.py).
     """
 
-    from streamprocessing_spark.shipping import ensure_shippable
-
     ensure_shippable()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         for pdf in batches:
             payloads = pdf["payload"]
             dims = [decode(bytes(p)) for p in payloads]
@@ -438,6 +438,7 @@ def build_real_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     consumed executor-side; only ids and 8-byte hashes ever shuffle."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -467,6 +468,7 @@ def phash_df(media: DataFrame, hash_fn=None) -> DataFrame:
     hf = hash_fn or phash_stub
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -493,6 +495,7 @@ def phash_df_arrow(media: DataFrame) -> DataFrame:
     (audio_energy_frames). Bit-identical output to phash_df."""
 
     def kernel(batches):
+        guard_zip_caches()
         import pyarrow as pa
 
         for rb in batches:
@@ -580,6 +583,7 @@ def audio_energy_frames(media: DataFrame) -> DataFrame:
     can replay sample extraction with ascii(substr(...)))."""
 
     def _energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         import numpy as np
 
         for pdf in batches:
@@ -632,6 +636,7 @@ def resize_real_df(media: DataFrame, tw: int, th: int) -> DataFrame:
     in the executor; only ids and tw·th-value strings shuffle."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from streamprocessing_spark.partitioning import fan_out
+from streamprocessing_spark.shipping import guard_zip_caches
 
 
 def dot_double(a: Column, b: Column) -> Column:
@@ -79,6 +80,7 @@ def with_cosine_fast(
     keep_names = [f.name for f in keep]
 
     def kernel(batches):
+        guard_zip_caches()
         import numpy as np
         import pandas as pd
 
@@ -289,6 +291,7 @@ def srp_buckets_fast(
     assert nbits == rows_per_band * bands
 
     def kernel(batches):
+        guard_zip_caches()
         import numpy as np
         import pandas as pd
 
@@ -736,6 +739,7 @@ def cell_verify_kernel(threshold: float):
     thr = float(threshold)
 
     def cell_verify(pdf):
+        guard_zip_caches()
         import numpy as np
         import pandas as pd
 
@@ -863,6 +867,7 @@ def ivf_cell_cross_scores(
     )
 
     def cell_cross(pdf):
+        guard_zip_caches()
         import numpy as np
         import pandas as pd
 
@@ -1044,11 +1049,14 @@ def with_km_dist_fast(
     the Arrow batch replaces n·K interpreted lambda evaluations.
 
     Tradeoff, measured at sf0.1: for SHORT slices (PQ's 8-dim subspaces)
-    the fixed mapInPandas stage cost roughly cancels the fold win
-    (ann_pq_adc_topk 4.9→5.4 s) — kept anyway because the per-row fold
-    cost is what scales with n while the stage cost is constant: at
-    100 TB corpus sizes the kernel side wins outright, and one code
-    path keeps the bit-exactness argument in one place."""
+    the fixed mapInPandas stage cost outweighs the fold win:
+    ann_pq_adc_topk takes 3.7 s with this kernel against 2.7 s with the
+    interpreted fold (4-core box, median of 5, per-task zip re-read
+    already removed by shipping.guard_zip_caches). Kept anyway
+    because the per-row fold cost is what scales with n while the stage
+    cost is constant: at 100 TB corpus sizes the kernel side wins
+    outright, and one code path keeps the bit-exactness argument in one
+    place."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     keep = [f for f in df.schema.fields if f.name not in (xi_col, s_col)]
@@ -1056,6 +1064,7 @@ def with_km_dist_fast(
     keep_names = [f.name for f in keep]
 
     def kernel(batches):
+        guard_zip_caches()
         import numpy as np
         import pandas as pd
 
@@ -1252,6 +1261,7 @@ def srp_lsh_cosine_pairs_fast(
     joined = cand.join(va, "id_a").join(vb, "id_b")
 
     def _verify(batches):
+        guard_zip_caches()
         import numpy as np
 
         for pdf in batches:
@@ -1547,6 +1557,7 @@ def gram_matrix_upper(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "em
     sums, n) algebraically downstream."""
 
     def _partials(batches):
+        guard_zip_caches()
         import numpy as np
         import pandas as pd
 

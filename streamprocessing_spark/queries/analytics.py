@@ -26,6 +26,7 @@ from streamprocessing_spark.functions import money as M
 from streamprocessing_spark.functions import text as T
 from streamprocessing_spark.registry import register
 from streamprocessing_spark.sources.readers import load_table
+from streamprocessing_spark.shipping import ensure_shippable, guard_zip_caches
 
 
 @register(
@@ -1014,12 +1015,11 @@ def udaf_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form exp(avg(ln x))."""
     from pyspark.sql.functions import pandas_udf
 
-    from streamprocessing_spark.shipping import ensure_shippable
-
     ensure_shippable()
 
     @pandas_udf("double")
     def geo_mean(v: pd.Series) -> float:
+        guard_zip_caches()
         # skip NULLs like every SQL aggregate does (the oracle's
         # avg(ln(x)) never sees them); an all-NULL group yields NULL
         x = v.dropna().to_numpy()

@@ -157,12 +157,13 @@ def dedup_minhash_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Incremental-ingest interaction (dedup_incremental_batch probes a
     PERSISTED band table): count-scaled banding re-derives (r, b) only
     when ⌈log₂ n⌉ steps — once per corpus DOUBLING — so the policy at
-    scale is: probe the persisted table at its recorded (r, b) between
-    steps (signatures are prefix-truncatable, so a longer-r signature
-    probes a shorter-r table by truncation), and rebuild the band table
-    at each doubling — an amortized O(1) rebuilds per lifetime of any
-    given corpus size, the same cadence LSM trees pay for level
-    compaction.
+    scale is: between steps, signature new batches at the persisted
+    table's recorded (r, b) and probe it as is, and rebuild the band
+    table at each doubling — an amortized O(1) rebuilds per lifetime of
+    any given corpus size, the same cadence LSM trees pay for level
+    compaction. A band sig is one xxhash64 bigint over the band's r
+    minhashes, so it cannot be prefix-truncated: a table signatured at
+    one r is never probed with sigs hashed at another.
 
     Serves the shared cascade view (_pairs_view) since round 7 — first
     consumer in a session builds the scaled pipeline, the other six

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from streamprocessing_spark.functions import text as T
 from streamprocessing_spark.registry import register
 from streamprocessing_spark.sources.readers import load_table
+from streamprocessing_spark.shipping import ensure_shippable, guard_zip_caches
 
 _SQL_TOKENS = T.SQL_TOKENS
 
@@ -152,12 +153,13 @@ def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract.)"""
     from pyspark.sql.functions import lit, udtf
 
-    from streamprocessing_spark.shipping import ensure_shippable
-
     ensure_shippable()
 
     @udtf(returnType="bigram: string, pos: int")
     class Bigrams:
+        def __init__(self) -> None:
+            guard_zip_caches()
+
         def eval(self, doc_id: int, text: str):
             import re
 

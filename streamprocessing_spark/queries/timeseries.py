@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from streamprocessing_spark.registry import register
 from streamprocessing_spark.sources.readers import load_table
+from streamprocessing_spark.shipping import guard_zip_caches
 
 
 @register(
@@ -2033,6 +2034,7 @@ def _huber_bucket_kernel(pdf):
     float64 conversion and numpy's pairwise summation depend only on
     the values and their order, so every emitted float is bit-identical
     to the old path's."""
+    guard_zip_caches()
     import numpy as np
     import pandas as pd
 
@@ -2156,6 +2158,7 @@ def _asof_cogroup_kernel(evs, ords):
     happened to keep more partitions). 256 buckets → 256 kernel calls
     at any corpus size; merge_asof's ``by`` argument does the per-user
     as-of internally. Either side may be empty."""
+    guard_zip_caches()
     import pandas as pd
 
     if evs.empty:
@@ -2331,6 +2334,7 @@ def _pava_kernel(pdf):
     floored to micro units with Python's // — the same floor DuckDB's
     // applies in the minimax oracle, so floors commute with the
     min/max envelope and oracle equality is exact."""
+    guard_zip_caches()
     import pandas as pd
 
     pdf = pdf.sort_values("hour")
@@ -2428,6 +2432,7 @@ def _lis_arrow_kernel(table):
     sibling of multimodal_phash_arrow's mapInArrow). Strictly-increasing
     LIS via bisect on the tails array — O(n log n), the algorithm; the
     oracle proves the same number by max-plus path algebra instead."""
+    guard_zip_caches()
     import bisect
 
     import pyarrow as pa

@@ -44,6 +44,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from streamprocessing_spark.shipping import guard_zip_caches
+
 
 class _Committed(WriterCommitMessage):
     def __init__(self, tmp_name: str, n_rows: int) -> None:
@@ -62,6 +64,7 @@ class KeyedLinesWriter(DataSourceArrowWriter):
         self.job_token = uuid.uuid4().hex[:12]
 
     def write(self, iterator: Iterator) -> _Committed:
+        guard_zip_caches()
         from pyspark import TaskContext
 
         ctx = TaskContext.get()

@@ -43,6 +43,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from streamprocessing_spark.shipping import guard_zip_caches
+
 SCHEMA = "byte_offset bigint, line string"
 
 
@@ -89,6 +91,7 @@ class OffsetLinesReader(DataSourceReader):
         return [ByteRange(self.path, s, e) for s, e in plan_ranges(self.path, self.n)]
 
     def read(self, partition: ByteRange) -> Iterator[tuple[int, str]]:
+        guard_zip_caches()
         return read_lines_in_range(partition.path, partition.start, partition.end)
 
 
@@ -107,6 +110,7 @@ class OffsetLinesStreamReader(SimpleDataSourceStreamReader):
         return {"pos": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple[int, str]], dict]:
+        guard_zip_caches()
         size = os.path.getsize(self.path)
         rows: list[tuple[int, str]] = []
         pos = start["pos"]
@@ -118,6 +122,7 @@ class OffsetLinesStreamReader(SimpleDataSourceStreamReader):
         return iter(rows), {"pos": nxt}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple[int, str]]:
+        guard_zip_caches()
         return read_lines_in_range(self.path, start["pos"], end["pos"])
 
 

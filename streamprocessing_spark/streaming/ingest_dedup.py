@@ -174,6 +174,16 @@ class ParagraphIngestDedup(IngestDedup):
         )
 
         spark = batch.sparkSession
+        stored_buckets = self._read(spark, self.buckets_dir, before_batch=batch_id)
+        sig_type = None if stored_buckets is None else dict(stored_buckets.dtypes)["sig"]
+        if sig_type not in (None, "bigint"):
+            # a store written before round 11 holds '-'-joined string sigs;
+            # probing it with bigint sigs would cast them to NULL and
+            # silently match nothing
+            raise ValueError(
+                f"band store {self.buckets_dir} has {sig_type} sigs, this code "
+                "writes xxhash64 bigint sigs: rebuild the store from its docs"
+            )
         paras = (
             paragraph_df(
                 batch.select(self.id_col, self.text_col), self.id_col, self.text_col
@@ -199,7 +209,6 @@ class ParagraphIngestDedup(IngestDedup):
             )
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         )
-        stored_buckets = self._read(spark, self.buckets_dir, before_batch=batch_id)
         sh_all = sh_new
         if stored_buckets is not None:
             cross = (

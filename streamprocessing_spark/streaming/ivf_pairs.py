@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from streamprocessing_spark.shipping import guard_zip_caches
+
 IVF_STREAM_NASSIGN = 3
 
 
@@ -44,6 +46,7 @@ def _assign_kernel(cents: list[tuple[int, list[float]]], nassign: int):
     ``nassign`` cells emitted."""
 
     def fn(batches):
+        guard_zip_caches()
         import numpy as np
         import pandas as pd
 
@@ -111,6 +114,7 @@ def _cell_state_kernel(threshold: float):
     thr = float(threshold)
 
     def fn(key, pdfs, state):
+        guard_zip_caches()
         import numpy as np
         import pandas as pd
 

@@ -33,6 +33,8 @@ from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame
 
+from streamprocessing_spark.shipping import guard_zip_caches
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -50,6 +52,7 @@ def _crossings_kernel(key, pdf_iter: Iterator["pd.DataFrame"], state):
     State is a single int64 per user — at 100 TB that is one long per
     distinct key in the state store, the minimum any stateful op can
     hold. The per-group sort is local to one Arrow batch."""
+    guard_zip_caches()
     import numpy as np
     import pandas as pd
 
@@ -126,6 +129,7 @@ def _transitions_kernel(key, pdf_iter: Iterator["pd.DataFrame"], state):
     (ts, event_id) order within a batch, batches delivered in time
     order by the bounded replay (streaming/replay.py contract, shared
     with _crossings_kernel)."""
+    guard_zip_caches()
     import numpy as np
     import pandas as pd
 
@@ -211,6 +215,7 @@ def _session_timeout_kernel(key, pdf_iter: Iterator["pd.DataFrame"], state):
     Sessions still open when the stream ends never emit — exactly the
     deliverable-now contract streaming sinks live with, and exactly what
     the SQL oracle states (queries/streaming.py)."""
+    guard_zip_caches()
     import numpy as np
     import pandas as pd
 

@@ -11,6 +11,22 @@ from streamprocessing_spark.session import get_spark
 
 SMOKE_SF = "/root/testdata/sf0.001"
 
+_deselected_slow: list[str] = []
+
+
+def pytest_deselected(items):
+    _deselected_slow.extend(i.nodeid for i in items if i.get_closest_marker("slow"))
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    """Say what the default fast tier left out (pytest.ini: -m "not slow")."""
+    if _deselected_slow and config.getoption("markexpr"):
+        terminalreporter.write_line(
+            f"{len(_deselected_slow)} slow tests deselected by -m "
+            f"{config.getoption('markexpr')!r}; "
+            'run them with: python -m pytest tests/ -m "" -q'
+        )
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -1096,3 +1096,22 @@ def test_decontaminate_substring_laws(spark):
         if split(o) == "train" and split(i) != "train"
     }
     assert got == expected
+
+
+def test_paragraph_ingest_rejects_string_sig_band_store(spark, tmp_path):
+    """A band store written before sigs became xxhash64 bigints holds
+    '-'-joined string sigs. Probing it would cast them to NULL and match
+    nothing, so the next batch must fail before it writes anything."""
+    import os
+
+    from streamprocessing_spark.streaming.ingest_dedup import ParagraphIngestDedup
+
+    sink = ParagraphIngestDedup(base=str(tmp_path / "state"), threshold=0.8, n_total_units=100)
+    spark.createDataFrame(
+        [(1, 0, "11-22-33-44")], "id bigint, band int, sig string"
+    ).write.parquet(f"{sink.buckets_dir}/batch=0")
+    batch = spark.createDataFrame([(2, "a b c d e f g h")], "doc_id bigint, text string")
+    with pytest.raises(ValueError, match="string sigs"):
+        sink.foreach_batch(batch, 1)
+    assert sorted(os.listdir(sink.buckets_dir)) == ["batch=0"]
+    assert not os.path.exists(sink.docs_dir) and not os.path.exists(sink.dups_dir)
