@@ -31,7 +31,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2.
+
+    Order: the names in ``registry.GATE_FIRST`` (queries whose code
+    changed since their last driver row) first, then every other query
+    in registration order. The driver's oracle gate checks the first 50.
+    """
     return all_queries()
 
 

@@ -6,6 +6,12 @@ DataFrame`` plus, when SQL-expressible, an equivalent DuckDB oracle SQL
 string. The driver contract (__spark_entry__.py) exposes exactly this
 registry.
 
+Order: ``all_specs()`` (and so ``queries()``) yields the ``GATE_FIRST``
+names first, in tuple order, then every other query in registration
+order — ``_QUERY_MODULES`` order, then decorator order within a module.
+The driver's oracle gate checks the first 50 names, so ``GATE_FIRST``
+holds the queries whose code changed since their last driver row.
+
 Column-name discipline: the Spark DataFrame and the oracle SQL must produce
 identical column names (the driver sorts columns by name before hashing) —
 every computed column is aliased on both sides.
@@ -51,282 +57,30 @@ _QUERY_MODULES = (
     "streamprocessing_spark.queries.rainstorm",
 )
 
-# The driver's correctness gate walks queries() in dict order under a
-# wall-clock budget; rounds 1-3 each reached 50 names (CORRECTNESS_r01/
-# r02/r03.json — 140 distinct). Presentation order is therefore a
-# coverage decision. Round-4 policy (VERDICT r03 item #1): the three
-# families with ZERO or near-zero driver rows across all rounds come
-# first — all 12 TPC-H shapes, the 10 graph queries, the 14 unverified
-# streaming queries (measured module-amortized gate cost ~74 s, inside
-# one 50-name budget) — then every other driver-unverified query ordered
-# by measured sf0.01 gate cost ascending (tools/gate_costs.py), then the
-# verified core reference ops, then the verified remainder.
-_DRIVER_VERIFIED = frozenset(
-    {
-        # round 1 (CORRECTNESS_r01.json)
-        "source_scan", "filter_contains", "project_columns",
-        "filter_equality_project", "count_by_key", "flatmap_explode",
-        "repartition_by_key", "dedup_by_id", "app1_pipeline", "app2_pipeline",
-        "q1_pricing_summary", "join_broadcast_dim", "join_revenue_by_nation",
-        "join_shuffle_orders_lineitem", "top_orders_by_revenue",
-        "window_running_sum", "window_topn_per_group", "rollup_counts",
-        "distinct_users_per_type", "approx_distinct_users", "set_except_union",
-        "set_intersect_statuses", "event_time_tumbling_window",
-        "json_extract_props", "asof_join_latest_order",
-        "pivot_status_by_priority", "percentiles_by_segment",
-        "approx_percentiles_by_segment", "join_semi_open_orders",
-        "join_anti_no_finished_orders", "scalar_function_showcase",
-        "source_csv_roundtrip", "cube_counts", "array_agg_per_user",
-        "udaf_geometric_mean", "salted_count_by_user",
-        "salted_join_events_customer", "latest_event_per_user",
-        "q5_regional_volume", "q4_order_priority", "q6_forecast_revenue",
-        "q14_promo_revenue", "q19_disjunctive_predicates",
-        "q18_large_volume_customers", "scalar_subquery_max_order",
-        "q10_returned_item_customers", "q21_sole_blamed_supplier",
-        "inter_event_gap_stats", "array_function_showcase",
-        "grouping_sets_custom",
-        # round 2 (CORRECTNESS_r02.json, minus r01 repeats)
-        "ann_ivf_kmeans_topk", "ann_ivfpq_topk", "ann_pq_adc_topk",
-        "bm25_rank_docs", "bpe_merge_pair_counts", "bpe_train_segmentation",
-        "chisq_independence_source_lang", "chunk_documents_windows",
-        "corpus_composition_card", "countmin_heavy_hitters",
-        "decontaminate_hashed", "dedup_incremental_batch",
-        "dedup_jaccard_prefix_filter", "dedup_tier_agreement",
-        "duplicate_span_coverage", "embedding_gram_matrix",
-        "embedding_pca_project", "explode_outer_long_tokens",
-        "inverted_index_postings", "ivf_cosine_pairs", "kmeans_embeddings",
-        "label_centroid_distance_matrix", "lang_id_confusion",
-        "minhash_jaccard_estimate_audit", "mmr_diverse_select",
-        "multimodal_audio_energy", "multimodal_phash_neardup",
-        "prototypicality_prune", "quantile_normalize_embeddings",
-        "semantic_dedup_keep", "semantic_dedup_keep_ivf",
-        "source_binaryfile_ingest", "source_vocab_overlap",
-        "split_leakage_audit", "srp_lsh_cosine_pairs_fast",
-        "streaming_stateful_alerts", "streaming_transition_pairs",
-        "token_cooccurrence_lift", "tokenizer_fertility_by_source",
-        "winsorize_values_by_type",
-        # round 3 (CORRECTNESS_r03.json — 50 fresh names, 49 full + 1 rows-only)
-        "calendar_hierarchy_rollup", "cep_click_error_no_purchase", "clamped_running_balance",
-        "collation_case_insensitive_stats", "compaction_plan_binpack", "daily_active_user_bitmap",
-        "daily_revenue_max_drawdown", "data_quality_audit", "doc_length_histogram",
-        "doc_type_token_ratio", "embedding_centroid_per_label", "event_path_trigrams",
-        "exact_median_two_scan", "group_by_all_showcase", "hll_sketch_rollup_users",
-        "hysteresis_alert_state", "identifier_clause_showcase", "listagg_priorities_by_status",
-        "map_hof_user_profile", "map_lookup_enrich", "mode_event_type_per_user",
-        "multimodal_features", "multimodal_frame_sample", "multimodal_metadata",
-        "nulls_ordering_topk", "pack_documents_greedy", "partition_key_advisor",
-        "pii_redact_docs", "pit_join_profile_history", "price_volume_mix_decomposition",
-        "repetition_dup_trigram_fraction", "rolling_user_activity_1h", "rollup_grouping_id_disambiguation",
-        "scd2_user_type_history", "script_transform_filter", "set_except_all_multiset",
-        "source_schema_evolution", "sql_udf_pricing", "stratified_sample_per_label",
-        "table_content_fingerprint", "temporal_split_user_overlap", "text_fingerprint",
-        "text_quality_score", "text_token_count", "theil_sen_user_slopes",
-        "time_weighted_avg_value", "train_test_split", "user_value_trend_slopes",
-        "vocabulary_topk", "weighted_reservoir_sample",
-        # round 4 (CORRECTNESS_r04.json — 50 fresh names, all full-oracle)
-        "q2_min_cost_supplier", "q7_volume_shipping", "q8_market_share",
-        "q9_product_profit", "q11_important_part_value", "q12_priority_shipping_class",
-        "q13_customer_order_distribution", "q15_top_supplier", "q16_part_supplier_variety",
-        "q17_small_quantity_revenue", "q20_heavy_part_suppliers", "q22_dormant_high_balance",
-        "copurchase_lift", "basket_bfs_part_hops", "pagerank_copurchase",
-        "triangle_count_copurchase", "clustering_coefficient_parts", "kcore_parts",
-        "label_prop_communities", "sssp_weighted_parts", "link_prediction_jaccard",
-        "degree_assortativity_parts",
-        "streaming_count_update", "streaming_append_sink", "streaming_dedup_by_id",
-        "streaming_dedup_watermarked", "streaming_windowed_count", "streaming_session_window",
-        "streaming_session_timeout", "streaming_dedup_then_window", "streaming_complete_topk",
-        "streaming_left_outer_join", "streaming_hourly_daily_rollup", "streaming_sliding_window",
-        "streaming_static_join", "streaming_interval_join",
-        "longest_duplicated_span", "dedup_minhash_recall_curve", "ann_shard_plan",
-        "multimodal_dedup_manifest", "er_match_transitivity_audit", "funnel_steps_dropoff",
-        "pipe_syntax_showcase", "fuzzy_name_pairs", "late_arrival_audit",
-        "anova_f_value_by_type", "daily_revenue_wow_change", "join_full_outer_daily_activity",
-        "null_safe_bucket_join", "regression_two_factor_cramer",
-        # round 5 (CORRECTNESS_r05.json — 50 rows, all full-oracle: the 7
-        # rainstorm contract queries, 7 re-oracled sketch promotions, 36
-        # fresh gate-cost-ordered names)
-        "ab_assignment_srm_check", "ann_cosine_topk",
-        "cdc_apply_changes", "cohort_retention", "domain_quota_sample",
-        "dp_randomized_response_counts", "duplicate_charge_candidates",
-        "emd_value_distributions", "event_transition_matrix",
-        "fano_burstiness_by_type", "feature_hash_buckets",
-        "forward_fill_last_value", "funnel_click_to_purchase",
-        "hill_tail_index_value", "isotonic_hourly_value",
-        "kmv_distinct_sample", "lateral_top2_customers_per_nation",
-        "multimodal_resize", "packing_efficiency_audit",
-        "partition_divergence_proof", "rainstorm_exec_app2",
-        "rainstorm_plugin_app1", "rainstorm_plugin_app2",
-        "rainstorm_streaming_app1", "rainstorm_streaming_app2",
-        "rainstorm_vectorized_app1", "rainstorm_vectorized_app2",
-        "sessionization_gap_sensitivity", "sessionize_events",
-        "shard_balance_audit", "snapshot_diff_changelog",
-        "sorted_neighborhood_pairs", "temperature_sample_by_source",
-        "text_lang_id", "time_bucket_gapfill", "token_rarity_score",
-        "try_arith_safety_showcase", "url_canonical_dedup",
-        "welch_t2_by_event_type", "window_moving_spend_30d",
-        "zipf_law_audit", "zorder_key_orders", "zscore_outlier_events",
-        # round 6 (CORRECTNESS_r06.json — 36 fresh + 14 mandated repeats,
-        # 50/50 green; repeats already listed above)
-        "attribution_linear_multi_touch", "attribution_position_based",
-        "benford_first_digit_audit", "cohort_ltv_curve",
-        "cusum_changepoint_daily", "daily_value_autocorrelation",
-        "decontaminate_benchmark_overlap", "dsir_importance_weights",
-        "ewma_truncated_user_value", "gopher_quality_flags",
-        "hard_negative_mining", "incremental_agg_merge",
-        "join_fanout_audit", "kneser_ney_bigram_lm",
-        "ks_two_sample_value", "merge_overlapping_intervals",
-        "multimodal_resize_real", "multimodal_silence_ratio",
-        "ngram_novelty_score", "preference_pair_assembly",
-        "quantize_embeddings_int8", "regression_value_by_hour",
-        "rle_event_runs", "schema_evolution_union",
-        "seasonal_hour_baseline_anomaly", "session_window_batch_agg",
-        "shuffle_skew_audit", "source_malformed_csv_permissive",
-        "source_partitioned_file_lineage", "source_xml_roundtrip",
-        "tfidf_top_terms", "udtf_bigrams",
-        "variance_optimal_allocation_sample", "variant_props_rollup",
-        "vocab_growth_by_batch", "window_rank_functions",
-        # round 7 (CORRECTNESS_r07.json — 49 fresh full-oracle greens plus
-        # the embedding_pca_project rows-only row, already listed above)
-        "ann_hubness_audit", "ann_ivf_persisted_topk", "ann_ivf_topk",
-        "bitext_mine_margin", "bitext_mine_margin_ivf", "bot_rate_flags",
-        "calibration_ece_audit", "category_share_shift", "decontaminate_semantic",
-        "dedup_aware_split", "dedup_char_ngram_jaccard", "dedup_cluster_components",
-        "dedup_cluster_size_histogram", "dedup_containment_join", "dedup_exact",
-        "dedup_keep_canonical", "dedup_minhash_lsh", "dedup_minhash_lsh_scaled",
-        "dedup_ngram_jaccard", "dedup_signal_auc", "dedup_simhash",
-        "domain_blocklist_filter", "embedding_anisotropy_audit", "embedding_cosine_pairs",
-        "embedding_drift_chi2_by_dim", "gini_value_inequality", "int8_quantization_recall_audit",
-        "kaplan_meier_activity", "knn_label_audit", "markov_entropy_rate",
-        "matryoshka_truncation_audit", "mutual_information_source_lang", "nest_order_lineitems",
-        "q3_shipping_priority", "referential_integrity_audit", "repetition_top_bigram_fraction",
-        "right_to_erasure_cascade", "semantic_dedup_keep_srp_baseline", "sequence_gap_audit",
-        "source_ablation_impact", "source_jsonl_roundtrip", "source_malformed_jsonl_permissive",
-        "source_orc_roundtrip", "srp_lsh_cosine_pairs", "srp_lsh_cosine_pairs_recall_held",
-        "srp_lsh_cosine_pairs_scaled", "target_encoding_loo", "unimax_budget_allocation",
-        "url_domain_stats",
-        # round 8 (CORRECTNESS_r08.json — the final 50 never-gated names:
-        # 49 full-oracle greens plus huber_trend_slopes_grouped rows-only)
-        "annotator_agreement_kappa", "asof_join_next_order_7d",
-        "blocking_strategy_audit", "bloom_prefilter_join",
-        "bootstrap_ci_value_by_type", "bucketed_join_revenue",
-        "ccnet_perplexity_buckets", "char_entropy_filter",
-        "clustering_skipping_compare", "cogroup_asof_enrich",
-        "conformal_quality_threshold", "curation_manifest_end2end",
-        "dsir_importance_resample", "fellegi_sunter_scores", "fifo_match_returns",
-        "frequent_triples_apriori", "golden_record_parts", "hilbert_key_orders",
-        "hits_part_authorities", "huber_trend_slopes_grouped",
-        "hybrid_rrf_retrieval", "interpolate_hourly_linear",
-        "interval_overlap_peak_sessions", "join_size_sketch_estimate",
-        "k_anonymity_generalize", "kendall_tau_revenue_volume", "l_diversity_audit",
-        "lang_id_macro_f1", "mad_outlier_events", "max_concurrent_sessions_daily",
-        "modularity_communities", "multimodal_phash_arrow",
-        "multimodal_phash_neardup_real", "psi_value_drift",
-        "range_partition_boundaries", "rbo_lexical_semantic",
-        "recursive_cte_amortization", "rfm_customer_segments",
-        "sink_python_datasource_roundtrip", "skyline_orders",
-        "sliding_distinct_users_7d", "source_python_datasource",
-        "streaming_malformed_json_quarantine", "streaming_windowed_distinct_users",
-        "t_closeness_audit", "table_profile_orders", "unpivot_lineitem_metrics",
-        "user_lis_engagement", "vwap_part_monthly", "weighted_median_price_by_flag",
-        # round 9 (CORRECTNESS_r09.json — 7 fresh names: the 4 _REVERIFY
-        # re-dates plus 39 dedup/similarity re-confirmations are repeats;
-        # these are the round-9 new registrations, all full-oracle green)
-        "contamination_matrix", "dedup_paragraph_keep",
-        "dedup_paragraph_minhash", "dedup_substring_containment",
-        "ivf_cosine_pairs_persisted", "quantization_recall_sweep",
-        "streaming_ivf_pairs_ingest",
-    }
+# Queries whose code changed after their last driver oracle row: the
+# loop and shared-view rewrites of OPTIMIZATION_r11.md plus the kernel
+# changes noted below. Keep each family contiguous so its shared views
+# are built once, builder ahead of consumers, and reset the tuple to the
+# queries a change touches.
+GATE_FIRST = (
+    # similarity: srp_lsh_cosine_pairs_scaled builds the srppairs view
+    # that decontaminate_semantic reads
+    "srp_lsh_cosine_pairs_scaled",
+    "decontaminate_semantic",
+    "ann_pq_adc_topk",
+    # graph loops over the shared graphop/copairs views
+    "basket_bfs_part_hops",
+    "pagerank_copurchase",
+    "label_prop_communities",
+    "sssp_weighted_parts",
+    "link_prediction_jaccard",
+    "modularity_communities",
+    "hits_part_authorities",
+    # ExecOp now runs through PluginOp's kernel
+    "rainstorm_exec_app2",
+    # ParagraphIngestDedup now checks the band store's sig type
+    "streaming_paragraph_dedup_ingest",
 )
-
-# Round-10 re-presentation set (VERDICT r09 item #8): the registry is
-# fully driver-proven (375/375 across r01-r09, zero mismatches ever), so
-# the round-8 rework re-dates are done and _REVERIFY shrinks to the two
-# round-9 names with the most machinery between them and their oracle —
-# streaming_ivf_pairs_ingest (applyInPandasWithState + end-of-stream
-# batch parity) and ivf_cosine_pairs_persisted (persisted index
-# publish/GC + FlatMapGroupsInPandas scan). Each has exactly one driver
-# row; a second confirmation is cheap insurance, ahead of the round-10
-# new registrations.
-_REVERIFY = frozenset(
-    {
-        "streaming_ivf_pairs_ingest",
-        "ivf_cosine_pairs_persisted",
-    }
-)
-
-# Round-10 family front-load: after the 2 _REVERIFY rows, the backlog is
-# the round's new registrations (dedup span-removal emit, IVF index
-# compaction, streaming paragraph twin, cross-lingual contamination).
-# Families stay contiguous so shared session state (the mhpairs cascade
-# view, the streaming single-drain) amortizes across consecutive rows.
-_FRONTLOAD_MODULES = (
-    "streamprocessing_spark.queries.dedup",
-    "streamprocessing_spark.queries.similarity",
-    "streamprocessing_spark.queries.streaming",
-)
-
-_FAMILY_PRIORITY = (
-    "core",
-    "dedup",
-    "similarity",
-    "text",
-    "quality",
-    "streaming",
-    "tpch_extra",
-    "multimodal",
-    "curation",
-    "timeseries",
-    "layout",
-    "graph",
-    "rainstorm",
-    "analytics",
-)
-
-
-def _presentation_order(registry: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Stable re-ordering of the registry for the driver.
-
-    Round-9 layout (VERDICT r08 items #1/#3-#8): (0) the _REVERIFY set —
-    the four names whose kernels/layout were rewritten in round 8 after
-    their driver rows landed — leads so the ledger describes shipped
-    code again; (1) the round's new registrations, family-contiguous
-    (shared session views amortize: the mhpairs cascade, the streaming
-    single-drain) with gate-cost ascending within each family
-    (tools/gate_costs.py → gate_order.py); (2) any unverified
-    stragglers by cost; (3) the verified core reference ops (the parity
-    signal, re-checked as soon as fresh names are exhausted); (4) the
-    verified remainder. Queries with no measured cost yet sort at cost
-    0 within their group — new operators need their first driver row
-    most."""
-    fam_rank = {
-        f"streamprocessing_spark.queries.{m}": i for i, m in enumerate(_FAMILY_PRIORITY)
-    }
-    reg_index = {name: i for i, name in enumerate(registry)}
-    try:
-        from streamprocessing_spark.gate_order import GATE_COST
-    except ImportError:  # pre-measurement bootstrap
-        GATE_COST = {}
-
-    frontload_rank = {m: i for i, m in enumerate(_FRONTLOAD_MODULES)}
-
-    def key(name: str) -> tuple[int, int, float, int, int]:
-        spec = registry[name]
-        mod = spec.fn.__module__
-        if name in _REVERIFY:
-            group, fam_boost = 0, 0
-        elif name not in _DRIVER_VERIFIED:
-            if mod in frontload_rank:
-                group, fam_boost = 1, frontload_rank[mod]
-            else:
-                group, fam_boost = 2, 0
-        elif mod == "streamprocessing_spark.queries.core":
-            group, fam_boost = 3, 0
-        else:
-            group, fam_boost = 4, 0
-        cost = GATE_COST.get(name, 0.0) if group <= 2 else 0.0
-        return (group, fam_boost, cost, fam_rank.get(mod, len(_FAMILY_PRIORITY)), reg_index[name])
-
-    return {name: registry[name] for name in sorted(registry, key=key)}
 
 
 def register(
@@ -356,8 +110,12 @@ def _load() -> None:
 
 
 def all_specs() -> dict[str, QuerySpec]:
+    """Every query in presentation order (see the module docstring)."""
     _load()
-    return _presentation_order(_REGISTRY)
+    # sort rather than trust insertion order: a query module imported
+    # early (curation imports dedup mid-file) interleaves its names
+    rest = sorted(_REGISTRY.values(), key=lambda s: _QUERY_MODULES.index(s.fn.__module__))
+    return {name: _REGISTRY[name] for name in GATE_FIRST} | {s.name: s for s in rest}
 
 
 def all_queries() -> dict[str, QueryFn]:

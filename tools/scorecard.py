@@ -18,7 +18,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from streamprocessing_spark.registry import all_specs  # noqa: E402
+from streamprocessing_spark.registry import GATE_FIRST, all_specs  # noqa: E402
 
 # Scale-row labels the prose in SCALE.md establishes; keyed by
 # SCALEBENCH100 row name. Everything unlabeled is a production claim.
@@ -76,9 +76,10 @@ def main() -> int:
         f"- **{len(gated)}/{len(specs)} driver-gated green** across"
         f" {len(list(ROOT.glob('CORRECTNESS_r*.json')))} rounds"
         " (zero oracle mismatches ever recorded).",
-        f"- Remaining {len(specs) - len(gated)} names: locally rehearsed"
-        " green in exact presentation order (one shared session) and"
-        " front-loaded for the next driver gate.",
+        f"- `queries()` leads with the {len(GATE_FIRST)} `GATE_FIRST` names"
+        " (code changed since their last driver row), so the driver's"
+        " 50-name oracle gate checks them; the rest follow in registration"
+        " order.",
         "",
         "| family | registered | driver-gated |",
         "|---|---|---|",
