@@ -22,53 +22,11 @@ from streamprocessing_spark.registry import all_specs
 from streamprocessing_spark.session import get_spark
 from streamprocessing_spark.shared_views import release_shared_views
 
-# Queries that BUILD a session-shared view: released before each timed
-# rep so their row prices the build, while consumer rows stay marginal
-# (dedup_minhash_lsh_scaled builds mhpairs; mhcomp derives from it, so
-# both are released together to keep the cascade consistent).
-VIEW_BUILDER_KINDS = {
-    "dedup_minhash_lsh_scaled": ("mhcomp", "mhpairs"),
-    # round 9: the paragraph-pair view builder — its row prices the
-    # build; dedup_paragraph_keep stays the marginal consumer
-    "dedup_paragraph_minhash": ("parapairs",),
-    # the scaled builder drops mhcomp but its fn never rebuilds it, so
-    # the star-contraction components build must be priced to the FIRST
-    # components consumer in HEADLINE order (keep_canonical): it
-    # re-derives components from the cached pair view every rep, while
-    # later comp consumers (histogram, aware_split, manifest) stay
-    # marginal over the built components
-    "dedup_keep_canonical": ("mhcomp",),
-    "dedup_simhash": ("shpairs",),
-    # round-10 optimization: the basket pair-support relation became the
-    # second tier of the shared graph cascade (ten consumers) — the lift
-    # query prices BOTH builds every rep, consumers stay marginal
-    "copurchase_lift": ("copairs", "graphop"),
-    "minhash_jaccard_estimate_audit": ("mhaudit",),
-    # round-10 optimization: the bitext mining cascade and the IVF pair
-    # set became session-shared views (4 + 2 headline consumers). The
-    # producing query prices the full build every rep; the first keep
-    # consumer prices the components build over the built pair view.
-    "bitext_mine_margin_ivf": ("bitextcomp", "bitext"),
-    "dedup_crosslingual_keep": ("bitextcomp",),
-    "ivf_cosine_pairs": ("ivfcomp", "ivfpairs"),
-    "semantic_dedup_keep_ivf": ("ivfcomp",),
-    # measurement-honesty fix (round 10): the mid-build session made the
-    # containment pair set a shared view but never priced its build to a
-    # bench row — the median-of-3 hid the build in rep 1 and
-    # dedup_substring_containment read as 0.04 s. Restore the round-9
-    # semantics: the profile query prices the containment build.
-    "dedup_substring_containment": ("contain",),
-    # round-11 optimization: the count-scaled SRP pair set became a
-    # session-shared view (decontaminate_semantic composes the exact
-    # relation the scaled tier emits — same banding, same 0.45 bar).
-    # The scaled tier's row prices the full cascade build every rep;
-    # the decon row measures its marginal split-orientation join.
-    "srp_lsh_cosine_pairs_scaled": ("srppairs",),
-}
-
 # Headline set: the reference-derived pipelines + the heavier analytics /
 # LLM-pipeline operators. Kept explicit so bench timings stay comparable
-# across rounds even as the registry grows.
+# across rounds even as the registry grows. Order matters: each rep pass
+# starts with no shared views (timed_passes), so the first query here
+# that reads a view prices its build and later readers stay marginal.
 HEADLINE = [
     # reference-derived pipelines
     "source_scan",
@@ -318,6 +276,33 @@ def _reclaim_dead_blocks(spark) -> None:
             return
 
 
+def timed_passes(spark, specs, names, sf_dir, reps: int) -> dict[str, list[float]]:
+    """Time every query in ``names`` once per pass, ``reps`` passes, and
+    return each name's wall times in pass order.
+
+    Rep-major (round 11, VERDICT r10 item #2): the box runs in hour-scale
+    performance regimes that moved untouched queries ±30-45% between
+    runs, so each query's reps are spread over the whole run instead of
+    sampled back to back.
+
+    Each pass starts with no shared views, so the first query in
+    ``names`` that reads a view prices its build and later readers price
+    only their marginal work over the built view — the amortization the
+    driver's one-session gate sees. Each cell runs the janitor, releases
+    the plugin caches (NOT a global clearCache, which would evict the
+    shared views mid-pass), then times a noop write."""
+    raw: dict[str, list[float]] = {name: [] for name in names}
+    for _ in range(reps):
+        release_shared_views(spark)
+        for name in names:
+            _reclaim_dead_blocks(spark)
+            release_plugin_caches()
+            t0 = time.time()
+            specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            raw[name].append(time.time() - t0)
+    return raw
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -336,63 +321,7 @@ def main() -> None:
     # [min, max] spread rides along so any round-over-round delta can be
     # checked against the same-run dispersion before blaming code.
     reps_n = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    # REP-MAJOR interleave (round 11, VERDICT r10 item #2): the box runs
-    # in hour-scale "performance regimes" that moved untouched queries
-    # ±30-45% between runs (rel_spread_median 0.35 in r10). Query-major
-    # rep loops sample each query's 3 reps within one ~100 ms window, so
-    # a regime shift lands WHOLLY on some queries and not others. Running
-    # the whole suite once per rep pass instead spreads every query's
-    # samples across the full run, so the per-query median sees every
-    # regime the run saw. Median-of-3 semantics, the noop sink, and the
-    # builder/consumer release discipline are unchanged — each (query,
-    # rep) cell measures exactly what it did before, only the execution
-    # ORDER changed.
-    # SPARK_GRAFT_BENCH_REP_ORDER=query restores the pre-round-11
-    # query-major ordering (3 reps back-to-back per query) for
-    # like-for-like comparison against older rounds' records: rep-major
-    # cells are systematically COLDER (each rep re-enters the query
-    # after the whole suite cycled the JVM/page caches, where
-    # query-major's reps 2-3 re-ran a just-warmed query), which is the
-    # point — the median now prices real cold costs and samples every
-    # host regime — but it breaks naive total-vs-total comparison with
-    # query-major-era numbers. Default stays rep-major.
-    rep_major = os.environ.get("SPARK_GRAFT_BENCH_REP_ORDER", "rep") != "query"
-    raw: dict[str, list[float]] = {name: [] for name in names}
-
-    def _cell(name: str) -> None:
-        _reclaim_dead_blocks(spark)
-        # each rep must measure computation, not a cache read:
-        # release the per-run plugin intermediate caches (the one
-        # persist() query code creates). NOT a global clearCache —
-        # that evicted the session-shared views too, charging a full
-        # cascade rebuild to every rep of whichever queries compose
-        # the RAW pair view (measured round 7: signal_auc/
-        # leakage_audit 2.2× after the scaled-stage re-base) while
-        # components consumers dodged it via star contraction's
-        # localCheckpoint — neither marginal nor full-cascade, just
-        # inconsistent.
-        release_plugin_caches()
-        # Build-vs-marginal split, same discipline as scale_bench's
-        # COLD_VIEW_BUILD: the view BUILDER row measures the full
-        # build every rep (views released first), every consumer row
-        # measures its marginal op over the built view — exactly the
-        # amortization the driver's one-session gate sees. (Headline
-        # order puts every builder before its consumers, so each
-        # rep pass prices builds/marginals exactly as before.)
-        for kind in VIEW_BUILDER_KINDS.get(name, ()):
-            release_shared_views(spark, kind)
-        t0 = time.time()
-        specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        raw[name].append(time.time() - t0)
-
-    if rep_major:
-        for _ in range(reps_n):
-            for name in names:
-                _cell(name)
-    else:
-        for name in names:
-            for _ in range(reps_n):
-                _cell(name)
+    raw = timed_passes(spark, specs, names, sf_dir, reps_n)
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     for name in names:

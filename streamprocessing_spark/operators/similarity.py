@@ -1152,9 +1152,10 @@ def _kmeans_loop(
     bit-identical to an uninterrupted run — the checkpoint/restart
     property iterative float pipelines can't have (asserted in
     tests/test_round3_ops.py)."""
-    # fan_out BEFORE the checkpoint (round 10): the checkpoint freezes
-    # the partitioning, so a single-split scan otherwise pins every
-    # iteration's n·k distance folds to one core
+    # no fan_out here, unlike the PQ/IVF heads: round 10 measured it
+    # slower for this loop (kmeans_embeddings 3.13 → 3.53 s at sf0.1) —
+    # the integer-state distance folds are too cheap to amortize the
+    # extra exchange
     q = (
         emb.select(
             F.col(id_col).alias("id"),

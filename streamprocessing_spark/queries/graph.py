@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from streamprocessing_spark.partitioning import fan_out
 from streamprocessing_spark.registry import register
-from streamprocessing_spark.shared_views import release_shared_views, shared_view
+from streamprocessing_spark.shared_views import shared_view
 from streamprocessing_spark.sources.readers import load_table
 
 MIN_SUPPORT = 2  # co-occurrence count threshold (both SF scales non-empty)
@@ -84,17 +84,6 @@ def _pair_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return shared_view(spark, "copairs", sf_dir, build)
-
-
-def release_op_views(spark: SparkSession) -> int:
-    """Drop the graph views and unpersist their caches — kept as the
-    graph-family alias of shared_views.release_shared_views. Releases
-    the derived pair-support tier FIRST so a staleness refresh can never
-    leave copairs serving data from a released graphop snapshot."""
-    return release_shared_views(spark, "copairs") + release_shared_views(
-        spark, "graphop"
-    )
-
 
 
 @register(

@@ -64,16 +64,12 @@ def shared_view(
     return spark.table(name)
 
 
-def release_shared_views(spark: SparkSession, kind: str | None = None) -> int:
-    """Drop shared temp views and unpersist their caches — the eviction
-    hook mirroring engine.release_plugin_caches. ``kind`` limits the
-    release to one relation family (None releases everything). Returns
-    the number of views released; safe on a session that built none."""
+def release_shared_views(spark: SparkSession) -> int:
+    """Drop every shared temp view and unpersist its cache — the eviction
+    hook mirroring engine.release_plugin_caches. Returns the number of
+    views released; safe on a session that built none."""
     released = 0
-    prefix = f"graft_sv_{kind}_" if kind is not None else "graft_sv_"
     for name, df in list(_VIEWS.items()):
-        if not name.startswith(prefix):
-            continue
         try:
             spark.catalog.dropTempView(name)
         except Exception:  # noqa: BLE001 — view may belong to a dead session

@@ -6,15 +6,15 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_release_op_views_unpins_graph_cache(spark, sf_dir):
-    """The shared graph view is an eagerly-built cache; release_op_views
+def test_release_shared_views_unpins_graph_cache(spark, sf_dir):
+    """The shared graph view is an eagerly-built cache; release_shared_views
     must drop the temp view AND leave no pinned RDD behind (a session
     touching many sf_dirs must not accumulate blocks — the round-1
     plugin-cache lesson applied to graph state)."""
     from streamprocessing_spark import shared_views as SV
     from streamprocessing_spark.queries import graph as G
 
-    G.release_op_views(spark)  # clean slate (other tests may have built it)
+    SV.release_shared_views(spark)  # clean slate (other tests may have built views)
     baseline = len(spark.sparkContext._jsc.getPersistentRDDs())
     n_graph = lambda: sum(1 for k in SV._VIEWS if k.startswith("graft_sv_graphop_"))  # noqa: E731
     df = G._op_view(spark, sf_dir)
@@ -22,12 +22,12 @@ def test_release_op_views_unpins_graph_cache(spark, sf_dir):
     assert n_graph() == 1
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) > baseline
 
-    released = G.release_op_views(spark)
+    released = SV.release_shared_views(spark)
     assert released == 1
     assert n_graph() == 0
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) <= baseline
     # idempotent, and the view is really gone from the catalog
-    assert G.release_op_views(spark) == 0
+    assert SV.release_shared_views(spark) == 0
     import hashlib
 
     name = "graft_sv_graphop_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
@@ -35,13 +35,13 @@ def test_release_op_views_unpins_graph_cache(spark, sf_dir):
     # a fresh call transparently rebuilds (staleness contract: snapshot
     # until release, fresh data after)
     assert G._op_view(spark, sf_dir).count() == df.count()
-    G.release_op_views(spark)
+    SV.release_shared_views(spark)
 
 
 @pytest.mark.slow
-def test_dedup_shared_views_release_and_kind_scoping(spark, sf_dir):
+def test_dedup_shared_views_release_all_families(spark, sf_dir):
     """The dedup cascade shares pair/component views through the same
-    machinery; releasing one kind must not evict another family's view."""
+    machinery as the graph view; one release drops every family."""
     from streamprocessing_spark import shared_views as SV
     from streamprocessing_spark.queries import dedup as DQ
     from streamprocessing_spark.queries import graph as G
@@ -51,10 +51,8 @@ def test_dedup_shared_views_release_and_kind_scoping(spark, sf_dir):
     comp = DQ._components_view(spark, sf_dir)
     assert comp.count() >= pairs.count() > 0
     G._op_view(spark, sf_dir)
-    # kind-scoped release: dedup views stay when only graphop is released
-    assert SV.release_shared_views(spark, "graphop") == 1
     assert sum(1 for k in SV._VIEWS if k.startswith("graft_sv_mh")) == 2
-    assert SV.release_shared_views(spark) == 2
+    assert SV.release_shared_views(spark) == 3
     assert len(SV._VIEWS) == 0
 
 
@@ -64,9 +62,9 @@ def test_bench_rep_hygiene_prices_build_to_builder(spark, sf_dir):
     clearCache(), which evicted the session-shared views and charged a
     full cascade rebuild to every rep of the raw-pair-view consumers
     (measured round 7: signal_auc/leakage_audit 2.2×) — and (b) release
-    a builder's own view kinds before its reps so the builder row prices
-    the build while consumers stay marginal. This pins the contract:
-    after a builder-style release, the next call REBUILDS (fresh cache
+    the shared views at the start of each rep pass so the first reader
+    prices the build while later readers stay marginal. This pins the
+    contract: after a release, the next call REBUILDS (fresh cache
     entry); without a release, a repeat call serves the same cached
     relation (no rebuild)."""
     from streamprocessing_spark import shared_views as SV
@@ -80,8 +78,8 @@ def test_bench_rep_hygiene_prices_build_to_builder(spark, sf_dir):
         # consumer path: repeat call serves the SAME cached view
         assert DQ._pairs_view(spark, sf_dir) is not None
         assert spark.catalog.isCached(name)
-        # builder path: release → next call rebuilds a fresh cached view
-        assert SV.release_shared_views(spark, "mhpairs") == 1
+        # pass start: release → next call rebuilds a fresh cached view
+        assert SV.release_shared_views(spark) == 1
         assert not spark.catalog.tableExists(name)
         DQ._pairs_view(spark, sf_dir).count()
         assert spark.catalog.isCached(name)

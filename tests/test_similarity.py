@@ -114,6 +114,32 @@ def test_srp_fast_path_matches_fold_tier(spark, sf_dir):
     assert fold == fast
 
 
+def test_km_dist_kernel_matches_interpreted_fold(spark):
+    """with_km_dist_fast must return the exact doubles of _km_dist_expr's
+    zip_with/aggregate fold: equal-length rows of several lengths in one
+    batch, both-empty (0.0), mismatched lengths and NULL elements (NULL)."""
+    rows = [
+        (1, [3, -7, 11], [10, 20, 30], 3),
+        (2, [123456789, -987654321, 5, 0], [1, 2, 3, 4], 7),
+        (3, [2**53 + 1, 1], [-(2**53) - 1, 9], 11),
+        (4, [1] * 8, list(range(8)), 1),
+        (5, [], [], 5),
+        (6, [1, 2], [1, 2, 3], 2),
+        (7, [1, None, 3], [4, 5, 6], 2),
+        (8, [1, 2, 3], [4, None, 6], 3),
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, xi array<bigint>, s array<bigint>, cnt long"
+    ).coalesce(1)
+    fold = df.select("id", F.expr(S._km_dist_expr("xi", "s", "cnt")).alias("dist"))
+    fast = S.with_km_dist_fast(df, "xi", "s", "cnt", "dist").select("id", "dist")
+    as_bits = lambda d: {r.id: None if r.dist is None else r.dist.hex() for r in d.collect()}  # noqa: E731
+    got = as_bits(fast)
+    assert got == as_bits(fold)
+    assert got[5] == (0.0).hex()
+    assert got[6] is got[7] is got[8] is None
+
+
 @pytest.mark.slow
 def test_ivf_kmeans_recall_vs_brute_force(spark, sf_dir):
     """The trained-quantizer IVF tier must keep usable recall against the

@@ -1,5 +1,8 @@
-"""Quick per-query timer for optimization work — bench.py's methodology
-(noop sink, shared-view release discipline) over an arbitrary subset.
+"""Quick per-query timer for optimization work — bench.py's timed passes
+(noop sink, rep-major, every pass starting with no shared views) over an
+arbitrary subset, in the order given. A query prices a shared view's
+build only if no earlier query on the command line built it, so list a
+view's builder before a consumer to time the consumer's marginal cost.
 
 Usage:
     python tools/time_queries.py [--sf DIR] [--reps N] query [query ...]
@@ -11,15 +14,13 @@ from __future__ import annotations
 
 import argparse
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from streamprocessing_spark.engine import release_plugin_caches  # noqa: E402
+from bench import timed_passes  # noqa: E402
 from streamprocessing_spark.registry import all_specs  # noqa: E402
 from streamprocessing_spark.session import get_spark  # noqa: E402
-from streamprocessing_spark.shared_views import release_shared_views  # noqa: E402
 
 
 def main() -> int:
@@ -28,8 +29,6 @@ def main() -> int:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
-
-    from bench import VIEW_BUILDER_KINDS  # noqa: E402
 
     specs = all_specs()
     unknown = [n for n in args.queries if n not in specs]
@@ -43,30 +42,13 @@ def main() -> int:
         "overwrite"
     ).save()
 
-    from bench import _reclaim_dead_blocks  # noqa: E402
-
+    raw = timed_passes(spark, specs, args.queries, args.sf, args.reps)
     total = 0.0
     for name in args.queries:
-        _reclaim_dead_blocks(spark)  # same janitor as bench.py, untimed
-        reps: list[float] = []
-        for _ in range(args.reps):
-            release_plugin_caches()
-            for kind in VIEW_BUILDER_KINDS.get(name, ()):
-                release_shared_views(spark, kind)
-            spark.sparkContext.setJobDescription(name)
-            t0 = time.time()
-            specs[name].fn(spark, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            reps.append(time.time() - t0)
-            spark.sparkContext.setJobDescription(None)
-        reps.sort()
+        reps = sorted(raw[name])
         med = reps[(len(reps) - 1) // 2]
         total += med
-        print(
-            f"{med:8.3f}  [{reps[0]:.3f}, {reps[-1]:.3f}]  {name}",
-            flush=True,
-        )
+        print(f"{med:8.3f}  [{reps[0]:.3f}, {reps[-1]:.3f}]  {name}", flush=True)
     print(f"{total:8.3f}  TOTAL (sum of medians)")
     return 0
 
