@@ -1038,72 +1038,6 @@ def _km_dist_expr(xi: str, s: str, cnt: str) -> str:
     )
 
 
-def with_km_dist_fast(
-    df: DataFrame, xi_col: str, s_col: str, cnt_col: str, out_col: str
-) -> DataFrame:
-    """Append the squared-L2 distance between a quantized vector and a
-    (sum array, count) centroid via the numpy dim-fold kernel —
-    bit-identical to _km_dist_expr's interpreted fold (per element:
-    exact int→double widening, one IEEE divide, subtract, square;
-    accumulation sequential over dims). Consumes the two array columns;
-    the Arrow batch replaces n·K interpreted lambda evaluations.
-
-    Tradeoff, measured at sf0.1: for SHORT slices (PQ's 8-dim subspaces)
-    the fixed mapInPandas stage cost outweighs the fold win:
-    ann_pq_adc_topk takes 3.7 s with this kernel against 2.7 s with the
-    interpreted fold (4-core box, median of 5, per-task zip re-read
-    already removed by shipping.guard_zip_caches). Kept anyway
-    because the per-row fold cost is what scales with n while the stage
-    cost is constant: at 100 TB corpus sizes the kernel side wins
-    outright, and one code path keeps the bit-exactness argument in one
-    place."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    keep = [f for f in df.schema.fields if f.name not in (xi_col, s_col)]
-    out_schema = StructType([*keep, StructField(out_col, DoubleType())])
-    keep_names = [f.name for f in keep]
-
-    def kernel(batches):
-        guard_zip_caches()
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x_list = pdf[xi_col].to_numpy()
-            s_list = pdf[s_col].to_numpy()
-            cnt_all = pdf[cnt_col].to_numpy().astype(np.float64)
-            n = len(pdf)
-            lx = np.fromiter((len(v) for v in x_list), dtype=np.int64, count=n)
-            ls = np.fromiter((len(v) for v in s_list), dtype=np.int64, count=n)
-            acc = np.full(n, np.nan)
-            # ragged guard: zip_with over equal-length arrays folds
-            # normally (empty → the fold's 0.0 — PQ's out-of-range
-            # slices hit this); mismatched lengths pad with NULL →
-            # NULL dist (→ masked below).
-            acc[(lx == 0) & (ls == 0)] = 0.0
-            for ln in np.unique(lx):
-                m = (lx == ln) & (ls == ln)
-                if ln == 0 or not m.any():
-                    continue
-                x = np.stack(x_list[m]).astype(np.float64)
-                s = np.stack(s_list[m]).astype(np.float64)
-                cnt = cnt_all[m]
-                a = np.zeros(int(m.sum()))
-                for i in range(int(ln)):
-                    d = x[:, i] - s[:, i] / cnt
-                    a = a + d * d
-                acc[m] = a
-            out = pdf[keep_names].copy()
-            arr = pd.array(acc, dtype="Float64")
-            arr[~np.isfinite(acc)] = pd.NA  # ragged/NULL-element rows
-            out[out_col] = arr
-            yield out
-
-    return df.mapInPandas(kernel, out_schema)
-
-
 def kmeans_assign(
     emb: DataFrame,
     k: int = KMEANS_K,
@@ -1176,7 +1110,8 @@ def _kmeans_loop(
     for _ in range(iters):
         w = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("k"))
         asg = (
-            with_km_dist_fast(q.join(F.broadcast(cent)), "xi", "s", "cnt", "dist")
+            q.join(F.broadcast(cent))
+            .withColumn("dist", F.expr(_km_dist_expr("xi", "s", "cnt")))
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("id", "k")
@@ -1346,20 +1281,24 @@ def pq_train_encode(
     asg = None
     w = Window.partitionBy("j", "id").orderBy(F.asc("dist"), F.asc("k"))
     for _ in range(PQ_ITERS):
-        # iteration-boundary checkpoints (round-10 optimization): asg
-        # feeds THREE consumers (sums, cnt, and next-round/codes) and
-        # cent two (next round's distance join, the final codebook LUT);
-        # without materialization every consumer re-derived the whole
-        # prior Lloyd chain — measured: the chain re-ran once for codes
-        # and AGAIN for the LUT, 11.6 s cold end-to-end at sf0.1 vs
-        # 4.5 s with the boundaries cut. Both relations are tiny
-        # (corpus×PQ_M assignment rows, j·k centroid rows).
+        # iteration-boundary checkpoints (round 10): asg feeds THREE
+        # consumers (sums, cnt, and next-round/codes) and cent two (next
+        # round's distance join, the final codebook LUT); with the
+        # lineage uncut every consumer re-derived the whole prior Lloyd
+        # chain — the chain re-ran once for codes and AGAIN for the LUT,
+        # 11.6 s cold end-to-end at sf0.1 vs 4.5 s with the boundaries
+        # cut. Lazy, as in the graph loops: the cut is the same, and the
+        # next consumer's job materializes the checkpoint instead of an
+        # extra internal job per checkpoint (ann_pq_adc_topk 28 → 24
+        # jobs). Both relations are tiny (corpus×PQ_M assignment rows,
+        # j·k centroid rows).
         asg = (
-            with_km_dist_fast(sub.join(F.broadcast(cent), "j"), "xi", "s", "cnt", "dist")
+            sub.join(F.broadcast(cent), "j")
+            .withColumn("dist", F.expr(_km_dist_expr("xi", "s", "cnt")))
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("j", "id", "k")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
         sums = (
             asg.join(sub, ["j", "id"])
@@ -1373,7 +1312,7 @@ def pq_train_encode(
             .agg(F.array_sort(F.collect_list(F.struct("dim", "sd"))).alias("ps"))
             .select("j", "k", F.expr("transform(ps, p -> p.sd)").alias("s"))
             .join(cnt, ["j", "k"])
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
     codes = asg.groupBy("id").agg(
         *[
@@ -1392,12 +1331,14 @@ def pq_query_lut(queries: DataFrame, cent: DataFrame) -> DataFrame:
     qslices = queries.select(
         "query_id", F.posexplode(_pq_slices_col("query_vec")).alias("j", "qxi")
     )
-    return with_km_dist_fast(
-        qslices.join(F.broadcast(cent), "j"), "qxi", "s", "cnt", "d"
-    ).select("query_id", "j", "k", "d")
+    return (
+        qslices.join(F.broadcast(cent), "j")
+        .withColumn("d", F.expr(_km_dist_expr("qxi", "s", "cnt")))
+        .select("query_id", "j", "k", "d")
+    )
     # (no checkpoint: since the map-form ADC rewrite the LUT is consumed
-    # exactly once, by the per-query map aggregation, and cent is already
-    # materialized at the training boundary)
+    # exactly once, by the per-query map aggregation, and cent's lineage
+    # is already cut at the training boundary)
 
 
 def _pq_score_topk(scored: DataFrame, lut: DataFrame, top_k: int) -> DataFrame:
@@ -1528,7 +1469,8 @@ def ivfpq_topk(
     )
     w_cell = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("k"))
     probes = (
-        with_km_dist_fast(qx.crossJoin(F.broadcast(coarse_cent)), "xi", "s", "cnt", "dist")
+        qx.crossJoin(F.broadcast(coarse_cent))
+        .withColumn("dist", F.expr(_km_dist_expr("xi", "s", "cnt")))
         .withColumn("rn", F.row_number().over(w_cell))
         .where(F.col("rn") <= nprobe)
         .select("query_id", F.col("k").alias("cell"))

@@ -1034,7 +1034,7 @@ def _sql_pq_oracle(coarse: bool = False) -> str:
     """Generated oracle for ann_pq_adc_topk: per-subspace unrolled exact
     Lloyd (slice → assign/update × PQ_ITERS, PLUS the final centroid
     update that becomes the codebook), then the ADC lookup join — the
-    same fixed-order 4-term double sum and (adc, id) top-k the Spark
+    same fixed-order 8-term double sum and (adc, id) top-k the Spark
     operator computes. With ``coarse=True`` (ann_ivfpq_topk) the chain
     is prefixed by the full-vector Lloyd CTEs and the ADC candidates are
     restricted to the cells each query probes (nprobe nearest final
@@ -1144,10 +1144,10 @@ def _sql_pq_oracle(coarse: bool = False) -> str:
     tags=("similarity", "llm-pipeline", "approx", "iterative"),
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN over the embeddings: 4 subspace codebooks
-    (deterministic exact-state Lloyd), corpus encoded to 4 codes/vector,
+    """Product-quantization ANN over the embeddings: 8 subspace codebooks
+    (deterministic exact-state Lloyd), corpus encoded to 8 codes/vector,
     queries answered by ADC lookup-table joins — the memory-bound scale
-    tier (2 B/vector vs 256 B) between brute force and IVF. See
+    tier (4 B/vector vs 256 B) between brute force and IVF. See
     operators/similarity.pq_adc_topk for the full scale story; recall vs
     the exact L2 tier is asserted in tests/test_similarity landscape
     (approximate BY DESIGN, but the arithmetic itself is bit-oracled —

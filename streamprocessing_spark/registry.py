@@ -67,7 +67,12 @@ GATE_FIRST = (
     # that decontaminate_semantic reads
     "srp_lsh_cosine_pairs_scaled",
     "decontaminate_semantic",
+    # the Lloyd consumers: every distance is now the JVM fold
     "ann_pq_adc_topk",
+    "ann_ivfpq_topk",
+    "kmeans_embeddings",
+    "ann_ivf_kmeans_topk",
+    "prototypicality_prune",
     # graph loops over the shared graphop/copairs views
     "basket_bfs_part_hops",
     "pagerank_copurchase",

@@ -326,6 +326,16 @@ def test_pq_luts_are_broadcast(spark, sf_dir):
     assert "map_from_entries" in plan and "element_at(lut_" in plan, plan
 
 
+def test_lloyd_distance_stays_in_the_jvm(spark, sf_dir):
+    """Every Lloyd distance is the Catalyst _km_dist_expr fold, never a
+    Python kernel: at this slice length a Python exec node adds a stage
+    and resident workers and returns the same doubles."""
+    for name in ("ann_pq_adc_topk", "kmeans_embeddings"):
+        plan = X.formatted_plan(SPECS[name].fn(spark, sf_dir))
+        for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython"):
+            assert node not in plan, (name, node, plan)
+
+
 def test_pit_join_is_one_exchange(spark, sf_dir):
     """The as-of window formulation must cost exactly one shuffle on the
     entity key (union is narrow; no join Exchange exists at all)."""

@@ -114,10 +114,11 @@ def test_srp_fast_path_matches_fold_tier(spark, sf_dir):
     assert fold == fast
 
 
-def test_km_dist_kernel_matches_interpreted_fold(spark):
-    """with_km_dist_fast must return the exact doubles of _km_dist_expr's
-    zip_with/aggregate fold: equal-length rows of several lengths in one
-    batch, both-empty (0.0), mismatched lengths and NULL elements (NULL)."""
+def test_km_dist_expr_matches_sequential_fold(spark):
+    """_km_dist_expr must return the exact doubles of a sequential
+    left-fold (the one DuckDB's list_sum replays in the oracles): equal-
+    length rows of several lengths, both-empty (0.0), mismatched lengths
+    and NULL elements (NULL)."""
     rows = [
         (1, [3, -7, 11], [10, 20, 30], 3),
         (2, [123456789, -987654321, 5, 0], [1, 2, 3, 4], 7),
@@ -128,14 +129,22 @@ def test_km_dist_kernel_matches_interpreted_fold(spark):
         (7, [1, None, 3], [4, 5, 6], 2),
         (8, [1, 2, 3], [4, None, 6], 3),
     ]
-    df = spark.createDataFrame(
-        rows, "id long, xi array<bigint>, s array<bigint>, cnt long"
-    ).coalesce(1)
-    fold = df.select("id", F.expr(S._km_dist_expr("xi", "s", "cnt")).alias("dist"))
-    fast = S.with_km_dist_fast(df, "xi", "s", "cnt", "dist").select("id", "dist")
-    as_bits = lambda d: {r.id: None if r.dist is None else r.dist.hex() for r in d.collect()}  # noqa: E731
-    got = as_bits(fast)
-    assert got == as_bits(fold)
+
+    def fold(xi, s, cnt):
+        if len(xi) != len(s) or None in xi or None in s:
+            return None
+        acc = 0.0
+        for x, sv in zip(xi, s):
+            d = float(x) - float(sv) / cnt
+            acc = acc + d * d
+        return acc.hex()
+
+    df = spark.createDataFrame(rows, "id long, xi array<bigint>, s array<bigint>, cnt long")
+    got = {
+        r.id: None if r.dist is None else r.dist.hex()
+        for r in df.select("id", F.expr(S._km_dist_expr("xi", "s", "cnt")).alias("dist")).collect()
+    }
+    assert got == {i: fold(xi, s, cnt) for i, xi, s, cnt in rows}
     assert got[5] == (0.0).hex()
     assert got[6] is got[7] is got[8] is None
 
