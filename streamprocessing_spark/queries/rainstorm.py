@@ -112,20 +112,14 @@ def rainstorm_streaming_app2(spark: SparkSession, sf_dir: str) -> DataFrame:
     AvailableNow into a complete-mode sink. End-of-stream counts must
     equal the batch oracle — the same correctness definition the
     reference's demo used (SURVEY.md §4.3.1)."""
-    from streamprocessing_spark.streaming.replay import run_to_memory_sink
+    from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_table
 
-    schema = load_table(spark, sf_dir, "orders").schema
-    orders_stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
     job = E.RainStormJob(
         op1=E.PluginOp(E.app2_op1, contract="emit"),
         op2=E.PluginOp(E.app2_op2, contract="count"),
         pattern="F",
     )
-    out = job.run(_record_stream(spark, sf_dir, orders=orders_stream))
+    out = job.run(_record_stream(spark, sf_dir, orders=stream_table(spark, sf_dir, "orders")))
     return run_to_memory_sink(out, "complete")
 
 
@@ -142,20 +136,14 @@ def rainstorm_streaming_app1(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink, the streaming topology the reference's App1 actually has
     (filtered records appended to the HyDFS dest file, server.go:306-310).
     End-of-stream contents must equal the batch oracle."""
-    from streamprocessing_spark.streaming.replay import run_to_memory_sink
+    from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_table
 
-    schema = load_table(spark, sf_dir, "orders").schema
-    orders_stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
     job = E.RainStormJob(
         op1=E.PluginOp(E.app1_op1, contract="emit"),
         op2=E.PluginOp(E.app1_op2, contract="emit"),
         pattern="URGENT",
     )
-    out = job.run(_record_stream(spark, sf_dir, orders=orders_stream))
+    out = job.run(_record_stream(spark, sf_dir, orders=stream_table(spark, sf_dir, "orders")))
     return run_to_memory_sink(out, "append")
 
 

@@ -2648,12 +2648,9 @@ def _ensure_index(
     import os
     import shutil
     import uuid
-    from pathlib import Path
 
-    scratch = os.environ.get(
-        "SPARK_GRAFT_LOCAL_DIR",
-        str(Path(__file__).resolve().parent.parent.parent / ".spark-local"),
-    )
+    from streamprocessing_spark.session import scratch_root
+
     src = os.path.join(sf_dir, "embeddings.parquet")
     sf_key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     fp = hashlib.md5()
@@ -2665,7 +2662,7 @@ def _ensure_index(
         st = os.stat(src)
         fp.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
     content_key = fp.hexdigest()[:16]
-    sf_root = os.path.join(scratch, namespace, _IVF_LAYOUT_V, sf_key)
+    sf_root = os.path.join(scratch_root(), namespace, _IVF_LAYOUT_V, sf_key)
     idx_dir = os.path.join(sf_root, content_key)
     if not os.path.isdir(idx_dir):
         # Publish-by-rename (ADVICE r06): build under a private temp name

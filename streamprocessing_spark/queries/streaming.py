@@ -26,7 +26,7 @@ from streamprocessing_spark.registry import register
 from streamprocessing_spark.streaming.replay import (
     run_to_memory_sink,
     start_memory_sink,
-    stream_events,
+    stream_table,
 )
 
 # ---------------------------------------------------------------------------
@@ -36,7 +36,7 @@ from streamprocessing_spark.streaming.replay import (
 
 def _build_count_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .select(F.col("event_type").alias("key"))
         .groupBy("key")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -45,7 +45,7 @@ def _build_count_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _build_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("key"),
@@ -59,7 +59,7 @@ def _build_append_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _build_dedup_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .select("event_id", "event_type")
         .dropDuplicates(["event_id"])
     )
@@ -67,7 +67,7 @@ def _build_dedup_by_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _build_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .select("event_id", "event_type", "ts")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -76,7 +76,7 @@ def _build_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_windowed_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
+    ev = stream_table(spark, sf_dir, "events").withWatermark("ts", "1 hour")
     return (
         ev.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -91,7 +91,7 @@ def _build_windowed_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
+    ev = stream_table(spark, sf_dir, "events").withWatermark("ts", "2 hours")
     return (
         ev.groupBy(F.session_window("ts", "2 hours"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -107,7 +107,7 @@ def _build_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
+    ev = stream_table(spark, sf_dir, "events").withWatermark("ts", "1 hour")
     return (
         ev.groupBy(F.window("ts", "2 hours", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -124,7 +124,7 @@ def _build_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocessing_spark.sources.readers import load_table
 
-    ev = stream_events(spark, sf_dir)
+    ev = stream_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = ev.join(F.broadcast(cust), ev.user_id == cust.c_custkey)
     return joined.groupBy("c_mktsegment").agg(
@@ -136,7 +136,7 @@ def _build_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def ev(t: str, pre: str) -> DataFrame:
         return (
-            stream_events(spark, sf_dir)
+            stream_table(spark, sf_dir, "events")
             .where(F.col("event_type") == t)
             .select(
                 F.col("user_id").alias(f"{pre}_user"),
@@ -159,11 +159,11 @@ def _build_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_stateful_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocessing_spark.streaming.stateful import threshold_crossing_alerts
 
-    return threshold_crossing_alerts(stream_events(spark, sf_dir))
+    return threshold_crossing_alerts(stream_table(spark, sf_dir, "events"))
 
 
 def _build_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
+    ev = stream_table(spark, sf_dir, "events").withWatermark("ts", "1 hour")
     return (
         ev.select("event_id", "event_type", "ts")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -182,7 +182,7 @@ def _build_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _build_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        stream_events(spark, sf_dir)
+        stream_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("user_id"))
@@ -193,7 +193,7 @@ def _build_complete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def side(t: str, pre: str) -> DataFrame:
         return (
-            stream_events(spark, sf_dir)
+            stream_table(spark, sf_dir, "events")
             .where(F.col("event_type") == t)
             .select(
                 F.col("user_id").alias(f"{pre}_user"),
@@ -217,7 +217,7 @@ def _build_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _build_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
+    ev = stream_table(spark, sf_dir, "events").withWatermark("ts", "1 hour")
     hourly = ev.groupBy(F.window("ts", "1 hour")).agg(F.count(F.lit(1)).alias("cnt"))
     return (
         hourly.groupBy(F.window(F.col("window"), "1 day"))
@@ -244,7 +244,7 @@ def _build_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     # the production form of "hourly unique users" that needs no sketch
     # (approx_count_distinct) and no unbounded dedup state (the
     # watermark closes windows, so per-window state retires)
-    ev = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
+    ev = stream_table(spark, sf_dir, "events").withWatermark("ts", "1 hour")
     per_user = ev.groupBy(F.window("ts", "1 hour"), "user_id").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -264,11 +264,11 @@ def _build_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
 def _build_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocessing_spark.streaming.stateful import timeout_sessions
 
-    return timeout_sessions(stream_events(spark, sf_dir))
+    return timeout_sessions(stream_table(spark, sf_dir, "events"))
 
 
 def _build_malformed_json_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = stream_events(spark, sf_dir).select("event_id", "event_type", "value")
+    ev = stream_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     js = ev.select(
         F.when(
             F.col("event_id") % 11 == 0,
@@ -801,7 +801,7 @@ def streaming_stateful_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_transition_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocessing_spark.streaming.stateful import event_transitions
 
-    return event_transitions(stream_events(spark, sf_dir))
+    return event_transitions(stream_table(spark, sf_dir, "events"))
 
 
 _PIPELINES["streaming_transition_pairs"] = (_build_transition_pairs, "append")
@@ -953,59 +953,47 @@ def streaming_ivf_pairs_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-# Streaming paragraph-ingest dedup state: (applicationId, sf_dir) -> the
-# completed store's base path (a STRING — module globals must never hold
-# a DataFrame; shipping.ensure_shippable pickles this module by value).
-_PARA_INGEST: dict[tuple[str, str], str] = {}
+# Ingest-twin drains: (tag, applicationId, sf_dir) -> the drained sink
+# (a frozen dataclass of strings and numbers — module globals must never
+# hold a DataFrame; shipping.ensure_shippable pickles this module by value).
+_INGEST: dict[tuple[str, str, str], object] = {}
 
 
-def _para_ingest_base(spark: SparkSession, sf_dir: str) -> str:
-    """Drain the documents table through ParagraphIngestDedup once per
-    (session, sf_dir) — three doc_id%3 single-file chunks replayed as
-    one-batch-per-file micro-batches (the same staging law as the
-    ingest-dedup and checkpoint-restart tests) — and return the
-    completed store's base dir. Lives under the non-/tmp scratch root
-    (the harness box reaps /tmp mid-run)."""
+def _ingest_drain(spark: SparkSession, sf_dir: str, tag: str, make_sink):
+    """Drain the documents table through the sink ``make_sink(state_dir,
+    docs)`` builds, once per (session, sf_dir), and return that sink.
+    Staging law shared by every ingest twin (and the ingest-dedup and
+    checkpoint-restart tests): three doc_id%3 single-file chunks replayed
+    as one-batch-per-file micro-batches. The store lives under
+    ``graft_<tag>_ingest`` in the non-/tmp scratch root, and a memoized
+    store is trusted only once its _DONE marker exists."""
     import hashlib
     import os
     import shutil
-    from pathlib import Path
 
-    from streamprocessing_spark.queries.dedup import JACCARD_THRESHOLD
+    from streamprocessing_spark.session import scratch_root
     from streamprocessing_spark.sources.readers import load_table
-    from streamprocessing_spark.streaming.ingest_dedup import ParagraphIngestDedup
-    from streamprocessing_spark.operators import dedup as D
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _PARA_INGEST.get(key)
-    if base is not None and os.path.isfile(os.path.join(base, "_DONE")):
-        return base
+    app_id = spark.sparkContext.applicationId
+    key = (tag, app_id, sf_dir)
+    sink = _INGEST.get(key)
+    if sink is not None and os.path.isfile(os.path.join(os.path.dirname(sink.base), "_DONE")):
+        return sink
 
-    scratch = os.environ.get(
-        "SPARK_GRAFT_LOCAL_DIR",
-        str(Path(__file__).resolve().parent.parent.parent / ".spark-local"),
-    )
-    tag = hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:12]
-    base = os.path.join(scratch, "graft_para_ingest", tag)
+    digest = hashlib.md5(f"{app_id}:{sf_dir}".encode()).hexdigest()[:12]
+    base = os.path.join(scratch_root(), f"graft_{tag}_ingest", digest)
     shutil.rmtree(base, ignore_errors=True)  # a half-built prior attempt
     src = os.path.join(base, "src")
     os.makedirs(src, exist_ok=True)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n_total = D.paragraph_df(docs, "doc_id", "text").count()
+    sink = make_sink(os.path.join(base, "state"), docs)
     for i in range(3):
         d = os.path.join(base, f"chunk{i}")
-        docs.where((F.col("doc_id") % 3) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
+        docs.where((F.col("doc_id") % 3) == i).coalesce(1).write.mode("overwrite").parquet(d)
         part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
         shutil.copyfile(os.path.join(d, part), os.path.join(src, f"c{i}.parquet"))
 
-    sink = ParagraphIngestDedup(
-        base=os.path.join(base, "state"),
-        threshold=JACCARD_THRESHOLD,
-        n_total_units=n_total,
-    )
     q = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1")
@@ -1018,8 +1006,8 @@ def _para_ingest_base(spark: SparkSession, sf_dir: str) -> str:
     q.awaitTermination()
     with open(os.path.join(base, "_DONE"), "w") as fh:
         fh.write("ok")
-    _PARA_INGEST[key] = base
-    return base
+    _INGEST[key] = sink
+    return sink
 
 
 # safe top-level import: queries.dedup precedes queries.streaming in
@@ -1052,12 +1040,18 @@ def streaming_paragraph_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     in tests/test_round10_ops.py."""
     from streamprocessing_spark.functions.text import portable_round
     from streamprocessing_spark.operators import dedup as D
+    from streamprocessing_spark.queries.dedup import JACCARD_THRESHOLD
     from streamprocessing_spark.sources.readers import load_table
     from streamprocessing_spark.streaming.ingest_dedup import ParagraphIngestDedup
 
-    base = _para_ingest_base(spark, sf_dir)
-    sink = ParagraphIngestDedup(base=f"{base}/state", threshold=0.0)
-    pairs = sink.dup_pairs(spark)
+    def make_sink(state_dir: str, docs: DataFrame) -> ParagraphIngestDedup:
+        return ParagraphIngestDedup(
+            base=state_dir,
+            threshold=JACCARD_THRESHOLD,
+            n_total_units=D.paragraph_df(docs, "doc_id", "text").count(),
+        )
+
+    pairs = _ingest_drain(spark, sf_dir, "para", make_sink).dup_pairs(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     per_doc = (
         D.paragraph_df(docs, "doc_id", "text")
@@ -1079,65 +1073,6 @@ def streaming_paragraph_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
             "dup_fraction"
         ),
     )
-
-
-
-
-_CDC_INGEST: dict[tuple[str, str], str] = {}
-
-
-def _cdc_ingest_base(spark: SparkSession, sf_dir: str) -> str:
-    """Drain the documents table through CdcIngestDedup once per
-    (session, sf_dir) — the same three doc_id%3 single-file chunks /
-    one-batch-per-file staging law as the paragraph twin — and return
-    the completed store's base dir."""
-    import hashlib
-    import os
-    import shutil
-    from pathlib import Path
-
-    from streamprocessing_spark.sources.readers import load_table
-    from streamprocessing_spark.streaming.ingest_dedup import CdcIngestDedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _CDC_INGEST.get(key)
-    if base is not None and os.path.isfile(os.path.join(base, "_DONE")):
-        return base
-
-    scratch = os.environ.get(
-        "SPARK_GRAFT_LOCAL_DIR",
-        str(Path(__file__).resolve().parent.parent.parent / ".spark-local"),
-    )
-    tag = hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:12]
-    base = os.path.join(scratch, "graft_cdc_ingest", tag)
-    shutil.rmtree(base, ignore_errors=True)  # a half-built prior attempt
-    src = os.path.join(base, "src")
-    os.makedirs(src, exist_ok=True)
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    for i in range(3):
-        d = os.path.join(base, f"chunk{i}")
-        docs.where((F.col("doc_id") % 3) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        shutil.copyfile(os.path.join(d, part), os.path.join(src, f"c{i}.parquet"))
-
-    sink = CdcIngestDedup(base=os.path.join(base, "state"), threshold=0.0)
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(sink.foreach_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    with open(os.path.join(base, "_DONE"), "w") as fh:
-        fh.write("ok")
-    _CDC_INGEST[key] = base
-    return base
 
 
 from streamprocessing_spark.queries.dedup import SQL_CDC_PROFILE as _SQL_CDC_PROFILE  # noqa: E402
@@ -1173,8 +1108,7 @@ def streaming_cdc_chunks_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         CdcIngestDedup,
     )
 
-    base = _cdc_ingest_base(spark, sf_dir)
-    sink = CdcIngestDedup(base=f"{base}/state", threshold=0.0)
+    sink = _ingest_drain(spark, sf_dir, "cdc", lambda state, _: CdcIngestDedup(state, 0.0))
     dups = sink.dup_instances(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     per_doc = (
@@ -1194,62 +1128,6 @@ def streaming_cdc_chunks_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("n_dup_chunks"), F.lit(0)) / F.col("n_chunks"), 4
         ).alias("dup_fraction"),
     )
-
-
-_CONT_INGEST: dict[tuple[str, str], str] = {}
-
-
-def _containment_ingest_base(spark: SparkSession, sf_dir: str) -> str:
-    """Drain the documents table through ContainmentIngestDedup once per
-    (session, sf_dir) — same three doc_id%3 single-file staging law as
-    the other ingest twins."""
-    import hashlib
-    import os
-    import shutil
-    from pathlib import Path
-
-    from streamprocessing_spark.sources.readers import load_table
-    from streamprocessing_spark.streaming.ingest_dedup import ContainmentIngestDedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _CONT_INGEST.get(key)
-    if base is not None and os.path.isfile(os.path.join(base, "_DONE")):
-        return base
-
-    scratch = os.environ.get(
-        "SPARK_GRAFT_LOCAL_DIR",
-        str(Path(__file__).resolve().parent.parent.parent / ".spark-local"),
-    )
-    tag = hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:12]
-    base = os.path.join(scratch, "graft_cont_ingest", tag)
-    shutil.rmtree(base, ignore_errors=True)  # a half-built prior attempt
-    src = os.path.join(base, "src")
-    os.makedirs(src, exist_ok=True)
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    for i in range(3):
-        d = os.path.join(base, f"chunk{i}")
-        docs.where((F.col("doc_id") % 3) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        shutil.copyfile(os.path.join(d, part), os.path.join(src, f"c{i}.parquet"))
-
-    sink = ContainmentIngestDedup(base=os.path.join(base, "state"), threshold=0.0)
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(sink.foreach_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    with open(os.path.join(base, "_DONE"), "w") as fh:
-        fh.write("ok")
-    _CONT_INGEST[key] = base
-    return base
 
 
 from streamprocessing_spark.queries.dedup import SQL_CONTAINMENT_PAIRS as _SQL_CONT_PAIRS  # noqa: E402
@@ -1279,6 +1157,7 @@ def streaming_containment_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and retry idempotence pinned in tests/test_round10_ops.py."""
     from streamprocessing_spark.streaming.ingest_dedup import ContainmentIngestDedup
 
-    base = _containment_ingest_base(spark, sf_dir)
-    sink = ContainmentIngestDedup(base=f"{base}/state", threshold=0.0)
+    sink = _ingest_drain(
+        spark, sf_dir, "cont", lambda state, _: ContainmentIngestDedup(state, 0.0)
+    )
     return sink.containment_pairs(spark)

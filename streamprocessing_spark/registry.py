@@ -83,8 +83,16 @@ GATE_FIRST = (
     "hits_part_authorities",
     # ExecOp now runs through PluginOp's kernel
     "rainstorm_exec_app2",
-    # ParagraphIngestDedup now checks the band store's sig type
+    # replay.stream_table; the first call drains every _PIPELINES builder
+    "streaming_count_update",
+    "rainstorm_streaming_app1",
+    "rainstorm_streaming_app2",
+    # queries.streaming._ingest_drain
     "streaming_paragraph_dedup_ingest",
+    "streaming_cdc_chunks_ingest",
+    "streaming_containment_ingest",
+    # the IVF index under session.scratch_root()
+    "ann_ivf_persisted_topk",
 )
 
 

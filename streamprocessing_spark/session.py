@@ -21,6 +21,16 @@ def _cpus() -> int:
         return 32
 
 
+def scratch_root() -> str:
+    """Root of every non-/tmp scratch file: ``$SPARK_GRAFT_LOCAL_DIR``,
+    else ``<repo>/.spark-local``. Read at call time, and never from
+    ``spark.local.dir``: a caller's own session may not set it."""
+    return os.environ.get(
+        "SPARK_GRAFT_LOCAL_DIR",
+        str(Path(__file__).resolve().parent.parent / ".spark-local"),
+    )
+
+
 def get_spark(app_name: str = "streamprocessing-spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
@@ -66,13 +76,7 @@ def get_spark(app_name: str = "streamprocessing-spark", master: str | None = Non
         # mid-run (observed twice: shuffle_*.data FileNotFound cascades
         # killing multi-minute jobs). A real cluster sets SPARK_LOCAL_DIRS
         # to provisioned scratch disks for the same reason.
-        .config(
-            "spark.local.dir",
-            os.environ.get(
-                "SPARK_GRAFT_LOCAL_DIR",
-                str(Path(__file__).resolve().parent.parent / ".spark-local"),
-            ),
-        )
+        .config("spark.local.dir", scratch_root())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # ContextCleaner only reclaims dead localCheckpoint/persist

@@ -1,6 +1,6 @@
 from streamprocessing_spark.streaming.replay import (
-    stream_events,
+    stream_table,
     run_to_memory_sink,
 )
 
-__all__ = ["stream_events", "run_to_memory_sink"]
+__all__ = ["stream_table", "run_to_memory_sink"]

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamprocessing_spark.shipping import guard_zip_caches
+from streamprocessing_spark.streaming.replay import stream_table
 
 IVF_STREAM_NASSIGN = 3
 
@@ -276,12 +277,7 @@ def ivf_pairs_stream(
 
     cents = trained_centroids(spark, sf_dir)
     if source is None:
-        schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-        source = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "embeddings.parquet")
-            .parquet(sf_dir)
-        )
+        source = stream_table(spark, sf_dir, "embeddings")
     assigned = source.select("vec_id", "embedding").mapInPandas(
         _assign_kernel(cents, nassign), "cent_id long, id long, v array<double>"
     )

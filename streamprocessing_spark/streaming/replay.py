@@ -22,32 +22,34 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from streamprocessing_spark.sources.readers import _ensure_confs, normalize_timestamps
+from streamprocessing_spark.sources.readers import TABLES, _ensure_confs, normalize_timestamps
 
 
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over events.parquet with the same ts normalization as the
-    batch loader (see readers.normalize_timestamps). Schema comes from a
-    batch peek (memoized per session+path — file stream sources need it
-    declared, and the peek costs a footer read per query otherwise)."""
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """readStream over one table with the same ts normalization as the
+    batch loader (see readers.load_table). Schema comes from a batch peek
+    (memoized per session+path — file stream sources need it declared,
+    and the peek costs a Spark job per query otherwise)."""
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ensure_confs(spark)
-    path = f"{sf_dir}/events.parquet"
+    path = f"{sf_dir}/{name}.parquet"
     cache_key = (spark.sparkContext.applicationId, path)
     schema = _SCHEMA_CACHE.get(cache_key)
     if schema is None:
         schema = spark.read.parquet(path).schema
         _SCHEMA_CACHE[cache_key] = schema
-    # The file stream source lists a DIRECTORY; events.parquet is a single
+    # The file stream source lists a DIRECTORY; each table is a single
     # file, so stream the parent dir with a glob restricted to it.
     df = (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
+        .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )
-    return normalize_timestamps(df, table="events")
+    return normalize_timestamps(df, table=name)
 
 
 def run_to_memory_sink(

@@ -10,7 +10,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from streamprocessing_spark.sources.readers import load_table
-from streamprocessing_spark.streaming.replay import stream_events
+from streamprocessing_spark.streaming.replay import stream_table
 
 
 def test_streaming_parquet_append_sink(spark, sf_dir):
@@ -21,7 +21,7 @@ def test_streaming_parquet_append_sink(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="sp_sink_")
     try:
         out = (
-            stream_events(spark, sf_dir)
+            stream_table(spark, sf_dir, "events")
             .where(F.col("event_type") == "signup")
             .select("event_id", "user_id")
         )
@@ -79,7 +79,7 @@ def test_plugin_pipeline_on_stream(spark, sf_dir):
     )
     batch_out = E.PluginOp(op_filter).apply(records_batch, None)
 
-    records_stream = stream_events(spark, sf_dir).select(
+    records_stream = stream_table(spark, sf_dir, "events").select(
         F.col("event_id").cast("string").alias("key"),
         F.col("event_type").alias("value"),
     )

@@ -123,11 +123,11 @@ def test_left_outer_interval_join_emits_unmatched(spark, sf_dir):
     watermark never passes stay in state — so assertions are restricted
     to the emittable region (ts ≤ max_ts - 2h), which is exactly what a
     live stream would have emitted by now."""
-    from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_events
+    from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_table
 
     def side(t, pre):
         return (
-            stream_events(spark, sf_dir)
+            stream_table(spark, sf_dir, "events")
             .where(F.col("event_type") == t)
             .select(
                 F.col("user_id").alias(f"{pre}_user"),
@@ -445,7 +445,7 @@ def test_stateful_alerts_exactly_once_through_task_failure(spark, sf_dir, tmp_pa
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_events
+    from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_table
     from streamprocessing_spark.streaming.stateful import (
         _OUT_SCHEMA,
         _STATE_SCHEMA,
@@ -471,10 +471,10 @@ def test_stateful_alerts_exactly_once_through_task_failure(spark, sf_dir, tmp_pa
         yield from out
 
     def flaky_pipeline():
-        # the PRODUCTION source (stream_events: raw schema + ts
+        # the PRODUCTION source (stream_table: raw schema + ts
         # normalization) with only the kernel swapped — the plan under
         # test is threshold_crossing_alerts' plan, not a hand-rebuilt one
-        ev = stream_events(spark, sf_dir)
+        ev = stream_table(spark, sf_dir, "events")
         return (
             ev.where(ev.event_type == "purchase")
             .select("user_id", "event_id", "ts", "value")
@@ -491,7 +491,7 @@ def test_stateful_alerts_exactly_once_through_task_failure(spark, sf_dir, tmp_pa
     want = Counter(
         tuple(r)
         for r in run_to_memory_sink(
-            threshold_crossing_alerts(stream_events(spark, sf_dir)), "append"
+            threshold_crossing_alerts(stream_table(spark, sf_dir, "events")), "append"
         ).collect()
     )
     assert got == want and got

@@ -88,14 +88,16 @@ def _rest_totals(base_url: str, app_id: str) -> dict[str, int]:
 def worker(queries: list[str]) -> None:
     from pyspark.sql import SparkSession
 
+    from streamprocessing_spark.session import scratch_root
+
     spark = (
         SparkSession.builder.appName("spill-bench")
         .master(f"local[{SQUEEZE_TASKS},2]")
         .config("spark.driver.memory", SQUEEZE_MEM)
         .config("spark.memory.fraction", SQUEEZE_FRACTION)
-        # /tmp is reaped mid-run on this box (shuffle FileNotFound
-        # cascades) — keep scratch under the repo like session.py does
-        .config("spark.local.dir", str(REPO / ".spark-local"))
+        # out of /tmp, which can be reaped mid-run (shuffle
+        # FileNotFound cascades): the same root session.py uses
+        .config("spark.local.dir", scratch_root())
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "0")  # float: read the bound port back
         .config("spark.sql.adaptive.enabled", "true")
