@@ -1026,6 +1026,14 @@ KMEANS_ITERS = 3
 KMEANS_SCALE = 10000
 
 
+def _quantize(arr_sql: str) -> Column:
+    """``arr_sql`` in fixed-point integer ten-thousandths, half up."""
+    return F.expr(
+        f"transform({arr_sql}, x -> "
+        f"CAST(floor(CAST(x AS DOUBLE) * {KMEANS_SCALE}.0 + 0.5) AS BIGINT))"
+    )
+
+
 def _km_dist_expr(xi: str, s: str, cnt: str) -> str:
     """Squared euclidean distance between a quantized vector and a
     centroid held as (integer sum array, count) — the division is the
@@ -1061,10 +1069,11 @@ def kmeans_assign(
 
     Shape per iteration: n×k broadcast-join distance folds (centroids
     are k rows), one posexplode shuffle of (k, dim, x) for the new sums
-    — both map-side-combinable. The driver loop never collects;
-    empty clusters simply drop out (both engines agree). At 100 TB this
-    is exactly distributed Lloyd's: broadcast centroids, partial-sum
-    combiners, no iteration barrier beyond the aggregation itself."""
+    — both map-side-combinable. Lineage is cut at each iteration
+    boundary (_lloyd). The driver loop never collects; empty clusters
+    simply drop out (both engines agree). At 100 TB this is exactly
+    distributed Lloyd's: broadcast centroids, partial-sum combiners, no
+    iteration barrier beyond the aggregation itself."""
     asg, _ = _kmeans_loop(emb, k, iters, id_col, vec_col)
     return asg.select(F.col("id").alias(id_col), F.col("k").cast("long").alias("cluster"))
 
@@ -1077,8 +1086,9 @@ def _kmeans_loop(
     vec_col: str,
     init_cent: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(final assignment, final (k, s, cnt) centroid state) — shared by
-    kmeans_assign and kmeans_centroids.
+    """(final assignment (id, k), final (k, s, cnt) centroid state) —
+    the full-vector quantizer behind kmeans_assign, kmeans_centroids,
+    ivfpq_topk and prototypicality_prune.
 
     ``init_cent`` resumes training from a persisted (k, s, cnt) state
     table instead of the smallest-id init: because the centroid state is
@@ -1090,15 +1100,8 @@ def _kmeans_loop(
     # slower for this loop (kmeans_embeddings 3.13 → 3.53 s at sf0.1) —
     # the integer-state distance folds are too cheap to amortize the
     # extra exchange
-    q = (
-        emb.select(
-            F.col(id_col).alias("id"),
-            F.expr(
-                f"transform({vec_col}, x -> "
-                f"CAST(floor(CAST(x AS DOUBLE) * {KMEANS_SCALE}.0 + 0.5) AS BIGINT))"
-            ).alias("xi"),
-        )
-    ).localCheckpoint(eager=True)  # re-scored every iteration
+    q = emb.select(F.col(id_col).alias("id"), _quantize(vec_col).alias("xi"))
+    q = q.localCheckpoint(eager=True)  # re-scored every iteration
     cent = (
         init_cent
         if init_cent is not None
@@ -1106,28 +1109,50 @@ def _kmeans_loop(
             F.col("id").alias("k"), F.col("xi").alias("s"), F.lit(1).cast("long").alias("cnt")
         )
     )
+    return _lloyd(q, cent, iters)
+
+
+def _lloyd(
+    pts: DataFrame, cent: DataFrame, iters: int, keys: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame]:
+    """``iters`` exact-state Lloyd rounds of pts (*keys, id, xi) from
+    cent (*keys, k, s, cnt) → (last assignment (*keys, id, k), centroid
+    state updated from it). ``keys`` scopes every distance, assignment
+    and tiebreak: PQ passes ("j",) to train all subspaces in one loop.
+
+    asg and cent are checkpointed at every iteration boundary: asg feeds
+    three consumers (sums, cnt, next round or caller) and cent two, and
+    with the lineage uncut each re-derived the whole prior chain — PQ's
+    re-ran once for its codes and AGAIN for its lookup table, 11.6 s
+    cold at sf0.1 vs 4.5 s with the boundaries cut. Lazy, as in the
+    graph loops: the next consumer's job materializes the checkpoint,
+    so no extra job per boundary (ann_pq_adc_topk 28 → 24 jobs). Both
+    relations are tiny (a row per point, a row per (*keys, k))."""
+    on = list(keys) or None  # join(on=[]) raises; None is the cross join
+    w = Window.partitionBy(*keys, "id").orderBy(F.asc("dist"), F.asc("k"))
     asg = None
     for _ in range(iters):
-        w = Window.partitionBy("id").orderBy(F.asc("dist"), F.asc("k"))
         asg = (
-            q.join(F.broadcast(cent))
+            pts.join(F.broadcast(cent), on)
             .withColumn("dist", F.expr(_km_dist_expr("xi", "s", "cnt")))
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
-            .select("id", "k")
+            .select(*keys, "id", "k")
+            .localCheckpoint(eager=False)
         )
         sums = (
-            asg.join(q, "id")
-            .select("k", F.posexplode("xi").alias("dim", "x"))
-            .groupBy("k", "dim")
+            asg.join(pts, [*keys, "id"])
+            .select(*keys, "k", F.posexplode("xi").alias("dim", "x"))
+            .groupBy(*keys, "k", "dim")
             .agg(F.sum("x").alias("sd"))
         )
-        cnt = asg.groupBy("k").agg(F.count(F.lit(1)).alias("cnt"))
+        cnt = asg.groupBy(*keys, "k").agg(F.count(F.lit(1)).alias("cnt"))
         cent = (
-            sums.groupBy("k")
+            sums.groupBy(*keys, "k")
             .agg(F.array_sort(F.collect_list(F.struct("dim", "sd"))).alias("ps"))
-            .select("k", F.expr("transform(ps, p -> p.sd)").alias("s"))
-            .join(cnt, "k")
+            .select(*keys, "k", F.expr("transform(ps, p -> p.sd)").alias("s"))
+            .join(cnt, [*keys, "k"])
+            .localCheckpoint(eager=False)
         )
     return asg, cent
 
@@ -1237,13 +1262,7 @@ PQ_ITERS = 2    # Lloyd rounds per codebook
 
 def _pq_slices_col(vec_col: str) -> Column:
     return F.array(
-        *[
-            F.expr(
-                f"transform(slice({vec_col}, {j * PQ_SUB + 1}, {PQ_SUB}), x -> "
-                f"CAST(floor(CAST(x AS DOUBLE) * {KMEANS_SCALE}.0 + 0.5) AS BIGINT))"
-            )
-            for j in range(PQ_M)
-        ]
+        *[_quantize(f"slice({vec_col}, {j * PQ_SUB + 1}, {PQ_SUB})") for j in range(PQ_M)]
     )
 
 
@@ -1252,10 +1271,10 @@ def pq_train_encode(
 ) -> tuple[DataFrame, DataFrame]:
     """(codes, codebooks) — the PQ index build. All PQ_M codebooks train
     JOINTLY: vectors explode once into (subspace j, id, slice) rows and
-    ONE Lloyd loop runs over centroids keyed (j, k) — per-subspace math
-    is untouched (every distance, assignment, and tiebreak is scoped to
-    its j), but the driver issues one join + one aggregation per
-    iteration instead of PQ_M of each. Measured 10.0 s → 4.6 s at sf0.1
+    ONE Lloyd loop (_lloyd with keys=("j",)) runs over centroids keyed
+    (j, k) — per-subspace math is untouched (every distance, assignment,
+    and tiebreak is scoped to its j), but the driver issues one join +
+    one aggregation per iteration instead of PQ_M of each. Measured 10.0 s → 4.6 s at sf0.1
     (best-of-3, noop sink) against the loop-per-subspace form it
     replaced; the remainder is fixed stage-launch latency.
 
@@ -1278,42 +1297,7 @@ def pq_train_encode(
         "j", F.col("id").alias("k"), F.col("xi").alias("s"),
         F.lit(1).cast("long").alias("cnt"),
     )
-    asg = None
-    w = Window.partitionBy("j", "id").orderBy(F.asc("dist"), F.asc("k"))
-    for _ in range(PQ_ITERS):
-        # iteration-boundary checkpoints (round 10): asg feeds THREE
-        # consumers (sums, cnt, and next-round/codes) and cent two (next
-        # round's distance join, the final codebook LUT); with the
-        # lineage uncut every consumer re-derived the whole prior Lloyd
-        # chain — the chain re-ran once for codes and AGAIN for the LUT,
-        # 11.6 s cold end-to-end at sf0.1 vs 4.5 s with the boundaries
-        # cut. Lazy, as in the graph loops: the cut is the same, and the
-        # next consumer's job materializes the checkpoint instead of an
-        # extra internal job per checkpoint (ann_pq_adc_topk 28 → 24
-        # jobs). Both relations are tiny (corpus×PQ_M assignment rows,
-        # j·k centroid rows).
-        asg = (
-            sub.join(F.broadcast(cent), "j")
-            .withColumn("dist", F.expr(_km_dist_expr("xi", "s", "cnt")))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("j", "id", "k")
-            .localCheckpoint(eager=False)
-        )
-        sums = (
-            asg.join(sub, ["j", "id"])
-            .select("j", "k", F.posexplode("xi").alias("dim", "x"))
-            .groupBy("j", "k", "dim")
-            .agg(F.sum("x").alias("sd"))
-        )
-        cnt = asg.groupBy("j", "k").agg(F.count(F.lit(1)).alias("cnt"))
-        cent = (
-            sums.groupBy("j", "k")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "sd"))).alias("ps"))
-            .select("j", "k", F.expr("transform(ps, p -> p.sd)").alias("s"))
-            .join(cnt, ["j", "k"])
-            .localCheckpoint(eager=False)
-        )
+    asg, cent = _lloyd(sub, cent, PQ_ITERS, keys=("j",))
     codes = asg.groupBy("id").agg(
         *[
             F.max(F.when(F.col("j") == j, F.col("k"))).alias(f"code_{j}")
@@ -1443,11 +1427,12 @@ def ivfpq_topk(
 ) -> DataFrame:
     """IVFPQ — the production ANN index composition (FAISS's default at
     billion scale): a TRAINED coarse quantizer (full-vector exact-state
-    Lloyd, kmeans_assign) partitions the corpus into inverted lists;
-    queries probe their nprobe nearest cells; only vectors in probed
-    cells are ranked, and the ranking itself runs on PQ codes via the
-    ADC lookup table — so the scan touches neither the full corpus nor
-    any full vector.
+    Lloyd, one _kmeans_loop run that yields both the cell of every
+    vector and the centroids queries probe) partitions the corpus into
+    inverted lists; queries probe their nprobe nearest cells; only
+    vectors in probed cells are ranked, and the ranking itself runs on
+    PQ codes via the ADC lookup table — so the scan touches neither the
+    full corpus nor any full vector.
 
     Candidate volume is (probed-cell sizes) instead of n, and per
     candidate the cost is a LUT lookup instead of a d-dim fold: the two
@@ -1456,17 +1441,9 @@ def ivfpq_topk(
     deterministic exact-state arithmetic as their standalone tiers;
     recall vs exact L2 is bounded in tests (approximate BY DESIGN —
     cell pruning can drop true neighbors, the tested trade)."""
-    coarse_asg = kmeans_assign(emb, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("id"), F.col("cluster").alias("cell")
-    )
-    _, coarse_cent = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, id_col, vec_col)
-    qx = queries.select(
-        "query_id",
-        F.expr(
-            f"transform(query_vec, x -> "
-            f"CAST(floor(CAST(x AS DOUBLE) * {KMEANS_SCALE}.0 + 0.5) AS BIGINT))"
-        ).alias("xi"),
-    )
+    asg, coarse_cent = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, id_col, vec_col)
+    coarse_asg = asg.select("id", F.col("k").alias("cell"))
+    qx = queries.select("query_id", _quantize("query_vec").alias("xi"))
     w_cell = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("k"))
     probes = (
         qx.crossJoin(F.broadcast(coarse_cent))

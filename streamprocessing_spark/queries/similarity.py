@@ -984,19 +984,13 @@ def prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocessing_spark.operators.similarity import (
         KMEANS_ITERS,
         KMEANS_K,
-        KMEANS_SCALE,
         _kmeans_loop,
+        _quantize,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     asg, cent = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, "vec_id", "embedding")
-    q = emb.select(
-        "vec_id",
-        F.expr(
-            f"transform(embedding, x -> "
-            f"CAST(floor(CAST(x AS DOUBLE) * {KMEANS_SCALE}.0 + 0.5) AS BIGINT))"
-        ).alias("xi"),
-    )
+    q = emb.select("vec_id", _quantize("embedding").alias("xi"))
     # try_divide: a zero (quantized-to-zero) vector or a degenerate
     # centroid makes the norm product 0 — NULL cos_c mirrors DuckDB's
     # silent NULL and sorts last under the DESC prototypicality rank

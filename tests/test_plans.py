@@ -330,7 +330,9 @@ def test_lloyd_distance_stays_in_the_jvm(spark, sf_dir):
     """Every Lloyd distance is the Catalyst _km_dist_expr fold, never a
     Python kernel: at this slice length a Python exec node adds a stage
     and resident workers and returns the same doubles."""
-    for name in ("ann_pq_adc_topk", "kmeans_embeddings"):
+    for name in (
+        "ann_pq_adc_topk", "kmeans_embeddings", "ann_ivfpq_topk", "prototypicality_prune"
+    ):
         plan = X.formatted_plan(SPECS[name].fn(spark, sf_dir))
         for node in ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython"):
             assert node not in plan, (name, node, plan)

@@ -149,6 +149,22 @@ def test_km_dist_expr_matches_sequential_fold(spark):
     assert got[6] is got[7] is got[8] is None
 
 
+def test_ivfpq_trains_each_quantizer_once(spark, sf_dir, monkeypatch):
+    """IVFPQ takes its cells and its probe centroids from ONE coarse
+    Lloyd run, and its codes and codebooks from one PQ run."""
+    calls = {"_kmeans_loop": 0, "pq_train_encode": 0}
+    for name in calls:
+        orig = getattr(S, name)
+
+        def counted(*a, _orig=orig, _name=name, **kw):
+            calls[_name] += 1
+            return _orig(*a, **kw)
+
+        monkeypatch.setattr(S, name, counted)
+    SPECS["ann_ivfpq_topk"].fn(spark, sf_dir)
+    assert calls == {"_kmeans_loop": 1, "pq_train_encode": 1}
+
+
 @pytest.mark.slow
 def test_ivf_kmeans_recall_vs_brute_force(spark, sf_dir):
     """The trained-quantizer IVF tier must keep usable recall against the
