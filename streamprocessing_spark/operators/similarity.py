@@ -1074,7 +1074,7 @@ def kmeans_assign(
     simply drop out (both engines agree). At 100 TB this is exactly
     distributed Lloyd's: broadcast centroids, partial-sum combiners, no
     iteration barrier beyond the aggregation itself."""
-    asg, _ = _kmeans_loop(emb, k, iters, id_col, vec_col)
+    asg, _, _ = _kmeans_loop(emb, k, iters, id_col, vec_col)
     return asg.select(F.col("id").alias(id_col), F.col("k").cast("long").alias("cluster"))
 
 
@@ -1085,10 +1085,12 @@ def _kmeans_loop(
     id_col: str,
     vec_col: str,
     init_cent: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(final assignment (id, k), final (k, s, cnt) centroid state) —
-    the full-vector quantizer behind kmeans_assign, kmeans_centroids,
-    ivfpq_topk and prototypicality_prune.
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(final assignment (id, k), final (k, s, cnt) centroid state,
+    quantized points (id, xi)) — the full-vector quantizer behind
+    kmeans_assign, kmeans_centroids, ivfpq_topk and prototypicality_prune.
+    The points are the loop's eager checkpoint: a caller that needs xi
+    joins them instead of scanning and quantizing the corpus again.
 
     ``init_cent`` resumes training from a persisted (k, s, cnt) state
     table instead of the smallest-id init: because the centroid state is
@@ -1109,7 +1111,7 @@ def _kmeans_loop(
             F.col("id").alias("k"), F.col("xi").alias("s"), F.lit(1).cast("long").alias("cnt")
         )
     )
-    return _lloyd(q, cent, iters)
+    return (*_lloyd(q, cent, iters), q)
 
 
 def _lloyd(
@@ -1169,7 +1171,7 @@ def kmeans_centroids(
     exact (sum, count) state (one deterministic division per element).
     Feeds ivf_topk as a TRAINED coarse quantizer in place of its
     arbitrary smallest-id sample."""
-    _, cent = _kmeans_loop(emb, k, iters, id_col, vec_col)
+    _, cent, _ = _kmeans_loop(emb, k, iters, id_col, vec_col)
     return cent.select(
         F.col("k").alias("cent_id"),
         F.expr("transform(s, sv -> CAST(sv AS DOUBLE) / cnt)").alias("cent_vec"),
@@ -1441,7 +1443,7 @@ def ivfpq_topk(
     deterministic exact-state arithmetic as their standalone tiers;
     recall vs exact L2 is bounded in tests (approximate BY DESIGN —
     cell pruning can drop true neighbors, the tested trade)."""
-    asg, coarse_cent = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, id_col, vec_col)
+    asg, coarse_cent, _ = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, id_col, vec_col)
     coarse_asg = asg.select("id", F.col("k").alias("cell"))
     qx = queries.select("query_id", _quantize("query_vec").alias("xi"))
     w_cell = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("k"))

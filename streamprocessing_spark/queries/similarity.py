@@ -985,12 +985,10 @@ def prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         KMEANS_ITERS,
         KMEANS_K,
         _kmeans_loop,
-        _quantize,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    asg, cent = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, "vec_id", "embedding")
-    q = emb.select("vec_id", _quantize("embedding").alias("xi"))
+    asg, cent, q = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, "vec_id", "embedding")
     # try_divide: a zero (quantized-to-zero) vector or a degenerate
     # centroid makes the norm product 0 — NULL cos_c mirrors DuckDB's
     # silent NULL and sorts last under the DESC prototypicality rank
@@ -1004,8 +1002,8 @@ def prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(CAST(sv AS DOUBLE) / cnt) * (CAST(sv AS DOUBLE) / cnt)), 0.0D, (acc, v) -> acc + v))))"
     )
     scored = (
-        asg.withColumnRenamed("id", "vec_id")
-        .join(q, "vec_id")
+        asg.join(q, "id")
+        .withColumnRenamed("id", "vec_id")
         .join(F.broadcast(cent), "k")
         .select("vec_id", "k", cos_c.alias("cos_c"))
     )

@@ -338,6 +338,14 @@ def test_lloyd_distance_stays_in_the_jvm(spark, sf_dir):
             assert node not in plan, (name, node, plan)
 
 
+def test_prototypicality_prune_scans_the_corpus_once(spark, sf_dir):
+    """The scoring join reads the quantized points the Lloyd loop
+    already checkpointed: a Scan parquet here is a second full pass over
+    the embeddings and a second quantize."""
+    plan = X.formatted_plan(SPECS["prototypicality_prune"].fn(spark, sf_dir))
+    assert "Scan parquet" not in plan, plan
+
+
 def test_pit_join_is_one_exchange(spark, sf_dir):
     """The as-of window formulation must cost exactly one shuffle on the
     entity key (union is narrow; no join Exchange exists at all)."""

@@ -623,14 +623,14 @@ def test_kmeans_checkpoint_resume_is_bit_identical(spark, sf_dir, tmp_path):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    direct, _ = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, "vec_id", "embedding")
+    direct, _, _ = _kmeans_loop(emb, KMEANS_K, KMEANS_ITERS, "vec_id", "embedding")
     direct_rows = {(r.id, r.k) for r in direct.collect()}
 
-    _, cent1 = _kmeans_loop(emb, KMEANS_K, 1, "vec_id", "embedding")
+    _, cent1, _ = _kmeans_loop(emb, KMEANS_K, 1, "vec_id", "embedding")
     state = str(tmp_path / "cent_state")
     cent1.write.mode("overwrite").parquet(state)  # the checkpoint
     restored = spark.read.parquet(state)
-    resumed, _ = _kmeans_loop(
+    resumed, _, _ = _kmeans_loop(
         emb, KMEANS_K, KMEANS_ITERS - 1, "vec_id", "embedding", init_cent=restored
     )
     assert {(r.id, r.k) for r in resumed.collect()} == direct_rows

@@ -1,7 +1,7 @@
 """Dump .explain("formatted") for named queries into plans/<round>/ files.
 
 Usage:
-    python tools/plan_snapshot.py --suffix before [--round r11] query [...]
+    python tools/plan_snapshot.py --round r12 --suffix before query [...]
 
 Writes plans/<round>/<query>_<suffix>.txt for each query (sf0.01 inputs —
 plan shape, not data volume, is what the snapshot records).
@@ -24,7 +24,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--suffix", required=True)
-    ap.add_argument("--round", default="r11")
+    ap.add_argument("--round", required=True, help="plans/ subdirectory, e.g. r12")
     ap.add_argument("--out-root", default=None, help="repo to write plans under")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()

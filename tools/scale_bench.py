@@ -1,48 +1,63 @@
-"""Scale-curve bench for the top-cost operators.
+"""Scale curves for the top-cost operators.
 
-VERDICT r01 asked for measured evidence that the LSH tiers scale the way
-their docstrings claim (shuffle O(docs x bands), candidate pairs from
-band buckets — never all-pairs) before the 100x story is trusted. The
-driver ships sf0.1 at most, so this tool synthesizes a 10x "sf1.0 proxy"
-from sf0.1 and measures the sf0.1 -> sf1.0 wall-clock ratio of:
+The driver ships sf0.1 at most, so every growth curve beyond it is
+measured on proxies synthesized from it. One run picks one of four
+modes (134 query rows in all); each merges its rows into an artifact at
+the repo root, replacing only the rows it measured, so subset runs
+accumulate:
 
-- dedup_minhash_lsh   (documents, 10x rows)
-- dedup_simhash       (documents, 10x rows)
-- srp_lsh_cosine_pairs (embeddings, 10x rows)
-- copurchase_lift     (lineitem, 10x orders)
+- default: ``QUERIES`` (113) at sf0.1 and at the 10x "sf1.0 proxy"
+  (``.scalebench/sf1.0``), one wall-clock ratio each -> SCALEBENCH.json.
+- ``--graph100``: ``GRAPH_QUERIES`` (7) at x1/x10/x100 over the 100x
+  lineitem (``.scalebench/sf10.0``), with the growth exponent fitted on
+  the three log-log points -> SCALEBENCH100.json.
+- ``--dedup100``: ``DEDUP100_QUERIES`` (12) the same way over 100x
+  documents, plus 100x embeddings when an ``EMB100_QUERIES`` name runs.
+- ``--emb256``: ``EMB256_QUERIES`` (2) on a self-contained 256-dim
+  corpus (``.scalebench/emb256``), rows keyed ``<name>@256d``.
 
-Proxy construction (deterministic, no RNG):
-- documents: 10 replicas; replica k>0 suffixes every token with the
-  replica digit — intra-replica duplicate structure is preserved (the
-  corpus dup-rate stays constant, as a real bigger crawl would) while
-  cross-replica similarity is zero (no artificial 10-way dup blowup).
-- embeddings: 10 replicas; replica k multiplies element d by the sign
-  bit of md5(k, d) — norms and intra-replica pairwise similarities are
-  EXACTLY preserved (cos(v*p, w*p) == cos(v, w) for a shared +-1
-  pattern), while cross-replica cosines are near zero (the product
-  pattern p_k * p_j is itself a ~random +-1 vector). A rotation was
-  tried first and rejected: rotated copies keep substantial
-  autocorrelation with their originals, which inflated the true pair
-  count ~12x and made the operator look superlinear when the WORKLOAD
-  was superlinear.
-- lineitem: 10 replicas with BOTH keys shifted (order AND part) — 10x
-  orders and a 10x distinct-part universe with identical basket-size
-  distribution, so the pair join's O(orders x basket^2) driver AND the
-  co-purchase graph (distinct part pairs — what pagerank/BFS/components
-  traverse) both genuinely grow; shifting only the orderkey replicated
-  rows while leaving the graph unchanged, silently exempting the
-  iterative operators from the measurement.
+The replica law (deterministic, no RNG): each decade is the union of 10
+copies of its source table. Copy k adds k*step to every key column, so
+the copies' id spaces are disjoint; copies k>0 also get a tweak that
+decorrelates them from the others while keeping their own structure.
 
-A linear operator should land near ratio 10 (modulo fixed overheads,
-which push it BELOW 10 at these sizes); a quadratic one lands near 100.
+- documents: every token gets the replica number as a suffix. The
+  intra-replica duplicate structure (the corpus dup rate) is preserved,
+  as in a real bigger crawl, while cross-replica similarity is zero (no
+  artificial 10-way dup blowup).
+- embeddings: element d is multiplied by the sign bit of md5(salt, k,
+  d). Norms and intra-replica cosines are EXACTLY preserved
+  (cos(v*p, w*p) == cos(v, w) for a shared +-1 pattern p), while
+  cross-replica cosines are near zero (p_k * p_j is itself a ~random
+  +-1 vector). A rotation was tried first and rejected: rotated copies
+  keep substantial autocorrelation with their originals, which inflated
+  the true pair count ~12x and made the operator look superlinear when
+  the WORKLOAD was superlinear.
+- lineitem and events: no tweak, but BOTH keys shift (order AND part,
+  event AND user), so the distinct-part universe (the co-purchase graph
+  pagerank/BFS/components traverse) and the user universe grow with the
+  rows. Shifting only the orderkey replicated rows while leaving the
+  graph unchanged, silently exempting the iterative operators.
 
-Usage: python tools/scale_bench.py [--base /root/testdata/sf0.1]
-Prints one JSON line with per-query seconds at both scales and ratios.
+Every other table passes through unchanged; queries whose cost those
+tables drive are left out of the lists (their ratio would measure fixed
+overhead). A linear operator lands near 10x per decade (fixed overheads
+push it BELOW 10 at these sizes); a quadratic one near 100x.
+
+Usage:
+    python tools/scale_bench.py [--base SF_DIR] [--rebuild] [query ...]
+    python tools/scale_bench.py [--base SF_DIR] --graph100|--dedup100 [query ...]
+    python tools/scale_bench.py --emb256 [query ...]
+
+``--base`` defaults to the sf0.1 fixture; the query list defaults to the
+mode's own. Prints the merged artifact as one JSON line.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
+import hashlib
 import json
 import os
 import sys
@@ -55,6 +70,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from streamprocessing_spark.registry import all_specs  # noqa: E402
 from streamprocessing_spark.session import get_spark  # noqa: E402
+from streamprocessing_spark.shared_views import release_shared_views  # noqa: E402
 
 QUERIES = (
     "dedup_minhash_lsh",
@@ -321,8 +337,6 @@ def _base_fingerprint(base: str) -> str:
     base fixture at the same path — or a --rebuild — invalidates the 100x
     tree too (ADVICE r07: a path-only marker let x100 silently serve a
     corpus derived from the OLD base while x1/x10 measured the new one)."""
-    import hashlib
-
     h = hashlib.md5()
     for tbl in ("documents", "embeddings", "lineitem"):
         p = os.path.join(base, f"{tbl}.parquet")
@@ -336,12 +350,72 @@ def _base_fingerprint(base: str) -> str:
     return h.hexdigest()[:16]
 
 
+def _fresh(marker: str, key: str, build, what: str, table: str | None = None,
+           drops: tuple[str, ...] = (), force: bool = False) -> None:
+    """Run ``build`` unless ``marker`` holds ``key`` (and ``table``, when
+    given, exists). Interrupt-safe order: the ``drops`` (markers of trees
+    derived from this one) and the marker go FIRST and the marker is
+    written only after the build, so a failed or interrupted build leaves
+    the cache invalid, never a half-overwritten tree the next run
+    validates."""
+    if (not force and os.path.isfile(marker)
+            and (table is None or os.path.isdir(table))
+            and Path(marker).read_text().strip() == key):
+        return
+    for p in (*drops, marker):
+        if os.path.isfile(p):
+            os.remove(p)
+    print(f"building {what}...", file=sys.stderr)
+    build()
+    os.makedirs(os.path.dirname(marker), exist_ok=True)
+    Path(marker).write_text(key)
+
+
+def _replicas(df, n: int, shifts: dict[str, int], tweak=None):
+    """The replica law: the union of ``n`` copies of ``df``. Copy k adds
+    k*step to each ``shifts`` column; copies k>0 also get
+    ``tweak(copy, k)``."""
+    parts = []
+    for k in range(n):
+        d = df.withColumns({c: F.col(c) + F.lit(k * step) for c, step in shifts.items()})
+        parts.append(tweak(d, k) if k and tweak else d)
+    return functools.reduce(lambda a, b: a.unionByName(b), parts)
+
+
+def _suffix_tokens(fmt: str):
+    """Document tweak: every token becomes ``fmt`` (``$1`` is the token,
+    ``{k}`` the replica number), so replica-local shingles and minhashes
+    shift and cross-replica similarity drops to zero."""
+    return lambda d, k: d.withColumn(
+        "text", F.regexp_replace(F.col("text"), r"(\w+)", fmt.format(k=k))
+    )
+
+
+def _sign_flip(salt: str, dim: int):
+    """Embedding tweak: element i of copy k is multiplied by the sign bit
+    of md5(salt:k:i). Each decade has its own salt, so replicas of
+    replicas stay distinct."""
+    def flip(d, k):
+        signs = ", ".join(
+            "1.0D" if int(hashlib.md5(f"{salt}:{k}:{i}".encode()).hexdigest()[:2], 16) % 2
+            else "-1.0D"
+            for i in range(dim)
+        )
+        return d.withColumn("embedding", F.expr(
+            f"zip_with(embedding, array({signs}), (v, s) -> CAST(CAST(v AS DOUBLE) * s AS FLOAT))"
+        ))
+    return flip
+
+
 def build_proxy(spark, base: str, out: str) -> None:
-    docs = spark.read.parquet(f"{base}/documents.parquet")
-    emb = spark.read.parquet(f"{base}/embeddings.parquet")
-    li = spark.read.parquet(f"{base}/lineitem.parquet")
-    n_docs = docs.count()
-    n_emb = emb.count()
+    """The 10x proxy of ``base``: documents, embeddings, lineitem and
+    events replicated, the dimension tables passed through."""
+    src = {
+        t: spark.read.parquet(f"{base}/{t}.parquet")
+        for t in ("documents", "embeddings", "lineitem", "events")
+    }
+    n_docs = src["documents"].count()
+    n_emb = src["embeddings"].count()
     # the k*n_docs vec_id shift below is only collision-free when
     # n_emb <= n_docs; enforce the precondition instead of silently
     # minting duplicate vec_ids across replicas (ADVICE r07)
@@ -349,95 +423,29 @@ def build_proxy(spark, base: str, out: str) -> None:
         raise ValueError(
             f"proxy replica shift needs n_emb <= n_docs, got {n_emb} > {n_docs}"
         )
-
-    doc_parts = []
-    for k in range(REPLICAS):
-        d = docs.withColumn("doc_id", F.col("doc_id") + F.lit(k * n_docs))
-        if k:
-            # suffix every token with the replica digit: replica-local
-            # shingles/minhashes shift, cross-replica similarity -> 0
-            d = d.withColumn(
-                "text", F.regexp_replace(F.col("text"), r"(\w+)", rf"$1{k}")
-            )
-        doc_parts.append(d)
-    _union_all(doc_parts).coalesce(8).write.mode("overwrite").parquet(
-        f"{out}/documents.parquet"
-    )
-
-    import hashlib
-
-    dim = len(emb.select("embedding").head()[0])
-    emb_parts = []
-    for k in range(REPLICAS):
-        # shift by n_DOCS, not n_emb: vec_id joins doc_id (bitext mining
-        # takes lang labels through d.doc_id == emb.vec_id), and the
-        # fixture's alignment is vec i ↔ doc i. A k*n_emb shift landed
-        # replica-k VECTORS on replica-j DOCUMENTS (j = id div n_docs),
-        # scrambling the lang labeling across replicas — the workload
-        # still grew 10×, but its composition drifted from "10
-        # independent copies of the base task" (round-7 review finding).
-        # With k*n_docs the flipped replica vector pairs with the same
-        # base document's lang, n_emb ≤ n_docs keeps ids collision-free.
-        e = emb.withColumn("vec_id", F.col("vec_id") + F.lit(k * n_docs))
-        if k:
-            signs = [
-                1.0 if int(hashlib.md5(f"sb:{k}:{d}".encode()).hexdigest()[:2], 16) % 2 else -1.0
-                for d in range(dim)
-            ]
-            sign_arr = "array(" + ", ".join(f"{s}D" for s in signs) + ")"
-            e = e.withColumn(
-                "embedding",
-                F.expr(
-                    f"zip_with(embedding, {sign_arr},"
-                    " (v, s) -> CAST(CAST(v AS DOUBLE) * s AS FLOAT))"
-                ),
-            )
-        emb_parts.append(e)
-    _union_all(emb_parts).coalesce(8).write.mode("overwrite").parquet(
-        f"{out}/embeddings.parquet"
-    )
-
-    # shift BOTH keys per replica: orderkey alone would replicate rows but
-    # leave the distinct part universe — and thus the co-purchase graph
-    # (distinct part pairs) — unchanged, so graph operators (pagerank,
-    # lift's distinct pairs) would never actually grow 10×
-    li_parts = [
-        li.withColumn("l_orderkey", F.col("l_orderkey") + F.lit(k * 10_000_000))
-        .withColumn("l_partkey", F.col("l_partkey") + F.lit(k * 10_000_000))
-        for k in range(REPLICAS)
-    ]
-    _union_all(li_parts).coalesce(16).write.mode("overwrite").parquet(
-        f"{out}/lineitem.parquet"
-    )
-
-    # events: replicate with BOTH ids shifted (10x events over a 10x user
-    # universe, identical per-user temporal density) so behavioral
-    # operators (bitmaps, RLE, transitions) genuinely grow
-    ev = spark.read.parquet(f"{base}/events.parquet")
-    ev_parts = [
-        ev.withColumn("event_id", F.col("event_id") + F.lit(k * 10_000_000))
-        .withColumn("user_id", F.col("user_id") + F.lit(k * 10_000_000))
-        for k in range(REPLICAS)
-    ]
-    _union_all(ev_parts).coalesce(8).write.mode("overwrite").parquet(
-        f"{out}/events.parquet"
-    )
-
-    # remaining dimension tables pass through unchanged so every
-    # registered query can run against the proxy dir (ops whose cost is
-    # driven by these dimensions are deliberately NOT in QUERIES - their
-    # curves would measure nothing)
+    dim = len(src["embeddings"].select("embedding").head()[0])
+    # vec_id shifts by n_DOCS, not n_emb: vec_id joins doc_id (bitext
+    # mining takes lang labels through d.doc_id == emb.vec_id), and the
+    # fixture's alignment is vec i ↔ doc i. A k*n_emb shift landed
+    # replica-k VECTORS on replica-j DOCUMENTS (j = id div n_docs),
+    # scrambling the lang labeling across replicas — the workload still
+    # grew 10×, but its composition drifted from "10 independent copies
+    # of the base task" (round-7 review finding). With k*n_docs the
+    # flipped replica vector pairs with the same base document's lang.
+    big = 10_000_000
+    for t, shifts, tweak, parts in (
+        ("documents", {"doc_id": n_docs}, _suffix_tokens("$1{k}"), 8),
+        ("embeddings", {"vec_id": n_docs}, _sign_flip("sb", dim), 8),
+        ("lineitem", {"l_orderkey": big, "l_partkey": big}, None, 16),
+        ("events", {"event_id": big, "user_id": big}, None, 8),
+    ):
+        _replicas(src[t], REPLICAS, shifts, tweak).coalesce(parts).write.mode(
+            "overwrite"
+        ).parquet(f"{out}/{t}.parquet")
     for t in ("orders", "customer", "part", "supplier", "nation", "region"):
         spark.read.parquet(f"{base}/{t}.parquet").coalesce(4).write.mode(
             "overwrite"
         ).parquet(f"{out}/{t}.parquet")
-
-
-def _union_all(dfs):
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
 
 
 def time_query(spec, spark, sf_dir: str) -> tuple[float, int]:
@@ -467,18 +475,14 @@ PROXY100_DIR = str(Path(__file__).resolve().parent.parent / ".scalebench" / "sf1
 
 
 def build_proxy100(spark, proxy10: str, out: str) -> None:
-    """100x lineitem from 10 shifted replicas of the 10x proxy (the 10x
+    """100x lineitem from 10 replicas of the 10x proxy's (the 10x
     replicas occupy key ranges k*1e7; these shift by k*1e9 so all 100
     replica key spaces stay disjoint). Other tables pass through."""
     li = spark.read.parquet(f"{proxy10}/lineitem.parquet")
-    parts = [
-        li.withColumn("l_orderkey", F.col("l_orderkey") + F.lit(k * 1_000_000_000))
-        .withColumn("l_partkey", F.col("l_partkey") + F.lit(k * 1_000_000_000))
-        for k in range(10)
-    ]
-    _union_all(parts).coalesce(64).write.mode("overwrite").parquet(
-        f"{out}/lineitem.parquet"
-    )
+    big = 1_000_000_000
+    _replicas(li, 10, {"l_orderkey": big, "l_partkey": big}).coalesce(64).write.mode(
+        "overwrite"
+    ).parquet(f"{out}/lineitem.parquet")
     for t in ("orders", "customer", "part", "supplier", "nation", "region",
               "events", "documents", "embeddings"):
         spark.read.parquet(f"{proxy10}/{t}.parquet").write.mode(
@@ -559,58 +563,25 @@ EMB100_QUERIES = frozenset(
 
 
 def build_emb100(spark, proxy10: str, out: str) -> None:
-    """100x embeddings from 10 replicas of the 10x proxy's embeddings —
-    per-replica deterministic sign flips (norms preserved, cross-replica
-    cosine decorrelated) keyed by a second-level salt so replicas of
-    replicas stay distinct; vec_id shifted by the same 10M constant
+    """100x embeddings from 10 replicas of the 10x proxy's, sign-flipped
+    under a second-level salt; vec_id shifts by the same 10M constant
     build_docs100 uses for doc_id, preserving the 1:1 alignment the
     bitext/ANN queries join on."""
-    import hashlib
-
     emb = spark.read.parquet(f"{proxy10}/embeddings.parquet")
     dim = len(emb.select("embedding").head()[0])
-    parts = []
-    for k in range(10):
-        e = emb.withColumn("vec_id", F.col("vec_id") + F.lit(k * 10_000_000))
-        if k:
-            signs = [
-                1.0
-                if int(hashlib.md5(f"sb2:{k}:{d}".encode()).hexdigest()[:2], 16) % 2
-                else -1.0
-                for d in range(dim)
-            ]
-            sign_arr = "array(" + ", ".join(f"{s}D" for s in signs) + ")"
-            e = e.withColumn(
-                "embedding",
-                F.expr(
-                    f"zip_with(embedding, {sign_arr},"
-                    " (v, s) -> CAST(CAST(v AS DOUBLE) * s AS FLOAT))"
-                ),
-            )
-        parts.append(e)
-    _union_all(parts).coalesce(64).write.mode("overwrite").parquet(
-        f"{out}/embeddings.parquet"
-    )
+    _replicas(emb, 10, {"vec_id": 10_000_000}, _sign_flip("sb2", dim)).coalesce(
+        64
+    ).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
 
 
 def build_docs100(spark, proxy10: str, out: str) -> None:
-    """100x documents from 10 replicas of the 10x proxy's documents —
-    same construction law (token suffix per replica: intra-replica dup
-    structure preserved, cross-replica similarity ~0; ids shifted to a
-    disjoint range). Lets the count-scaled MinHash tier be measured
-    across TWO decades, including the r == RMAX saturated regime."""
+    """100x documents from 10 token-suffixed replicas of the 10x proxy's.
+    Lets the count-scaled MinHash tier be measured across TWO decades,
+    including the r == RMAX saturated regime."""
     docs = spark.read.parquet(f"{proxy10}/documents.parquet")
-    parts = []
-    for k in range(10):
-        d = docs.withColumn("doc_id", F.col("doc_id") + F.lit(k * 10_000_000))
-        if k:
-            d = d.withColumn(
-                "text", F.regexp_replace(F.col("text"), r"(\w+)", rf"$1x{k}")
-            )
-        parts.append(d)
-    _union_all(parts).coalesce(64).write.mode("overwrite").parquet(
-        f"{out}/documents.parquet"
-    )
+    _replicas(docs, 10, {"doc_id": 10_000_000}, _suffix_tokens("$1x{k}")).coalesce(
+        64
+    ).write.mode("overwrite").parquet(f"{out}/documents.parquet")
 
 
 # --- 256-dim sparse-regime proxy for the THRESHOLD-PAIR tiers --------------
@@ -633,8 +604,6 @@ EMB256_N, EMB256_DIM = 2000, 256  # x1 matches the sf0.1 embeddings count
 
 
 def build_emb256(spark) -> None:
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
@@ -653,38 +622,15 @@ def build_emb256(spark) -> None:
             "label": (np.arange(EMB256_N) % 10).astype(np.int32),
         }
     )
-    x1 = f"{EMB256_DIR}/x1"
     spark.createDataFrame(pdf).coalesce(4).write.mode("overwrite").parquet(
-        f"{x1}/embeddings.parquet"
+        f"{EMB256_DIR}/x1/embeddings.parquet"
     )
-
-    def replicate(src: str, out: str, shift: int, salt: str) -> None:
-        emb = spark.read.parquet(f"{src}/embeddings.parquet")
-        parts = []
-        for k in range(10):
-            e = emb.withColumn("vec_id", F.col("vec_id") + F.lit(k * shift))
-            if k:
-                signs = [
-                    1.0
-                    if int(hashlib.md5(f"{salt}:{k}:{d}".encode()).hexdigest()[:2], 16) % 2
-                    else -1.0
-                    for d in range(EMB256_DIM)
-                ]
-                sign_arr = "array(" + ", ".join(f"{s}D" for s in signs) + ")"
-                e = e.withColumn(
-                    "embedding",
-                    F.expr(
-                        f"zip_with(embedding, {sign_arr},"
-                        " (v, s) -> CAST(CAST(v AS DOUBLE) * s AS FLOAT))"
-                    ),
-                )
-            parts.append(e)
-        _union_all(parts).coalesce(32).write.mode("overwrite").parquet(
-            f"{out}/embeddings.parquet"
-        )
-
-    replicate(x1, f"{EMB256_DIR}/x10", EMB256_N, "e256a")
-    replicate(f"{EMB256_DIR}/x10", f"{EMB256_DIR}/x100", 10 * EMB256_N, "e256b")
+    for src, out, shift, salt in (("x1", "x10", EMB256_N, "e256a"),
+                                  ("x10", "x100", 10 * EMB256_N, "e256b")):
+        emb = spark.read.parquet(f"{EMB256_DIR}/{src}/embeddings.parquet")
+        _replicas(emb, 10, {"vec_id": shift}, _sign_flip(salt, EMB256_DIM)).coalesce(
+            32
+        ).write.mode("overwrite").parquet(f"{EMB256_DIR}/{out}/embeddings.parquet")
 
 
 def run_emb256(spark, queries: list[str]) -> None:
@@ -692,48 +638,14 @@ def run_emb256(spark, queries: list[str]) -> None:
     sparse-regime corpus; rows land in SCALEBENCH100.json keyed
     ``<name>@256d`` so the 64-dim stress rows stay as the labeled
     degenerate case."""
-    marker = f"{EMB256_DIR}/.v"
-    fresh = (
-        os.path.isdir(f"{EMB256_DIR}/x100/embeddings.parquet")
-        and os.path.isfile(marker)
-        and open(marker).read().strip() == EMB256_V
+    _fresh(f"{EMB256_DIR}/.v", EMB256_V, lambda: build_emb256(spark),
+           "256-dim embeddings fixtures", table=f"{EMB256_DIR}/x100/embeddings.parquet")
+    rows = _run_decades(
+        spark, queries, [f"{EMB256_DIR}/x{s}" for s in (1, 10, 100)], key_suffix="@256d",
+        extra={"dim": EMB256_DIM, "regime": "sparse (theta=0.45 at 7.2 sigma)"},
     )
-    if not fresh:
-        if os.path.isfile(marker):
-            os.remove(marker)
-        print("building 256-dim embeddings fixtures...", file=sys.stderr)
-        build_emb256(spark)
-        with open(marker, "w") as fh:
-            fh.write(EMB256_V)
-
-    specs = all_specs()
-    result: dict = {"scales": [1, 10, 100], "base": f"{EMB256_DIR}/x1", "queries": {}}
-    for name in queries:
-        spec = specs[name]
-        time_query(spec, spark, f"{EMB256_DIR}/x1")  # warm
-        rows = {"dim": EMB256_DIM, "regime": "sparse (theta=0.45 at 7.2 sigma)"}
-        ts = []
-        for label, nparts in (("x1", 32), ("x10", 64), ("x100", 256)):
-            spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-            secs, nrows = time_query(spec, spark, f"{EMB256_DIR}/{label}")
-            rows[label] = {"sec": round(secs, 2), "rows": nrows}
-            ts.append(secs)
-            print(f"# {name}@256d {label}: {secs:.2f}s ({nrows} rows)", file=sys.stderr)
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        expo = fit_exponent([1.0, 10.0, 100.0], ts)
-        rows["fitted_exponent"] = round(expo, 3)
-        result["queries"][f"{name}@256d"] = rows
-        print(f"# {name}@256d: exponent {expo:.3f}", file=sys.stderr)
-    out = Path(__file__).resolve().parent.parent / "SCALEBENCH100.json"
-    if out.is_file():
-        prior = json.loads(out.read_text())
-        merged = dict(prior.get("queries", {}))
-        merged.update(result["queries"])
-        result["queries"] = merged
-        result["scales"] = prior.get("scales", result["scales"])
-        result["base"] = prior.get("base", result["base"])
-    out.write_text(json.dumps(result, indent=1) + "\n")
-    print(json.dumps(result))
+    _merge_write(Path(__file__).resolve().parents[1] / "SCALEBENCH100.json",
+                 {"scales": [1, 10, 100], "queries": rows})
 
 
 def _ensure_proxy100_fresh(spark) -> None:
@@ -744,80 +656,31 @@ def _ensure_proxy100_fresh(spark) -> None:
     while x1/x10 measure the new one (round-7 review finding: the old
     per-family markers checked only their own existence)."""
     src_m = f"{PROXY_DIR}/.base"
-    cur = open(src_m).read().strip() if os.path.isfile(src_m) else "unknown"
-    marker = f"{PROXY100_DIR}/.src"
-    fresh = (
-        os.path.isdir(f"{PROXY100_DIR}/lineitem.parquet")
-        and os.path.isfile(marker)
-        and open(marker).read().strip() == cur
-    )
-    if not fresh:
-        for fam in (".docs100", ".emb100", ".src"):
-            p = f"{PROXY100_DIR}/{fam}"
-            if os.path.isfile(p):
-                os.remove(p)
-        print("building 100x lineitem proxy...", file=sys.stderr)
-        build_proxy100(spark, PROXY_DIR, PROXY100_DIR)
-        with open(marker, "w") as fh:
-            fh.write(cur)
+    cur = Path(src_m).read_text().strip() if os.path.isfile(src_m) else "unknown"
+    _fresh(f"{PROXY100_DIR}/.src", cur, lambda: build_proxy100(spark, PROXY_DIR, PROXY100_DIR),
+           "100x lineitem proxy", table=f"{PROXY100_DIR}/lineitem.parquet",
+           drops=(f"{PROXY100_DIR}/.docs100", f"{PROXY100_DIR}/.emb100"))
 
 
 def run_dedup100(spark, base: str, queries: list[str]) -> None:
     """1x/10x/100x curve for documents-driven dedup tiers (the graph100
     pattern applied to the round-6 count-scaled MinHash tier)."""
     _ensure_proxy100_fresh(spark)
-    marker = f"{PROXY100_DIR}/.docs100"
-    if not os.path.isfile(marker):
-        print("building 100x documents proxy...", file=sys.stderr)
-        build_docs100(spark, PROXY_DIR, PROXY100_DIR)
-        with open(marker, "w") as fh:
-            fh.write("v1")
+    _fresh(f"{PROXY100_DIR}/.docs100", "v1",
+           lambda: build_docs100(spark, PROXY_DIR, PROXY100_DIR), "100x documents proxy")
     if any(q in EMB100_QUERIES for q in queries):
-        emb_marker = f"{PROXY100_DIR}/.emb100"
-        if not os.path.isfile(emb_marker):
-            print("building 100x embeddings proxy...", file=sys.stderr)
-            build_emb100(spark, PROXY_DIR, PROXY100_DIR)
-            with open(emb_marker, "w") as fh:
-                fh.write("v1")
-    from streamprocessing_spark.shared_views import release_shared_views
+        _fresh(f"{PROXY100_DIR}/.emb100", "v1",
+               lambda: build_emb100(spark, PROXY_DIR, PROXY100_DIR), "100x embeddings proxy")
+    rows = _run_decades(spark, queries, (base, PROXY_DIR, PROXY100_DIR), cold=COLD_CASCADE)
+    _merge_write(Path(__file__).resolve().parents[1] / "SCALEBENCH100.json",
+                 {"scales": [1, 10, 100], "base": base, "queries": rows})
 
-    specs = all_specs()
-    result: dict = {"scales": [1, 10, 100], "base": base, "queries": {}}
-    for name in queries:
-        spec = specs[name]
-        cold = name in COLD_CASCADE
-        time_query(spec, spark, base)  # warm
-        rows = {}
-        ts = []
-        for label, d, nparts in (("x1", base, 32), ("x10", PROXY_DIR, 64),
-                                 ("x100", PROXY100_DIR, 256)):
-            spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-            if cold:
-                release_shared_views(spark)
-            secs, nrows = time_query(spec, spark, d)
-            rows[label] = {"sec": round(secs, 2), "rows": nrows}
-            ts.append(secs)
-            print(f"# {name} {label}: {secs:.2f}s ({nrows} rows)", file=sys.stderr)
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        if cold:
-            # ...and release AFTER the last timed run too: the x100
-            # pair/component caches would otherwise stay pinned through
-            # every later query's measurement, skewing their exponents
-            # with storage-memory pressure (round-7 review finding)
-            release_shared_views(spark)
-        expo = fit_exponent([1.0, 10.0, 100.0], ts)
-        rows["fitted_exponent"] = round(expo, 3)
-        result["queries"][name] = rows
-        print(f"# {name}: exponent {expo:.3f}", file=sys.stderr)
-    out = Path(__file__).resolve().parent.parent / "SCALEBENCH100.json"
-    if out.is_file():
-        prior = json.loads(out.read_text())
-        merged = dict(prior.get("queries", {}))
-        merged.update(result["queries"])
-        result["queries"] = merged
-        result["scales"] = prior.get("scales", result["scales"])
-    out.write_text(json.dumps(result, indent=1) + "\n")
-    print(json.dumps(result))
+
+def run_graph100(spark, base: str, queries: list[str]) -> None:
+    _ensure_proxy100_fresh(spark)
+    rows = _run_decades(spark, queries, (base, PROXY_DIR, PROXY100_DIR))
+    _merge_write(Path(__file__).resolve().parents[1] / "SCALEBENCH100.json",
+                 {"scales": [1, 10, 100], "base": base, "queries": rows})
 
 
 def fit_exponent(ns: list[float], ts: list[float]) -> float:
@@ -834,39 +697,54 @@ def fit_exponent(ns: list[float], ts: list[float]) -> float:
     return num / den
 
 
-def run_graph100(spark, base: str, queries: list[str]) -> None:
-    _ensure_proxy100_fresh(spark)
+def _run_decades(spark, names, rungs, *, cold=frozenset(), key_suffix="", extra=None) -> dict:
+    """Time each query at the x1/x10/x100 ``rungs`` (one sf dir each)
+    after a warm run at the first, and fit its growth exponent; returns
+    ``{name + key_suffix: row}``, each row ``extra`` plus a
+    ``{"sec", "rows"}`` entry per rung and ``fitted_exponent``.
+
+    Queries in ``cold`` run with the shared views released before every
+    timed run, and once more after the last: their fn rides memoized
+    views, so x1 would otherwise measure a cached read while x100
+    measures the build, and the x100 caches would stay pinned through
+    every later query's measurement (round-7 review finding)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     specs = all_specs()
-    result: dict = {"scales": [1, 10, 100], "base": base, "queries": {}}
-    for name in queries:
-        spec = specs[name]
-        time_query(spec, spark, base)  # warm
-        rows = {}
-        ts = []
-        for label, d, n, nparts in (("x1", base, 1.0, 32), ("x10", PROXY_DIR, 10.0, 64),
-                                    ("x100", PROXY100_DIR, 100.0, 256)):
-            # partition count scales with the data — the discipline a real
-            # cluster applies (static 32 partitions OOM'd pagerank's
+    out = {}
+    for name in names:
+        spec, key = specs[name], name + key_suffix
+        time_query(spec, spark, rungs[0])  # warm
+        row, ts = dict(extra or {}), []
+        for (label, nparts), sf_dir in zip((("x1", 32), ("x10", 64), ("x100", 256)), rungs):
+            # partition count scales with the data — the discipline a
+            # real cluster applies (static 32 partitions OOM'd pagerank's
             # per-round join at 100x: per-partition hash state outgrew
             # execution memory; 256 partitions of the same join fit)
             spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-            secs, nrows = time_query(spec, spark, d)
-            rows[label] = {"sec": round(secs, 2), "rows": nrows}
+            if name in cold:
+                release_shared_views(spark)
+            secs, nrows = time_query(spec, spark, sf_dir)
+            row[label] = {"sec": round(secs, 2), "rows": nrows}
             ts.append(secs)
-            print(f"# {name} {label}: {secs:.2f}s ({nrows} rows)", file=sys.stderr)
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+            print(f"# {key} {label}: {secs:.2f}s ({nrows} rows)", file=sys.stderr)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if name in cold:
+            release_shared_views(spark)
         expo = fit_exponent([1.0, 10.0, 100.0], ts)
-        rows["fitted_exponent"] = round(expo, 3)
-        result["queries"][name] = rows
-        print(f"# {name}: exponent {expo:.3f}", file=sys.stderr)
-    out = Path(__file__).resolve().parent.parent / "SCALEBENCH100.json"
-    # merge with prior runs so the family can be measured in chunks
-    if out.is_file():
-        prior = json.loads(out.read_text())
-        merged = dict(prior.get("queries", {}))
-        merged.update(result["queries"])
-        result["queries"] = merged
-    out.write_text(json.dumps(result, indent=1) + "\n")
+        row["fitted_exponent"] = round(expo, 3)
+        out[key] = row
+        print(f"# {key}: exponent {expo:.3f}", file=sys.stderr)
+    return out
+
+
+def _merge_write(path: Path, result: dict) -> None:
+    """Merge this run into the artifact at ``path`` so subset runs
+    accumulate: rows merge, a new row replacing the prior row of its
+    name, and this run's top-level fields overwrite the prior ones."""
+    prior = json.loads(path.read_text()) if path.is_file() else {}
+    result = {**prior, **result,
+              "queries": {**prior.get("queries", {}), **result["queries"]}}
+    path.write_text(json.dumps(result, indent=1) + "\n")
     print(json.dumps(result))
 
 
@@ -894,7 +772,6 @@ def main() -> None:
     # the cached proxy is only valid for the base it was derived from —
     # key the cache on the base path so `--base X` after a run with base Y
     # rebuilds instead of silently measuring against a stale proxy
-    marker = f"{PROXY_DIR}/.base"
     # the key embeds a proxy-format version: bump it whenever build_proxy
     # changes so proxies built by older code self-invalidate (a stale
     # pre-partkey-shift proxy would silently exempt the graph operators
@@ -907,27 +784,13 @@ def main() -> None:
     # corpora in BOTH the regenerated-base and --rebuild cases instead of
     # only on a path change.
     base_key = f"v4:{os.path.abspath(args.base)}:{_base_fingerprint(args.base)}"
-    stale = True
-    if os.path.isdir(f"{PROXY_DIR}/documents.parquet") and os.path.isfile(marker):
-        with open(marker) as fh:
-            stale = fh.read().strip() != base_key
-    if args.rebuild or stale:
-        # drop the marker FIRST: a failed/interrupted build must leave the
-        # cache invalid, not a half-overwritten mixed-base proxy that the
-        # next run validates
-        if os.path.isfile(marker):
-            os.remove(marker)
-        # an explicit --rebuild with an UNCHANGED base re-derives the 10x
-        # proxy under the same key; the 100x tree derived from the old
-        # build must not survive it — drop its .src so the next 100x run
-        # rebuilds from the fresh proxy
-        src100 = f"{PROXY100_DIR}/.src"
-        if os.path.isfile(src100):
-            os.remove(src100)
-        build_proxy(spark, args.base, PROXY_DIR)
-        os.makedirs(PROXY_DIR, exist_ok=True)
-        with open(marker, "w") as fh:
-            fh.write(base_key)
+    # an explicit --rebuild with an UNCHANGED base re-derives the 10x
+    # proxy under the same key; the 100x tree derived from the old build
+    # must not survive it — its .src goes too, so the next 100x run
+    # rebuilds from the fresh proxy
+    _fresh(f"{PROXY_DIR}/.base", base_key, lambda: build_proxy(spark, args.base, PROXY_DIR),
+           "10x proxy", table=f"{PROXY_DIR}/documents.parquet",
+           drops=(f"{PROXY100_DIR}/.src",), force=args.rebuild)
 
     if args.graph100:
         run_graph100(spark, args.base, args.queries or list(GRAPH_QUERIES))
@@ -936,8 +799,6 @@ def main() -> None:
     if args.dedup100:
         run_dedup100(spark, args.base, args.queries or list(DEDUP100_QUERIES))
         return
-
-    from streamprocessing_spark.shared_views import release_shared_views
 
     specs = all_specs()
     result: dict = {"base_sf": 0.1, "proxy_sf": 1.0, "queries": {}}
@@ -970,16 +831,7 @@ def main() -> None:
         }
         print(f"# {name}: {small_s:.2f}s -> {big_s:.2f}s (x{big_s / small_s:.1f})",
               file=sys.stderr)
-    # merge into SCALEBENCH.json so subset runs accumulate (the graph100
-    # path already does this; the manual-merge era ends here)
-    out = Path(__file__).resolve().parent.parent / "SCALEBENCH.json"
-    if out.is_file():
-        prior = json.loads(out.read_text())
-        merged = dict(prior.get("queries", {}))
-        merged.update(result["queries"])
-        result["queries"] = merged
-    out.write_text(json.dumps(result, indent=1) + "\n")
-    print(json.dumps(result))
+    _merge_write(Path(__file__).resolve().parents[1] / "SCALEBENCH.json", result)
 
 
 if __name__ == "__main__":
