@@ -17,8 +17,9 @@ plus two conveniences the reference lacks:
 Op arguments resolve to engine operators:
 - a path to an executable → ExecOp (the reference's literal argv/stdout
   contract; existing op binaries run unchanged),
-- a built-in name (app1op1, app1op2, app2op1, app2op2) → PluginOp (the
-  same semantics in-process, ~10^4× cheaper than fork/exec).
+- a built-in name (app1op1, app1op2, app2op1, app2op2) → PluginOp under
+  the op's declared contract (engine.py; the same semantics in-process,
+  ~10^4× cheaper than fork/exec).
 
 The source file is read line-by-line like the reference's HyDFS replay
 (rainstorm/server.go:411-448); keys are ``<basename>:<row id>`` — a
@@ -38,16 +39,16 @@ import sys
 from streamprocessing_spark import engine as E
 
 _BUILTIN_OPS = {
-    "app1op1": lambda: E.PluginOp(E.app1_op1),
-    "app1op2": lambda: E.PluginOp(E.app1_op2),
-    "app2op1": lambda: E.PluginOp(E.app2_op1),
-    "app2op2": lambda: E.PluginOp(E.app2_op2),
+    "app1op1": E.app1_op1,
+    "app1op2": E.app1_op2,
+    "app2op1": E.app2_op1,
+    "app2op2": E.app2_op2,
 }
 
 
 def _resolve_op(arg: str) -> E.Op:
     if arg in _BUILTIN_OPS:
-        return _BUILTIN_OPS[arg]()
+        return E.PluginOp.declared(_BUILTIN_OPS[arg])
     if os.path.isfile(arg) and os.access(arg, os.X_OK):
         return E.ExecOp(os.path.abspath(arg))
     raise SystemExit(

@@ -26,6 +26,14 @@ flavors:
   reference; count-keyed records are aggregated and re-emitted as
   (key, running-total-as-string) records.
 
+Each shipped op has one fixed output kind, as each reference op binary
+does (ops/*): app1_op1, app1_op2, app2_op1 and their ``vec_*`` twins
+emit, app2_op2 and vec_app2_op2 count. That contract is declared once,
+by ``@_declares`` on the callable at the bottom of this module, and
+``PluginOp.declared`` / ``BatchPluginOp.declared`` build an op under it.
+A narrowed contract plans one branch with no persist; a record of the
+other kind fails the task rather than being dropped.
+
 Everything the reference's engine did besides the ops — task placement,
 per-record RPC + ack + retry, WAL, dedup, failure recovery
 (server.go:186-408) — is deliberately absent: Spark's scheduler, shuffle
@@ -62,6 +70,13 @@ _TAGGED_SCHEMA = StructType(
         StructField("value", StringType()),
     ]
 )
+# The record kinds each contract admits (see PluginOp.contract).
+_KINDS = {"mixed": ("emit", "count"), "emit": ("emit",), "count": ("count",)}
+
+
+def _wrong_kind(fn, kind: str, contract: str) -> ValueError:
+    name = getattr(fn, "__name__", repr(fn))
+    return ValueError(f"op {name} returned a {kind!r} record under contract {contract!r}")
 
 
 @dataclass(frozen=True)
@@ -91,14 +106,22 @@ class PluginOp:
       correctness checker (and genuinely mixes append/update semantics).
     The reference never needed the distinction because its sink printed
     whatever arrived; Spark's sink modes make the contract explicit.
+    A narrowed contract is enforced: a record of the other kind fails the
+    task instead of being dropped.
     """
 
     fn: PluginFn
     contract: str = "mixed"
 
+    @classmethod
+    def declared(cls, fn: PluginFn) -> PluginOp:
+        """``fn`` under the contract its ``@_declares`` states."""
+        return cls(fn, fn.contract)
+
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
         ensure_shippable()
-        fn = self.fn
+        fn, contract = self.fn, self.contract
+        counts_ok, emits_ok = "count" in _KINDS[contract], "emit" in _KINDS[contract]
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             guard_zip_caches()
@@ -113,10 +136,14 @@ class PluginOp:
                     if r is None:
                         continue
                     if isinstance(r, str):
+                        if not counts_ok:
+                            raise _wrong_kind(fn, "count", contract)
                         kinds.append("count")
                         keys.append(r)
                         vals.append("")
                     else:
+                        if not emits_ok:
+                            raise _wrong_kind(fn, "emit", contract)
                         for nk, nv in r:
                             kinds.append("emit")
                             keys.append(nk)
@@ -124,11 +151,12 @@ class PluginOp:
                 yield pd.DataFrame({"kind": kinds, "key": keys, "value": vals})
 
         tagged = records.mapInPandas(kernel, _TAGGED_SCHEMA)
-        return _collapse_tagged(tagged, self.contract)
+        return _collapse_tagged(tagged, contract)
 
 
 class _PluginCacheRegistry:
-    """Mixed-contract tagged caches awaiting eviction, oldest first. The
+    """Mixed-contract tagged caches awaiting eviction, oldest first (ops
+    under a narrowed contract plan one branch and persist nothing). The
     cache must outlive _collapse_tagged (the returned union is lazy — the
     caller materializes it later), so eviction is deferred: a long-lived
     session calls release_plugin_caches() between jobs, and the registry
@@ -214,20 +242,21 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def _count_keys(tagged: DataFrame) -> DataFrame:
+    return tagged.groupBy("key").agg(F.count(F.lit(1)).cast("string").alias("value"))
+
+
 def _collapse_tagged(tagged: DataFrame, contract: str = "mixed") -> DataFrame:
     """Tagged (kind, key, value) stream → the op's output records:
     'emit' rows pass through, 'count' rows aggregate to
     (key, total-as-string) — the framework half of the stdout contract
-    (server.go:334-361). A static 'emit'/'count' contract drops the
-    other branch entirely (see PluginOp.contract)."""
+    (server.go:334-361). Under a static 'emit'/'count' contract the
+    kernel has already refused every record of the other kind, so the
+    stream is that one branch (see PluginOp.contract)."""
     if contract == "emit":
-        return tagged.where(F.col("kind") == "emit").select("key", "value")
+        return tagged.select("key", "value")
     if contract == "count":
-        return (
-            tagged.where(F.col("kind") == "count")
-            .groupBy("key")
-            .agg(F.count(F.lit(1)).cast("string").alias("value"))
-        )
+        return _count_keys(tagged)
     # Both union branches consume `tagged`; without a persist each
     # branch re-executes the Python kernel over the full input (2× per
     # op, 4× for two chained PluginOps), and a non-deterministic user
@@ -239,11 +268,7 @@ def _collapse_tagged(tagged: DataFrame, contract: str = "mixed") -> DataFrame:
         tagged = tagged.persist()
         _PLUGIN_CACHES.add(tagged)
     emits = tagged.where(F.col("kind") == "emit").select("key", "value")
-    counts = (
-        tagged.where(F.col("kind") == "count")
-        .groupBy("key")
-        .agg(F.count(F.lit(1)).cast("string").alias("value"))
-    )
+    counts = _count_keys(tagged.where(F.col("kind") == "count"))
     # Either side may be empty; the union keeps the mixed-contract
     # semantics of the reference framework.
     return emits.unionByName(counts)
@@ -266,27 +291,33 @@ class BatchPluginOp:
     (regex filters, CSV projections, passthrough counts): the hot loop
     becomes pandas column ops over Arrow batches while the RainStormJob
     facade, count aggregation, and mixed-contract union stay identical.
-    Measured ~1.2× end-to-end at sf0.1 (150k rows, 4-core box, median
-    of 5: 0.99 s vectorized vs 1.17 s plugin for App-2 — fixed job
-    overhead dominates there); the eliminated cost is the per-record
-    Python loop, which grows linearly with rows while the batch ops stay vectorized,
-    so the gap widens with scale (bench pair: rainstorm_vectorized_app2
-    vs rainstorm_plugin_app2)."""
+    The eliminated cost is the per-record Python loop, which grows
+    linearly with rows while the batch ops stay vectorized (bench pair:
+    rainstorm_vectorized_app2 vs rainstorm_plugin_app2)."""
 
     fn: BatchPluginFn
     contract: str = "mixed"  # same semantics as PluginOp.contract
 
+    @classmethod
+    def declared(cls, fn: BatchPluginFn) -> BatchPluginOp:
+        """``fn`` under the contract its ``@_declares`` states."""
+        return cls(fn, fn.contract)
+
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
         ensure_shippable()
-        fn = self.fn
+        fn, contract = self.fn, self.contract
+        kinds = list(_KINDS[contract])
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             guard_zip_caches()
             for pdf in batches:
                 out = fn(pdf, pattern)
+                wrong = ~out["kind"].isin(kinds)
+                if wrong.any():
+                    raise _wrong_kind(fn, out["kind"][wrong].iloc[0], contract)
                 yield out[["kind", "key", "value"]]
 
-        return _collapse_tagged(records.mapInPandas(kernel, _TAGGED_SCHEMA), self.contract)
+        return _collapse_tagged(records.mapInPandas(kernel, _TAGGED_SCHEMA), contract)
 
 
 def exec_op_record(exe: str, key: str, value: str, pattern: str | None):
@@ -377,7 +408,19 @@ class RainStormJob:
 # ---------------------------------------------------------------------------
 # The four shipped operator executables, re-expressed as plugin callables
 # (the plugin path exists to run arbitrary user code; these four are also
-# trivially expressible as NativeOps).
+# trivially expressible as NativeOps). ``@_declares`` states each one's
+# contract, the one place it is written down.
+
+
+def _declares(contract: str):
+    """Record ``contract`` as the op callable's fixed output kind, for
+    PluginOp.declared / BatchPluginOp.declared."""
+
+    def declare(fn):
+        fn.contract = contract
+        return fn
+
+    return declare
 
 
 def parse_csv_line(value: str) -> list[str]:
@@ -387,17 +430,20 @@ def parse_csv_line(value: str) -> list[str]:
     return next(csv.reader(io.StringIO(value)))
 
 
+@_declares("emit")
 def app1_op1(key: str, value: str, pattern: str | None):
     """Substring filter (ops/app1op1/app1op1.go:9-18)."""
     return [(key, value)] if pattern is not None and pattern in value else None
 
 
+@_declares("emit")
 def app1_op2(key: str, value: str, pattern: str | None):
     """CSV projection to (col2, col3) (ops/app1op2/app1op2.go:10-19)."""
     row = parse_csv_line(value)
     return [(row[2], row[3])]
 
 
+@_declares("emit")
 def app2_op1(key: str, value: str, pattern: str | None):
     """Equality filter on col6, project (col8, "1")
     (ops/app2op1/app2op1.go:10-22)."""
@@ -405,6 +451,7 @@ def app2_op1(key: str, value: str, pattern: str | None):
     return [(row[8], "1")] if row[6] == pattern else None
 
 
+@_declares("count")
 def app2_op2(key: str, value: str, pattern: str | None):
     """Key passthrough → count path (ops/app2op2/app2op2.go:8-14)."""
     return key
@@ -452,6 +499,7 @@ def _tagged(kind: str, keys, vals) -> pd.DataFrame:
     )
 
 
+@_declares("emit")
 def vec_app1_op1(pdf: pd.DataFrame, pattern: str | None) -> pd.DataFrame:
     """Vectorized substring filter (app1op1): one str.contains over the
     batch."""
@@ -462,6 +510,7 @@ def vec_app1_op1(pdf: pd.DataFrame, pattern: str | None) -> pd.DataFrame:
     return _tagged("emit", kept["key"], kept["value"])
 
 
+@_declares("emit")
 def vec_app1_op2(pdf: pd.DataFrame, pattern: str | None) -> pd.DataFrame:
     """Vectorized CSV projection to (col2, col3) (app1op2)."""
     if pdf.empty:
@@ -470,6 +519,7 @@ def vec_app1_op2(pdf: pd.DataFrame, pattern: str | None) -> pd.DataFrame:
     return _tagged("emit", cols[2], cols[3])
 
 
+@_declares("emit")
 def vec_app2_op1(pdf: pd.DataFrame, pattern: str | None) -> pd.DataFrame:
     """Vectorized equality filter on col6 → (col8, "1") (app2op1)."""
     if pdf.empty:
@@ -479,6 +529,7 @@ def vec_app2_op1(pdf: pd.DataFrame, pattern: str | None) -> pd.DataFrame:
     return _tagged("emit", kept[8], "1")
 
 
+@_declares("count")
 def vec_app2_op2(pdf: pd.DataFrame, pattern: str | None) -> pd.DataFrame:
     """Vectorized key passthrough → count path (app2op2)."""
     if pdf.empty:

@@ -82,7 +82,9 @@ _APP2_ORACLE = """
 def rainstorm_plugin_app1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """App1 (pattern grep → CSV projection) through the plugin path:
     RainStorm op1=app1op1 op2=app1op2 pattern='URGENT' (SURVEY.md §5)."""
-    job = E.RainStormJob(op1=E.PluginOp(E.app1_op1), op2=E.PluginOp(E.app1_op2), pattern="URGENT")
+    job = E.RainStormJob(
+        op1=E.PluginOp.declared(E.app1_op1), op2=E.PluginOp.declared(E.app1_op2), pattern="URGENT"
+    )
     return job.run(_record_stream(spark, sf_dir))
 
 
@@ -95,7 +97,9 @@ def rainstorm_plugin_app2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """App2 (equality filter → stateful category count) through the plugin
     path, including the 1-line count contract:
     RainStorm op1=app2op1 op2=app2op2 pattern='F'."""
-    job = E.RainStormJob(op1=E.PluginOp(E.app2_op1), op2=E.PluginOp(E.app2_op2), pattern="F")
+    job = E.RainStormJob(
+        op1=E.PluginOp.declared(E.app2_op1), op2=E.PluginOp.declared(E.app2_op2), pattern="F"
+    )
     return job.run(_record_stream(spark, sf_dir))
 
 
@@ -115,9 +119,7 @@ def rainstorm_streaming_app2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_table
 
     job = E.RainStormJob(
-        op1=E.PluginOp(E.app2_op1, contract="emit"),
-        op2=E.PluginOp(E.app2_op2, contract="count"),
-        pattern="F",
+        op1=E.PluginOp.declared(E.app2_op1), op2=E.PluginOp.declared(E.app2_op2), pattern="F"
     )
     out = job.run(_record_stream(spark, sf_dir, orders=stream_table(spark, sf_dir, "orders")))
     return run_to_memory_sink(out, "complete")
@@ -139,9 +141,7 @@ def rainstorm_streaming_app1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_table
 
     job = E.RainStormJob(
-        op1=E.PluginOp(E.app1_op1, contract="emit"),
-        op2=E.PluginOp(E.app1_op2, contract="emit"),
-        pattern="URGENT",
+        op1=E.PluginOp.declared(E.app1_op1), op2=E.PluginOp.declared(E.app1_op2), pattern="URGENT"
     )
     out = job.run(_record_stream(spark, sf_dir, orders=stream_table(spark, sf_dir, "orders")))
     return run_to_memory_sink(out, "append")
@@ -157,7 +157,9 @@ def rainstorm_vectorized_app1(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical contract and oracle as rainstorm_plugin_app1, with the hot
     loop as pandas column ops instead of per-record Python."""
     job = E.RainStormJob(
-        op1=E.BatchPluginOp(E.vec_app1_op1), op2=E.BatchPluginOp(E.vec_app1_op2), pattern="URGENT"
+        op1=E.BatchPluginOp.declared(E.vec_app1_op1),
+        op2=E.BatchPluginOp.declared(E.vec_app1_op2),
+        pattern="URGENT",
     )
     return job.run(_record_stream(spark, sf_dir))
 
@@ -172,7 +174,9 @@ def rainstorm_vectorized_app2(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-record plugin variant — the bench pair quantifying what
     vectorizing a plugin shape buys."""
     job = E.RainStormJob(
-        op1=E.BatchPluginOp(E.vec_app2_op1), op2=E.BatchPluginOp(E.vec_app2_op2), pattern="F"
+        op1=E.BatchPluginOp.declared(E.vec_app2_op1),
+        op2=E.BatchPluginOp.declared(E.vec_app2_op2),
+        pattern="F",
     )
     return job.run(_record_stream(spark, sf_dir))
 

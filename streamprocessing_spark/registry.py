@@ -58,41 +58,23 @@ _QUERY_MODULES = (
 )
 
 # Queries whose code changed after their last driver oracle row: the
-# loop and shared-view rewrites of OPTIMIZATION_r11.md plus the kernel
-# changes noted below. Keep each family contiguous so its shared views
+# rainstorm family and the two app pipelines (schema memo and declared
+# op contracts). Keep each family contiguous so its shared views
 # are built once, builder ahead of consumers, and reset the tuple to the
 # queries a change touches.
 GATE_FIRST = (
-    # similarity: srp_lsh_cosine_pairs_scaled builds the srppairs view
-    # that decontaminate_semantic reads
-    "srp_lsh_cosine_pairs_scaled",
-    "decontaminate_semantic",
-    # the Lloyd consumers: every distance is now the JVM fold
-    "ann_pq_adc_topk",
-    "ann_ivfpq_topk",
-    "kmeans_embeddings",
-    "ann_ivf_kmeans_topk",
-    "prototypicality_prune",
-    # graph loops over the shared graphop/copairs views
-    "basket_bfs_part_hops",
-    "pagerank_copurchase",
-    "label_prop_communities",
-    "sssp_weighted_parts",
-    "link_prediction_jaccard",
-    "modularity_communities",
-    "hits_part_authorities",
-    # ExecOp now runs through PluginOp's kernel
-    "rainstorm_exec_app2",
-    # replay.stream_table; the first call drains every _PIPELINES builder
-    "streaming_count_update",
+    # the shipped ops now run under their declared contracts
+    "rainstorm_plugin_app1",
+    "rainstorm_plugin_app2",
+    "rainstorm_vectorized_app1",
+    "rainstorm_vectorized_app2",
     "rainstorm_streaming_app1",
     "rainstorm_streaming_app2",
-    # queries.streaming._ingest_drain
-    "streaming_paragraph_dedup_ingest",
-    "streaming_cdc_chunks_ingest",
-    "streaming_containment_ingest",
-    # the IVF index under session.scratch_root()
-    "ann_ivf_persisted_topk",
+    # undeclared (mixed) ExecOps keep the persisted union
+    "rainstorm_exec_app2",
+    # load_table reads through the table-schema memo
+    "app1_pipeline",
+    "app2_pipeline",
 )
 
 

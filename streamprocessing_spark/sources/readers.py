@@ -9,7 +9,10 @@ at the scan, Catalyst prunes columns and pushes filters into the reader.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -87,13 +90,36 @@ def normalize_timestamps(df: DataFrame, table: str | None = None) -> DataFrame:
     return df
 
 
+# Parquet schemas already inferred, keyed by (applicationId, path, st_ino,
+# st_mtime_ns, st_size): a rewritten file changes the key, so its new
+# schema is inferred again, and a new session infers afresh.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def table_schema(spark: SparkSession, path: str) -> StructType:
+    """The parquet schema at ``path``, inferred once per file version.
+    Inference runs a one-task footer job; a scan given the schema runs
+    none. A path ``os.stat`` cannot see (an object store, HDFS) is
+    inferred on every call."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path).schema
+    key = (spark.sparkContext.applicationId, path, st.st_ino, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table. Parquet scans get predicate pushdown, column
     pruning and (on a cluster) partition pruning for free."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ensure_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(table_schema(spark, path)).parquet(path)
     return normalize_timestamps(df, table=name)
 
 

@@ -22,26 +22,23 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from streamprocessing_spark.sources.readers import TABLES, _ensure_confs, normalize_timestamps
-
-
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
+from streamprocessing_spark.sources.readers import (
+    TABLES,
+    _ensure_confs,
+    normalize_timestamps,
+    table_schema,
+)
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """readStream over one table with the same ts normalization as the
-    batch loader (see readers.load_table). Schema comes from a batch peek
-    (memoized per session+path — file stream sources need it declared,
-    and the peek costs a Spark job per query otherwise)."""
+    batch loader (see readers.load_table). File stream sources need the
+    schema declared; it comes from the loader's memo
+    (readers.table_schema), so a session peeks each file version once."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     _ensure_confs(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    cache_key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(cache_key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[cache_key] = schema
+    schema = table_schema(spark, f"{sf_dir}/{name}.parquet")
     # The file stream source lists a DIRECTORY; each table is a single
     # file, so stream the parent dir with a glob restricted to it.
     df = (

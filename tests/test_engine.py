@@ -66,6 +66,34 @@ def test_count_contract(spark, records):
     assert out == {("Warning", "2")}
 
 
+def test_emit_contract_fails_on_a_count_record(spark, records):
+    """A PluginOp declared "emit" whose fn returns a count key fails the
+    job instead of losing the record."""
+    op = E.PluginOp(lambda k, v, p: k, "emit")
+    with pytest.raises(Exception, match="'count' record under contract 'emit'"):
+        op.apply(records, None).collect()
+
+
+def test_batch_emit_contract_fails_on_count_rows(spark, records):
+    """A BatchPluginOp declared "emit" that tags "count" rows fails the
+    job instead of losing the rows."""
+    op = E.BatchPluginOp(E.vec_app2_op2, "emit")
+    with pytest.raises(Exception, match="'count' record under contract 'emit'"):
+        op.apply(records, None).collect()
+
+
+def test_shipped_ops_declare_their_contracts():
+    assert {f.__name__: E.PluginOp.declared(f).contract for f in (
+        E.app1_op1, E.app1_op2, E.app2_op1, E.app2_op2
+    )} == {"app1_op1": "emit", "app1_op2": "emit", "app2_op1": "emit", "app2_op2": "count"}
+    assert {f.__name__: E.BatchPluginOp.declared(f).contract for f in (
+        E.vec_app1_op1, E.vec_app1_op2, E.vec_app2_op1, E.vec_app2_op2
+    )} == {
+        "vec_app1_op1": "emit", "vec_app1_op2": "emit",
+        "vec_app2_op1": "emit", "vec_app2_op2": "count",
+    }
+
+
 def test_mixed_contract_single_op(spark, records):
     """One op may filter, count and flatMap per record in the same run —
     the classification is per record, as in the reference framework."""

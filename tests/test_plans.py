@@ -346,6 +346,21 @@ def test_prototypicality_prune_scans_the_corpus_once(spark, sf_dir):
     assert "Scan parquet" not in plan, plan
 
 
+def test_declared_rainstorm_ops_plan_one_branch(spark, sf_dir):
+    """The shipped ops each declare one output kind, so the batch plugin
+    and vectorized apps plan the declared branch alone: no persisted
+    tagged stream and no union with an empty other branch. An undeclared
+    (mixed) op, as in rainstorm_exec_app2, still plans both."""
+    for name in (
+        "rainstorm_plugin_app1", "rainstorm_plugin_app2",
+        "rainstorm_vectorized_app1", "rainstorm_vectorized_app2",
+    ):
+        plan = X.formatted_plan(SPECS[name].fn(spark, sf_dir))
+        assert "InMemoryRelation" not in plan and "Union" not in plan, (name, plan)
+    plan = X.formatted_plan(SPECS["rainstorm_exec_app2"].fn(spark, sf_dir))
+    assert "InMemoryRelation" in plan and "Union" in plan, plan
+
+
 def test_pit_join_is_one_exchange(spark, sf_dir):
     """The as-of window formulation must cost exactly one shuffle on the
     entity key (union is narrow; no join Exchange exists at all)."""

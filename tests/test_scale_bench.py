@@ -10,6 +10,8 @@ import sys
 from pathlib import Path
 from types import SimpleNamespace
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
 import scale_bench as SB  # noqa: E402
@@ -80,8 +82,37 @@ def test_merge_write_keeps_prior_rows_and_base(tmp_path, capsys):
         "queries": {"a": {"v": 1}, "b": {"v": 3}, "c": {"v": 4}},
     }
     assert json.loads(capsys.readouterr().out) == got
-    SB._merge_write(path, {"scales": [1, 10, 100], "base": "new", "queries": {}})
-    assert json.loads(path.read_text())["base"] == "new"
+    # rows from another base would sit beside these under one base
+    with pytest.raises(ValueError, match="base"):
+        SB._merge_write(path, {"scales": [1, 10, 100], "base": "new", "queries": {}})
+    assert json.loads(path.read_text()) == got
+
+
+@pytest.mark.parametrize("mode, artifact, recorded", [
+    ([], "SCALEBENCH", {"base_sf": 0.1, "proxy_sf": 1.0}),
+    (["--graph100"], "SCALEBENCH100", {"scales": [1, 10, 100], "base": "/fixtures/sf0.1"}),
+])
+def test_main_refuses_another_base_before_any_timing(tmp_path, monkeypatch, mode, artifact,
+                                                    recorded):
+    path = tmp_path / f"{artifact}.json"
+    prior = {**recorded, "queries": {"a": {"v": 1}}}
+    path.write_text(json.dumps(prior))
+    monkeypatch.setattr(SB, artifact, path)
+    monkeypatch.setattr(SB, "get_spark", lambda name: pytest.fail("session started"))
+    monkeypatch.setattr(sys, "argv", ["scale_bench.py", "--base", "/fixtures/sf0.01", *mode, "a"])
+    with pytest.raises(ValueError, match="base"):
+        SB.main()
+    assert json.loads(path.read_text()) == prior
+
+
+def test_ratio_rows_are_keyed_by_the_base_scale():
+    assert SB._scale_factor("/fixtures/sf0.01/") == 0.01
+    assert SB._ratio_row(0.01, 0.5, 10, 2.0, 100) == {
+        "sf0.01_sec": 0.5, "sf0.1_sec": 2.0, "ratio": 4.0, "sf0.01_rows": 10, "sf0.1_rows": 100,
+    }
+    assert set(SB._ratio_row(0.1, 1.0, 1, 1.0, 1)) == {
+        "sf0.1_sec", "sf1.0_sec", "ratio", "sf0.1_rows", "sf1.0_rows",
+    }
 
 
 def test_sign_flip_replicas_keep_copy_zero_disjoint_ids_and_magnitudes(spark):

@@ -1,5 +1,6 @@
-"""The streaming layer's shared setup: one stream source
-(replay.stream_table) and one staged ingest drain
+"""The streaming layer's shared setup: one table-schema memo
+(readers.table_schema, behind both load_table and stream_table), one
+stream source (replay.stream_table) and one staged ingest drain
 (queries.streaming._ingest_drain)."""
 
 from __future__ import annotations
@@ -11,7 +12,8 @@ from collections import Counter
 import pytest
 
 from streamprocessing_spark.queries import streaming as S
-from streamprocessing_spark.streaming import replay
+from streamprocessing_spark.sources import readers
+from streamprocessing_spark.sources.readers import load_table
 from streamprocessing_spark.streaming.ingest_dedup import (
     CdcIngestDedup,
     ContainmentIngestDedup,
@@ -38,7 +40,7 @@ def test_stream_table_rejects_unknown_table(spark, sf_dir):
 
 
 def test_stream_table_peeks_schema_once_per_session(spark, sf_dir, monkeypatch):
-    monkeypatch.setattr(replay, "_SCHEMA_CACHE", {})
+    monkeypatch.setattr(readers, "_SCHEMAS", {})
     first = _jobs_in_group(
         spark, "stream_table_peek_1", lambda: stream_table(spark, sf_dir, "orders")
     )
@@ -48,12 +50,50 @@ def test_stream_table_peeks_schema_once_per_session(spark, sf_dir, monkeypatch):
     assert len(first) >= 1
     assert second == []
     # the declared schema is the file's, normalized like load_table's
-    from streamprocessing_spark.sources.readers import load_table
-
     assert (
         stream_table(spark, sf_dir, "orders").schema
         == load_table(spark, sf_dir, "orders").schema
     )
+
+
+def _write_orders(sf, columns):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(sf, exist_ok=True)
+    pq.write_table(pa.table({c: [1, 2, 3] for c in columns}), f"{sf}/orders.parquet")
+
+
+def test_second_load_table_of_a_path_runs_no_job(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(readers, "_SCHEMAS", {})
+    sf = str(tmp_path / "sf")
+    _write_orders(sf, ["o_orderkey", "o_custkey"])
+    first = _jobs_in_group(spark, "load_table_1", lambda: load_table(spark, sf, "orders"))
+    second = _jobs_in_group(spark, "load_table_2", lambda: load_table(spark, sf, "orders"))
+    assert len(first) >= 1
+    assert second == []
+    assert load_table(spark, sf, "orders").count() == 3
+
+
+def test_rewritten_file_infers_its_new_schema(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(readers, "_SCHEMAS", {})
+    sf = str(tmp_path / "sf")
+    _write_orders(sf, ["o_orderkey"])
+    assert load_table(spark, sf, "orders").columns == ["o_orderkey"]
+    _write_orders(sf, ["o_orderkey", "o_totalprice"])
+    assert load_table(spark, sf, "orders").columns == ["o_orderkey", "o_totalprice"]
+    assert stream_table(spark, sf, "orders").columns == ["o_orderkey", "o_totalprice"]
+
+
+def test_stream_table_and_load_table_share_one_memo(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(readers, "_SCHEMAS", {})
+    loaded = _jobs_in_group(spark, "shared_memo_load", lambda: load_table(spark, sf_dir, "orders"))
+    streamed = _jobs_in_group(
+        spark, "shared_memo_stream", lambda: stream_table(spark, sf_dir, "orders")
+    )
+    assert len(loaded) >= 1
+    assert streamed == []
+    assert [k[1] for k in readers._SCHEMAS] == [f"{sf_dir}/orders.parquet"]
 
 
 _TWINS = {

@@ -6,8 +6,11 @@ modes (134 query rows in all); each merges its rows into an artifact at
 the repo root, replacing only the rows it measured, so subset runs
 accumulate:
 
-- default: ``QUERIES`` (113) at sf0.1 and at the 10x "sf1.0 proxy"
+- default: ``QUERIES`` (113) at the base and at its 10x proxy
   (``.scalebench/sf1.0``), one wall-clock ratio each -> SCALEBENCH.json.
+  The artifact records the base's scale factor (``base_sf``, read from
+  the ``sf<N>`` directory name) and keys each row's times and row counts
+  by it: ``sf0.1_sec``/``sf1.0_sec`` from the sf0.1 fixture.
 - ``--graph100``: ``GRAPH_QUERIES`` (7) at x1/x10/x100 over the 100x
   lineitem (``.scalebench/sf10.0``), with the growth exponent fitted on
   the three log-log points -> SCALEBENCH100.json.
@@ -50,7 +53,10 @@ Usage:
     python tools/scale_bench.py --emb256 [query ...]
 
 ``--base`` defaults to the sf0.1 fixture; the query list defaults to the
-mode's own. Prints the merged artifact as one JSON line.
+mode's own. Prints the merged artifact as one JSON line. Rows carry no
+base of their own, so a run whose base differs from the one its artifact
+records (``base_sf`` in SCALEBENCH.json, ``base`` in SCALEBENCH100.json)
+is refused before anything is built or timed.
 """
 
 from __future__ import annotations
@@ -60,6 +66,7 @@ import functools
 import hashlib
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -71,6 +78,10 @@ from pyspark.sql import functions as F  # noqa: E402
 from streamprocessing_spark.registry import all_specs  # noqa: E402
 from streamprocessing_spark.session import get_spark  # noqa: E402
 from streamprocessing_spark.shared_views import release_shared_views  # noqa: E402
+
+ROOT = Path(__file__).resolve().parents[1]
+SCALEBENCH = ROOT / "SCALEBENCH.json"
+SCALEBENCH100 = ROOT / "SCALEBENCH100.json"
 
 QUERIES = (
     "dedup_minhash_lsh",
@@ -644,8 +655,7 @@ def run_emb256(spark, queries: list[str]) -> None:
         spark, queries, [f"{EMB256_DIR}/x{s}" for s in (1, 10, 100)], key_suffix="@256d",
         extra={"dim": EMB256_DIM, "regime": "sparse (theta=0.45 at 7.2 sigma)"},
     )
-    _merge_write(Path(__file__).resolve().parents[1] / "SCALEBENCH100.json",
-                 {"scales": [1, 10, 100], "queries": rows})
+    _merge_write(SCALEBENCH100, {"scales": [1, 10, 100], "queries": rows})
 
 
 def _ensure_proxy100_fresh(spark) -> None:
@@ -672,15 +682,13 @@ def run_dedup100(spark, base: str, queries: list[str]) -> None:
         _fresh(f"{PROXY100_DIR}/.emb100", "v1",
                lambda: build_emb100(spark, PROXY_DIR, PROXY100_DIR), "100x embeddings proxy")
     rows = _run_decades(spark, queries, (base, PROXY_DIR, PROXY100_DIR), cold=COLD_CASCADE)
-    _merge_write(Path(__file__).resolve().parents[1] / "SCALEBENCH100.json",
-                 {"scales": [1, 10, 100], "base": base, "queries": rows})
+    _merge_write(SCALEBENCH100, {"scales": [1, 10, 100], "base": base, "queries": rows})
 
 
 def run_graph100(spark, base: str, queries: list[str]) -> None:
     _ensure_proxy100_fresh(spark)
     rows = _run_decades(spark, queries, (base, PROXY_DIR, PROXY100_DIR))
-    _merge_write(Path(__file__).resolve().parents[1] / "SCALEBENCH100.json",
-                 {"scales": [1, 10, 100], "base": base, "queries": rows})
+    _merge_write(SCALEBENCH100, {"scales": [1, 10, 100], "base": base, "queries": rows})
 
 
 def fit_exponent(ns: list[float], ts: list[float]) -> float:
@@ -737,11 +745,47 @@ def _run_decades(spark, names, rungs, *, cold=frozenset(), key_suffix="", extra=
     return out
 
 
+def _scale_factor(base: str) -> float:
+    """The scale factor a fixture directory is named for (``.../sf0.01``
+    -> 0.01)."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(os.path.normpath(base)))
+    if m is None:
+        raise SystemExit(f"--base {base!r}: name the fixture directory sf<N> to give its scale")
+    return float(m.group(1))
+
+
+def _ratio_row(base_sf: float, small_s: float, small_n: int, big_s: float, big_n: int) -> dict:
+    """One SCALEBENCH.json row: the base and 10x-proxy times and row
+    counts, keyed by their scale factors."""
+    big_sf = round(base_sf * 10, 6)
+    return {
+        f"sf{base_sf}_sec": round(small_s, 3),
+        f"sf{big_sf}_sec": round(big_s, 3),
+        "ratio": round(big_s / small_s, 2),
+        f"sf{base_sf}_rows": small_n,
+        f"sf{big_sf}_rows": big_n,
+    }
+
+
+def _check_base(path: Path, result: dict) -> dict:
+    """The artifact at ``path`` (empty if absent), after refusing a run
+    whose ``base``/``base_sf`` differs from the one the artifact records:
+    its rows would land beside rows measured from another base."""
+    prior = json.loads(path.read_text()) if path.is_file() else {}
+    for k in ("base", "base_sf"):
+        if k in prior and k in result and prior[k] != result[k]:
+            raise ValueError(
+                f"{path.name} records {k}={prior[k]!r}; this run's is {result[k]!r}"
+            )
+    return prior
+
+
 def _merge_write(path: Path, result: dict) -> None:
     """Merge this run into the artifact at ``path`` so subset runs
     accumulate: rows merge, a new row replacing the prior row of its
-    name, and this run's top-level fields overwrite the prior ones."""
-    prior = json.loads(path.read_text()) if path.is_file() else {}
+    name, and this run's top-level fields overwrite the prior ones. A run
+    from another base is refused (``_check_base``)."""
+    prior = _check_base(path, result)
     result = {**prior, **result,
               "queries": {**prior.get("queries", {}), **result["queries"]}}
     path.write_text(json.dumps(result, indent=1) + "\n")
@@ -761,6 +805,13 @@ def main() -> None:
                          "fixtures at 1x/10x/100x and fit exponents")
     ap.add_argument("queries", nargs="*", help="subset of QUERIES to run")
     args = ap.parse_args()
+    base = os.path.abspath(args.base)
+    # refuse a run from another base before anything is built or timed
+    if args.graph100 or args.dedup100:
+        _check_base(SCALEBENCH100, {"base": base})
+    elif not args.emb256:
+        base_sf = _scale_factor(base)
+        _check_base(SCALEBENCH, {"base_sf": base_sf})
 
     spark = get_spark("scale-bench")
 
@@ -783,34 +834,34 @@ def main() -> None:
     # .src marker against this marker — invalidates the derived 100x
     # corpora in BOTH the regenerated-base and --rebuild cases instead of
     # only on a path change.
-    base_key = f"v4:{os.path.abspath(args.base)}:{_base_fingerprint(args.base)}"
+    base_key = f"v4:{base}:{_base_fingerprint(base)}"
     # an explicit --rebuild with an UNCHANGED base re-derives the 10x
     # proxy under the same key; the 100x tree derived from the old build
     # must not survive it — its .src goes too, so the next 100x run
     # rebuilds from the fresh proxy
-    _fresh(f"{PROXY_DIR}/.base", base_key, lambda: build_proxy(spark, args.base, PROXY_DIR),
+    _fresh(f"{PROXY_DIR}/.base", base_key, lambda: build_proxy(spark, base, PROXY_DIR),
            "10x proxy", table=f"{PROXY_DIR}/documents.parquet",
            drops=(f"{PROXY100_DIR}/.src",), force=args.rebuild)
 
     if args.graph100:
-        run_graph100(spark, args.base, args.queries or list(GRAPH_QUERIES))
+        run_graph100(spark, base, args.queries or list(GRAPH_QUERIES))
         return
 
     if args.dedup100:
-        run_dedup100(spark, args.base, args.queries or list(DEDUP100_QUERIES))
+        run_dedup100(spark, base, args.queries or list(DEDUP100_QUERIES))
         return
 
     specs = all_specs()
-    result: dict = {"base_sf": 0.1, "proxy_sf": 1.0, "queries": {}}
+    result: dict = {"base_sf": base_sf, "proxy_sf": round(base_sf * 10, 6), "queries": {}}
     run_list = args.queries or QUERIES
     for name in run_list:
         spec = specs[name]
         cold = name in COLD_VIEW_BUILD
         # warm (JIT/codegen/broadcast-threshold effects), then measure
-        time_query(spec, spark, args.base)
+        time_query(spec, spark, base)
         if cold:
             release_shared_views(spark)
-        small_s, small_n = time_query(spec, spark, args.base)
+        small_s, small_n = time_query(spec, spark, base)
         if cold:
             release_shared_views(spark)
         if name in PREWARM_PROXY:
@@ -822,16 +873,10 @@ def main() -> None:
             # proxy too so both sides measure the JOIN alone.
             time_query(spec, spark, PROXY_DIR)
         big_s, big_n = time_query(spec, spark, PROXY_DIR)
-        result["queries"][name] = {
-            "sf0.1_sec": round(small_s, 3),
-            "sf1.0_sec": round(big_s, 3),
-            "ratio": round(big_s / small_s, 2),
-            "sf0.1_rows": small_n,
-            "sf1.0_rows": big_n,
-        }
+        result["queries"][name] = _ratio_row(base_sf, small_s, small_n, big_s, big_n)
         print(f"# {name}: {small_s:.2f}s -> {big_s:.2f}s (x{big_s / small_s:.1f})",
               file=sys.stderr)
-    _merge_write(Path(__file__).resolve().parents[1] / "SCALEBENCH.json", result)
+    _merge_write(SCALEBENCH, result)
 
 
 if __name__ == "__main__":
