@@ -34,6 +34,18 @@ by ``@_declares`` on the callable at the bottom of this module, and
 A narrowed contract plans one branch with no persist; a record of the
 other kind fails the task rather than being dropped.
 
+Operator chaining. Each Python op (``PluginOp``, ``BatchPluginOp``) is a
+per-batch ``tagger``: a pandas batch of (key, value) records in, a tagged
+(kind, key, value) batch out. ``RainStormJob.run`` composes op1's and
+op2's taggers into ONE mapInPandas kernel when both ops are Python ops,
+op1's contract is "emit" and ``num_tasks`` is None: op2 sees op1's
+``key, value`` columns batch by batch, as it would after a stage
+boundary, and the output collapses under op2's contract. Nothing between
+the ops needs Spark then (no routing, no count aggregate), so the second
+Arrow round trip into Python buys nothing. A routed job (``num_tasks``
+set; the CLI always sets it), an ``ExecOp`` or ``NativeOp``, or an op1
+that may count keeps the two-stage shape, one kernel per op.
+
 Everything the reference's engine did besides the ops — task placement,
 per-record RPC + ack + retry, WAL, dedup, failure recovery
 (server.go:186-408) — is deliberately absent: Spark's scheduler, shuffle
@@ -59,6 +71,8 @@ PluginFn = Callable[[str, str, str | None], None | str | list[tuple[str, str]]]
 # Vectorized plugin: whole pandas batch in, tagged batch out
 # (columns kind/key/value, kind ∈ {"emit", "count"}).
 BatchPluginFn = Callable[[pd.DataFrame, "str | None"], pd.DataFrame]
+# A Python op bound to its pattern: records batch in, tagged batch out.
+Tagger = Callable[[pd.DataFrame], pd.DataFrame]
 
 RECORD_SCHEMA = StructType(
     [StructField("key", StringType()), StructField("value", StringType())]
@@ -118,40 +132,40 @@ class PluginOp:
         """``fn`` under the contract its ``@_declares`` states."""
         return cls(fn, fn.contract)
 
-    def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
-        ensure_shippable()
+    def tagger(self, pattern: str | None) -> Tagger:
+        """The per-batch kernel body: records batch → tagged batch."""
         fn, contract = self.fn, self.contract
         counts_ok, emits_ok = "count" in _KINDS[contract], "emit" in _KINDS[contract]
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            guard_zip_caches()
-            for pdf in batches:
-                kinds: list[str] = []
-                keys: list[str] = []
-                vals: list[str] = []
-                # tolist(): plain-list iteration is ~2× faster than
-                # iterating pandas Series in this per-record hot loop
-                for k, v in zip(pdf["key"].tolist(), pdf["value"].tolist()):
-                    r = fn(k, v, pattern)
-                    if r is None:
-                        continue
-                    if isinstance(r, str):
-                        if not counts_ok:
-                            raise _wrong_kind(fn, "count", contract)
-                        kinds.append("count")
-                        keys.append(r)
-                        vals.append("")
-                    else:
-                        if not emits_ok:
-                            raise _wrong_kind(fn, "emit", contract)
-                        for nk, nv in r:
-                            kinds.append("emit")
-                            keys.append(nk)
-                            vals.append(nv)
-                yield pd.DataFrame({"kind": kinds, "key": keys, "value": vals})
+        def tag(pdf: pd.DataFrame) -> pd.DataFrame:
+            kinds: list[str] = []
+            keys: list[str] = []
+            vals: list[str] = []
+            # tolist(): plain-list iteration is ~2× faster than
+            # iterating pandas Series in this per-record hot loop
+            for k, v in zip(pdf["key"].tolist(), pdf["value"].tolist()):
+                r = fn(k, v, pattern)
+                if r is None:
+                    continue
+                if isinstance(r, str):
+                    if not counts_ok:
+                        raise _wrong_kind(fn, "count", contract)
+                    kinds.append("count")
+                    keys.append(r)
+                    vals.append("")
+                else:
+                    if not emits_ok:
+                        raise _wrong_kind(fn, "emit", contract)
+                    for nk, nv in r:
+                        kinds.append("emit")
+                        keys.append(nk)
+                        vals.append(nv)
+            return pd.DataFrame({"kind": kinds, "key": keys, "value": vals})
 
-        tagged = records.mapInPandas(kernel, _TAGGED_SCHEMA)
-        return _collapse_tagged(tagged, contract)
+        return tag
+
+    def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
+        return _run_tagged(records, self.tagger(pattern), self.contract)
 
 
 class _PluginCacheRegistry:
@@ -259,12 +273,18 @@ def _collapse_tagged(tagged: DataFrame, contract: str = "mixed") -> DataFrame:
         return _count_keys(tagged)
     # Both union branches consume `tagged`; without a persist each
     # branch re-executes the Python kernel over the full input (2× per
-    # op, 4× for two chained PluginOps), and a non-deterministic user
-    # fn could split records inconsistently between the branches.
+    # op, 4× for a job of two mixed PluginOps), and a non-deterministic
+    # user fn could split records inconsistently between the branches.
     # Batch: persist the tagged output once; eviction is deferred via
-    # _register_plugin_cache (the union is lazy). Streaming: persist is
-    # not applicable — each micro-batch is evaluated once per sink anyway.
+    # _PLUGIN_CACHES (the union is lazy). Streaming: persist is not
+    # applicable — each micro-batch is evaluated once per sink anyway.
     if not tagged.isStreaming:
+        # Spark serves persist() from any live cache of the same plan, so
+        # a repeated job would read an earlier run's rows (and a
+        # non-deterministic op replay its first output): drop that entry
+        # and its registry handle (whose unpersist would drop ours).
+        _PLUGIN_CACHES.dfs = [d for d in _PLUGIN_CACHES.dfs if not d.sameSemantics(tagged)]
+        tagged.unpersist()
         tagged = tagged.persist()
         _PLUGIN_CACHES.add(tagged)
     emits = tagged.where(F.col("kind") == "emit").select("key", "value")
@@ -272,6 +292,30 @@ def _collapse_tagged(tagged: DataFrame, contract: str = "mixed") -> DataFrame:
     # Either side may be empty; the union keeps the mixed-contract
     # semantics of the reference framework.
     return emits.unionByName(counts)
+
+
+def _run_tagged(records: DataFrame, tag: Tagger, contract: str) -> DataFrame:
+    """The one Python kernel of every op surface: ``tag`` over each Arrow
+    batch, then the framework's collapse under ``contract``."""
+    ensure_shippable()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_caches()
+        for pdf in batches:
+            yield tag(pdf)
+
+    return _collapse_tagged(records.mapInPandas(kernel, _TAGGED_SCHEMA), contract)
+
+
+def _chain(tag1: Tagger, tag2: Tagger) -> Tagger:
+    """op1 → op2 within one batch: op2 gets op1's emitted records as a
+    fresh (key, value) batch; a batch op1 empties never reaches op2."""
+
+    def tag(pdf: pd.DataFrame) -> pd.DataFrame:
+        mid = tag1(pdf)
+        return tag2(mid[["key", "value"]].reset_index(drop=True)) if len(mid) else mid
+
+    return tag
 
 
 _EMPTY_TAGGED = {
@@ -303,21 +347,22 @@ class BatchPluginOp:
         """``fn`` under the contract its ``@_declares`` states."""
         return cls(fn, fn.contract)
 
-    def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
-        ensure_shippable()
+    def tagger(self, pattern: str | None) -> Tagger:
+        """The per-batch kernel body: records batch → tagged batch."""
         fn, contract = self.fn, self.contract
         kinds = list(_KINDS[contract])
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            guard_zip_caches()
-            for pdf in batches:
-                out = fn(pdf, pattern)
-                wrong = ~out["kind"].isin(kinds)
-                if wrong.any():
-                    raise _wrong_kind(fn, out["kind"][wrong].iloc[0], contract)
-                yield out[["kind", "key", "value"]]
+        def tag(pdf: pd.DataFrame) -> pd.DataFrame:
+            out = fn(pdf, pattern)
+            wrong = ~out["kind"].isin(kinds)
+            if wrong.any():
+                raise _wrong_kind(fn, out["kind"][wrong].iloc[0], contract)
+            return out[["kind", "key", "value"]]
 
-        return _collapse_tagged(records.mapInPandas(kernel, _TAGGED_SCHEMA), contract)
+        return tag
+
+    def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
+        return _run_tagged(records, self.tagger(pattern), self.contract)
 
 
 def exec_op_record(exe: str, key: str, value: str, pattern: str | None):
@@ -398,11 +443,22 @@ class RainStormJob:
     num_tasks: int | None = None
 
     def run(self, records: DataFrame) -> DataFrame:
-        """records (key, value) → op1 → [repartition] → op2."""
-        out = self.op1.apply(records, self.pattern)
+        """records (key, value) → op1 → [repartition] → op2, with op1 and
+        op2 chained into one kernel when the spec allows it (module
+        docstring)."""
+        op1, op2, pattern = self.op1, self.op2, self.pattern
+        python_ops = (PluginOp, BatchPluginOp)
+        if (
+            self.num_tasks is None
+            and isinstance(op1, python_ops)
+            and isinstance(op2, python_ops)
+            and op1.contract == "emit"
+        ):
+            return _run_tagged(records, _chain(op1.tagger(pattern), op2.tagger(pattern)), op2.contract)
+        out = op1.apply(records, pattern)
         if self.num_tasks is not None:
             out = out.repartition(self.num_tasks, F.col("key"))
-        return self.op2.apply(out, self.pattern)
+        return op2.apply(out, pattern)
 
 
 # ---------------------------------------------------------------------------

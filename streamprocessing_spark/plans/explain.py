@@ -28,6 +28,12 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"^\(\d+\) Exchange\b", plan, flags=re.MULTILINE))
 
 
+def count_python_passes(df: DataFrame) -> int:
+    """Number of MapInPandas operators: one Arrow round trip into Python
+    each (one per RainStorm Python op, or one for a chained op1 → op2)."""
+    return len(re.findall(r"^\(\d+\) MapInPandas\b", formatted_plan(df), flags=re.MULTILINE))
+
+
 def has_pushed_filters(df: DataFrame, fragment: str) -> bool:
     """True if the parquet scan advertises a pushed filter containing
     ``fragment`` (shows as PushedFilters: [...] in the scan node)."""

@@ -58,23 +58,25 @@ _QUERY_MODULES = (
 )
 
 # Queries whose code changed after their last driver oracle row: the
-# rainstorm family and the two app pipelines (schema memo and declared
-# op contracts). Keep each family contiguous so its shared views
-# are built once, builder ahead of consumers, and reset the tuple to the
-# queries a change touches.
+# rainstorm family (op chaining, one tagged cache per mixed run) and
+# stateful streams (checkpoints commit through another file manager).
+# Keep each family contiguous so its shared views are built once,
+# builder ahead of consumers, and reset the tuple to the queries a
+# change touches.
 GATE_FIRST = (
-    # the shipped ops now run under their declared contracts
+    # op1 → op2 chained into one Python pass
     "rainstorm_plugin_app1",
     "rainstorm_plugin_app2",
     "rainstorm_vectorized_app1",
     "rainstorm_vectorized_app2",
     "rainstorm_streaming_app1",
     "rainstorm_streaming_app2",
-    # undeclared (mixed) ExecOps keep the persisted union
+    # mixed ExecOps persist their own tagged stream per run
     "rainstorm_exec_app2",
-    # load_table reads through the table-schema memo
-    "app1_pipeline",
-    "app2_pipeline",
+    # state-store and offset/commit logs through FileSystem.rename
+    "streaming_stateful_alerts",
+    "streaming_session_timeout",
+    "streaming_hourly_daily_rollup",
 )
 
 

@@ -86,6 +86,22 @@ def get_spark(app_name: str = "streamprocessing-spark", master: str | None = Non
         # build). 5min bounds the leak for long sessions; bench.py
         # additionally pulses between timed queries.
         .config("spark.cleaner.periodicGC.interval", "5min")
+        # Streaming checkpoints (offsets, commits, state deltas) commit by
+        # write-temp-then-rename. The default FileContext manager stats
+        # each rename's paths through getFileLinkStatus, which without
+        # libhadoop forks a `readlink` per call (236 process launches per
+        # rainstorm_streaming_app2 replay, 60 with this manager). This one
+        # renames with FileSystem.rename: rename(2) locally, an atomic
+        # NameNode rename on HDFS. Trade-off: its no-overwrite rename is
+        # check-then-rename, so a second writer racing on one checkpoint
+        # file is not caught atomically (Spark already forbids two active
+        # runs of one checkpoint). On object stores neither manager's
+        # rename is atomic.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     if master is not None:
         builder = builder.master(master)

@@ -12,6 +12,16 @@ oracle at end-of-stream (SURVEY.md §4.3.1/§5).
 On a real deployment the source line is the only thing that changes
 (readStream.format("kafka")...): every transformation, watermark and sink
 below is production Structured Streaming.
+
+Checkpoint I/O. Each micro-batch writes an offsets entry before it runs
+and a commit entry after it; a stateful operator also writes one state
+delta file per shuffle partition per batch. Every such file is written
+under a temp name and renamed into place by the session's checkpoint
+file manager, so a replay's checkpoint cost grows with triggers × state
+partitions, not with rows. ``session.get_spark`` picks Spark's
+FileSystem-based manager (one ``rename(2)`` per file on a local disk);
+the default FileContext manager forks a ``readlink`` for every path stat
+when libhadoop is absent. A caller's own session keeps its own choice.
 """
 
 from __future__ import annotations

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streamprocessing_spark import engine as E
+from streamprocessing_spark.plans import explain as X
 
 
 @pytest.fixture()
@@ -80,6 +81,69 @@ def test_batch_emit_contract_fails_on_count_rows(spark, records):
     op = E.BatchPluginOp(E.vec_app2_op2, "emit")
     with pytest.raises(Exception, match="'count' record under contract 'emit'"):
         op.apply(records, None).collect()
+
+
+def test_chaining_needs_an_emit_op1_and_no_routing(spark, records):
+    """op1 → op2 run in one Python pass only when op1 declares "emit" and
+    the job sets no num_tasks; a routed job or a mixed op1 keeps one
+    kernel per op."""
+    op1, op2 = E.PluginOp.declared(E.app2_op1), E.PluginOp.declared(E.app2_op2)
+    chained = E.RainStormJob(op1, op2, "Punched Telespar")
+    routed = E.RainStormJob(op1, op2, "Punched Telespar", num_tasks=3)
+    mixed = E.RainStormJob(E.PluginOp(E.app2_op1), op2, "Punched Telespar")
+    assert [X.count_python_passes(j.run(records)) for j in (chained, routed, mixed)] == [1, 2, 2]
+    assert {tuple(r) for r in chained.run(records).collect()} == {("Warning", "2")}
+
+
+def test_chained_ops_keep_their_contract_checks(spark, records):
+    """Inside the chain a count record from an "emit" op1 still fails the
+    task, and so does a wrong kind from either Python op2. (One input
+    partition: the failing task is then the job's only task, so no
+    sibling task killed by the abort can become its reported cause.)"""
+    app1_op1 = E.PluginOp.declared(E.app1_op1)
+    for op1, op2 in (
+        (E.PluginOp(lambda k, v, p: k, "emit"), E.PluginOp.declared(E.app1_op2)),
+        (app1_op1, E.PluginOp(E.app2_op2, "emit")),
+        (app1_op1, E.BatchPluginOp(E.vec_app2_op2, "emit")),
+    ):
+        job = E.RainStormJob(op1, op2, "Sign")
+        with pytest.raises(Exception, match="'count' record under contract 'emit'"):
+            job.run(records.coalesce(1)).collect()
+
+
+def test_chained_batch_op2_sees_key_value_columns(spark, records):
+    """A chained BatchPluginFn op2 gets op1's records as a (key, value)
+    batch, as it would after a stage boundary: no "kind" column."""
+    import pandas as pd
+
+    def columns(pdf, pattern):
+        return pd.DataFrame({"kind": "emit", "key": pdf["key"], "value": ",".join(pdf.columns)})
+
+    job = E.RainStormJob(E.BatchPluginOp.declared(E.vec_app1_op1), E.BatchPluginOp(columns, "emit"), "a")
+    out = job.run(records)
+    assert X.count_python_passes(out) == 1
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("f:1", "key,value"), ("f:2", "key,value"), ("f:3", "key,value")
+    ]
+
+
+def test_repeated_mixed_job_runs_its_own_kernel(spark, records, tmp_path):
+    """Two runs of one mixed-contract job in a session, with no release in
+    between, each run the op: the second must not read the tagged stream
+    the first persisted (a non-deterministic op would replay it)."""
+    src = tmp_path / "value"
+
+    def current(key, value, pattern):
+        return [(key, src.read_text())]
+
+    job = E.RainStormJob(E.PluginOp(current), E.PluginOp(lambda k, v, p: [(k, v)]))
+    E.release_plugin_caches(blocking=True)
+    seen = []
+    for text in ("first", "second"):
+        src.write_text(text)
+        seen.append({r.value for r in job.run(records).collect()})
+    E.release_plugin_caches(blocking=True)
+    assert seen == [{"first"}, {"second"}]
 
 
 def test_shipped_ops_declare_their_contracts():

@@ -361,6 +361,26 @@ def test_declared_rainstorm_ops_plan_one_branch(spark, sf_dir):
     assert "InMemoryRelation" in plan and "Union" in plan, plan
 
 
+def test_declared_rainstorm_jobs_chain_into_one_python_pass(spark, sf_dir, monkeypatch):
+    """op1 of every shipped app declares "emit" and no app routes between
+    its ops, so op1 and op2 run in one Python kernel: one MapInPandas in
+    the batch plugin and vectorized plans and in both streaming twins'
+    streams (captured before the drain)."""
+    from streamprocessing_spark.streaming import replay
+
+    for name in (
+        "rainstorm_plugin_app1", "rainstorm_plugin_app2",
+        "rainstorm_vectorized_app1", "rainstorm_vectorized_app2",
+    ):
+        df = SPECS[name].fn(spark, sf_dir)
+        assert X.count_python_passes(df) == 1, (name, X.formatted_plan(df))
+    streams = []
+    monkeypatch.setattr(replay, "run_to_memory_sink", lambda df, mode: streams.append(df) or df)
+    for name in ("rainstorm_streaming_app1", "rainstorm_streaming_app2"):
+        SPECS[name].fn(spark, sf_dir)
+    assert [X.count_python_passes(df) for df in streams] == [1, 1], [X.formatted_plan(df) for df in streams]
+
+
 def test_pit_join_is_one_exchange(spark, sf_dir):
     """The as-of window formulation must cost exactly one shuffle on the
     entity key (union is narrow; no join Exchange exists at all)."""

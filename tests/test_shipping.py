@@ -236,7 +236,7 @@ def test_every_python_kernel_calls_the_guard_first():
     assert not unresolved, f"kernel argument not traceable to a def: {unresolved}"
     assert not unguarded, f"kernels that do not call {GUARD}() first: {unguarded}"
     api_sites = [s for s in sites if s.split(":")[1].split("@")[0] in KERNEL_APIS]
-    assert len(api_sites) >= 29, api_sites  # the sweep must keep finding the known sites
+    assert len(api_sites) >= 28, api_sites  # the sweep must keep finding the known sites
 
 
 # -- the guard in real workers, from a cwd outside the repo --

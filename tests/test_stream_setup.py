@@ -1,7 +1,8 @@
 """The streaming layer's shared setup: one table-schema memo
 (readers.table_schema, behind both load_table and stream_table), one
-stream source (replay.stream_table) and one staged ingest drain
-(queries.streaming._ingest_drain)."""
+stream source (replay.stream_table), one staged ingest drain
+(queries.streaming._ingest_drain) and the session's checkpoint file
+manager."""
 
 from __future__ import annotations
 
@@ -138,3 +139,12 @@ def test_ingest_drain_runs_once_per_session_and_rebuilds_without_done(
 
     assert rows() == first
     assert starts == Counter({t: 2 for t in _TWINS})
+
+
+def test_get_spark_renames_checkpoints_through_the_filesystem(spark):
+    """Streaming checkpoints commit through FileSystem.rename, which forks
+    no `readlink` per rename on a local filesystem without libhadoop."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
