@@ -57,26 +57,27 @@ _QUERY_MODULES = (
     "streamprocessing_spark.queries.rainstorm",
 )
 
-# Queries whose code changed after their last driver oracle row: the
-# rainstorm family (op chaining, one tagged cache per mixed run) and
-# stateful streams (checkpoints commit through another file manager).
-# Keep each family contiguous so its shared views are built once,
-# builder ahead of consumers, and reset the tuple to the queries a
-# change touches.
+# Queries whose code changed after their last gate oracle row: every
+# Python kernel now starts in a local session's own worker daemon
+# (session.worker_daemon_confs), so the rainstorm family plus one kernel
+# caller per other Python API. Keep each family contiguous so its shared
+# views are built once, builder ahead of consumers, and reset the tuple
+# to the queries a change touches.
 GATE_FIRST = (
-    # op1 → op2 chained into one Python pass
+    # op1 → op2 in one mapInPandas pass
     "rainstorm_plugin_app1",
     "rainstorm_plugin_app2",
     "rainstorm_vectorized_app1",
     "rainstorm_vectorized_app2",
     "rainstorm_streaming_app1",
     "rainstorm_streaming_app2",
-    # mixed ExecOps persist their own tagged stream per run
     "rainstorm_exec_app2",
-    # state-store and offset/commit logs through FileSystem.rename
-    "streaming_stateful_alerts",
-    "streaming_session_timeout",
-    "streaming_hourly_daily_rollup",
+    # a mapInPandas similarity kernel, a pandas UDAF, a cogrouped
+    # applyInPandas and a Python UDTF
+    "bitext_mine_margin",
+    "udaf_geometric_mean",
+    "cogroup_asof_enrich",
+    "udtf_bigrams",
 )
 
 

@@ -11,7 +11,14 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+# The Python worker daemon (``_daemon/graft_daemon.py``) and its directory.
+# The directory has no ``__init__.py``: on the workers' path it exposes that
+# one module, never this package, which workers must not import (ensure_shippable).
+DAEMON_DIR = str(Path(__file__).resolve().parent / "_daemon")
+DAEMON_MODULE = "graft_daemon"
 
 
 def _cpus() -> int:
@@ -29,6 +36,30 @@ def scratch_root() -> str:
         "SPARK_GRAFT_LOCAL_DIR",
         str(Path(__file__).resolve().parent.parent / ".spark-local"),
     )
+
+
+def worker_daemon_confs(master: str, executor_path: str | None = None) -> dict[str, str]:
+    """The confs that start ``master``'s Python workers on bytecode-cached
+    pyspark: none unless ``master`` is local.
+
+    Spark puts ``pyspark.zip`` first on a worker's path, and the zip holds
+    no bytecode, so every daemon launch (each session's first Python task)
+    compiles pyspark from source: ~0.8 s against ~0.2 s from an installed
+    pyspark. ``graft_daemon`` moves the zips behind an installed pyspark
+    of the same build, then runs the stock daemon. A local master's
+    workers run on this machine, next to this checkout; a cluster's
+    executors need not hold it, so they keep Spark's daemon (SCALE.md says
+    how an executor image avoids the same cost). ``executor_path`` is any
+    ``spark.executorEnv.PYTHONPATH`` already set; it stays behind the
+    daemon's directory.
+    """
+    if not master.startswith("local"):
+        return {}
+    kept = [p for p in (executor_path or "").split(os.pathsep) if p and p != DAEMON_DIR]
+    return {
+        "spark.python.daemon.module": DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join([DAEMON_DIR, *kept]),
+    }
 
 
 def get_spark(app_name: str = "streamprocessing-spark", master: str | None = None) -> SparkSession:
@@ -103,13 +134,20 @@ def get_spark(app_name: str = "streamprocessing-spark", master: str | None = Non
             "FileSystemBasedCheckpointFileManager",
         )
     )
-    if master is not None:
-        builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
+    if master is None and not os.environ.get("SPARK_MASTER"):
         # local[n, 2]: allow one task retry, like a real cluster
         # (spark.task.maxFailures defaults to 4 there but 1 in plain
         # local mode) — required for the mid-run failure-injection tests
         # (the RainStormWithFail analogue) and generally truer to the
         # deployment the engine targets.
-        builder = builder.master(f"local[{cpus},2]")
+        master = f"local[{cpus},2]"
+    if master is not None:
+        builder = builder.master(master)
+        # Local workers start on bytecode-cached pyspark (worker_daemon_confs);
+        # a master chosen outside (SPARK_MASTER) keeps Spark's daemon.
+        # SparkConf() holds what a running JVM was launched with, so a
+        # PYTHONPATH set there is kept; with no JVM yet it is empty.
+        existing = SparkConf().get("spark.executorEnv.PYTHONPATH")
+        for key, value in worker_daemon_confs(master, existing).items():
+            builder = builder.config(key, value)
     return builder.getOrCreate()

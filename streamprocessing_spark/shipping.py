@@ -54,6 +54,12 @@ def guard_zip_caches() -> None:
     per archive change serves every importer of that archive. Later
     calls, and every call on Python >= 3.12, return at once.
 
+    Workers of a local ``get_spark`` session import pyspark from an
+    installed package, not the zip (``session.worker_daemon_confs``), so
+    there the guard has little to save. It matters for everything else:
+    sessions the engine did not build (a host's own), cluster
+    executors, and installs where the daemon keeps the zip first.
+
     Kernels call this as a module-level name, so it ships by value with
     them (ensure_shippable): the worker never imports this package. It
     must therefore use nothing but the standard library.

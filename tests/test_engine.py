@@ -69,18 +69,22 @@ def test_count_contract(spark, records):
 
 def test_emit_contract_fails_on_a_count_record(spark, records):
     """A PluginOp declared "emit" whose fn returns a count key fails the
-    job instead of losing the record."""
+    job instead of losing the record. (One input partition, as in
+    test_chained_ops_keep_their_contract_checks: the contract is checked
+    per batch, and no sibling task killed by the abort can become the
+    reported cause.)"""
     op = E.PluginOp(lambda k, v, p: k, "emit")
     with pytest.raises(Exception, match="'count' record under contract 'emit'"):
-        op.apply(records, None).collect()
+        op.apply(records.coalesce(1), None).collect()
 
 
 def test_batch_emit_contract_fails_on_count_rows(spark, records):
     """A BatchPluginOp declared "emit" that tags "count" rows fails the
-    job instead of losing the rows."""
+    job instead of losing the rows. (One input partition: see
+    test_emit_contract_fails_on_a_count_record.)"""
     op = E.BatchPluginOp(E.vec_app2_op2, "emit")
     with pytest.raises(Exception, match="'count' record under contract 'emit'"):
-        op.apply(records, None).collect()
+        op.apply(records.coalesce(1), None).collect()
 
 
 def test_chaining_needs_an_emit_op1_and_no_routing(spark, records):
