@@ -19,7 +19,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from streamprocessing_spark.engine import release_plugin_caches
 from streamprocessing_spark.registry import all_specs
-from streamprocessing_spark.session import get_spark
+from streamprocessing_spark.session import codegen_compilations, get_spark
 from streamprocessing_spark.shared_views import release_shared_views
 
 # Headline set: the reference-derived pipelines + the heavier analytics /
@@ -276,7 +276,9 @@ def _reclaim_dead_blocks(spark) -> None:
             return
 
 
-def timed_passes(spark, specs, names, sf_dir, reps: int) -> dict[str, list[float]]:
+def timed_passes(
+    spark, specs, names, sf_dir, reps: int, compiles: dict[str, list[int]] | None = None
+) -> dict[str, list[float]]:
     """Time every query in ``names`` once per pass, ``reps`` passes, and
     return each name's wall times in pass order.
 
@@ -290,16 +292,21 @@ def timed_passes(spark, specs, names, sf_dir, reps: int) -> dict[str, list[float
     only their marginal work over the built view — the amortization the
     driver's one-session gate sees. Each cell runs the janitor, releases
     the plugin caches (NOT a global clearCache, which would evict the
-    shared views mid-pass), then times a noop write."""
+    shared views mid-pass), then times a noop write. A ``compiles`` dict
+    gets each name's generated-code compilations per timed cell, in pass
+    order (``session.codegen_compilations``)."""
     raw: dict[str, list[float]] = {name: [] for name in names}
     for _ in range(reps):
         release_shared_views(spark)
         for name in names:
             _reclaim_dead_blocks(spark)
             release_plugin_caches()
+            c0 = codegen_compilations(spark) if compiles is not None else 0
             t0 = time.time()
             specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             raw[name].append(time.time() - t0)
+            if compiles is not None:
+                compiles.setdefault(name, []).append(codegen_compilations(spark) - c0)
     return raw
 
 

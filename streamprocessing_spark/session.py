@@ -62,6 +62,14 @@ def worker_daemon_confs(master: str, executor_path: str | None = None) -> dict[s
     }
 
 
+def codegen_compilations(spark: SparkSession) -> int:
+    """Generated-code classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics``). A delta of 0 over a repeated pass means the
+    codegen cache held the pass; a pass's first run counts its classes."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def get_spark(app_name: str = "streamprocessing-spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
@@ -76,6 +84,13 @@ def get_spark(app_name: str = "streamprocessing-spark", master: str | None = Non
     - Arrow: vectorized Python<->JVM transfer for the Pandas-UDF operators
       (similarity search, multimodal decode) — the only places we leave the
       JVM.
+    - ``spark.sql.codegen.cache.maxEntries``: compiled generated-code
+      classes are cached for a whole pass's working set, so a repeated
+      loop round or pass recompiles nothing. The conf is static and read
+      once per JVM, when codegen first runs: it takes effect only if this
+      is the JVM's first session. A JVM that first ran someone else's
+      session (e.g. the driver's vanilla one) keeps Spark's 100 entries;
+      a cluster sets it in ``spark-defaults.conf``.
     """
     cpus = _cpus()
     builder = (
@@ -110,6 +125,17 @@ def get_spark(app_name: str = "streamprocessing-spark", master: str | None = Non
         .config("spark.local.dir", scratch_root())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Every loop round and every pass re-plans the same operators, and
+        # a plan's generated Java is recompiled (Janino, 8-11 ms a class)
+        # unless Spark's JVM-wide LRU of compiled classes still holds it.
+        # That LRU holds 100 by default, and a cyclic working set larger
+        # than an LRU misses on almost every lookup. Measured per pass
+        # (CodegenMetrics, 4 vCPUs): graph_iterative generates 122 classes
+        # and recompiled 92-101 of them every warm pass (0 at 4096);
+        # rainstorm_apps generates 33 (fits either way); the 176-query
+        # bench headline at sf0.01 generates 2,736 and recompiled 4,205
+        # (106 at 4096). Static, so see the docstring for who it reaches.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # ContextCleaner only reclaims dead localCheckpoint/persist
         # blocks after a JVM GC, and its default periodic GC is 30min —
         # longer than a whole multi-query session here, so dead blocks

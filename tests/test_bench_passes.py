@@ -58,6 +58,16 @@ def test_plugin_caches_released_before_every_cell(passes):
     assert events.count(("caches",)) == sum(1 for e in events if e[0] == "query")
 
 
+def test_compiles_gets_each_cells_codegen_delta_in_pass_order(monkeypatch, passes):
+    _, names, _ = passes
+    counter = iter(range(0, 1000, 5))
+    monkeypatch.setattr(bench, "codegen_compilations", lambda spark: next(counter))
+    noop = SimpleNamespace(fn=lambda spark, sf_dir: SimpleNamespace(write=_NoopWrite()))
+    compiles: dict[str, list[int]] = {}
+    bench.timed_passes(object(), dict.fromkeys(names, noop), names, "sf", 2, compiles)
+    assert compiles == {n: [5, 5] for n in names}
+
+
 def test_each_name_gets_reps_samples_in_headline_order_per_pass(passes):
     events, names, raw = passes
     assert list(raw) == names

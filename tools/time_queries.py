@@ -7,7 +7,10 @@ view's builder before a consumer to time the consumer's marginal cost.
 Usage:
     python tools/time_queries.py [--sf DIR] [--reps N] query [query ...]
 
-Prints one line per query: median [min, max] over N reps.
+Prints one line per query: median [min, max] over N reps, then the
+generated-code classes it compiled in each rep. Past the first rep a
+query should compile nothing; a non-zero count there means Spark's
+codegen cache no longer holds the pass (session.get_spark sizes it).
 """
 
 from __future__ import annotations
@@ -42,13 +45,18 @@ def main() -> int:
         "overwrite"
     ).save()
 
-    raw = timed_passes(spark, specs, args.queries, args.sf, args.reps)
+    compiles: dict[str, list[int]] = {}
+    raw = timed_passes(spark, specs, args.queries, args.sf, args.reps, compiles)
     total = 0.0
     for name in args.queries:
         reps = sorted(raw[name])
         med = reps[(len(reps) - 1) // 2]
         total += med
-        print(f"{med:8.3f}  [{reps[0]:.3f}, {reps[-1]:.3f}]  {name}", flush=True)
+        compiled = "/".join(map(str, compiles[name]))
+        print(
+            f"{med:8.3f}  [{reps[0]:.3f}, {reps[-1]:.3f}]  {name}  compiled {compiled}",
+            flush=True,
+        )
     print(f"{total:8.3f}  TOTAL (sum of medians)")
     return 0
 
