@@ -291,7 +291,7 @@ def timed_passes(
     ``names`` that reads a view prices its build and later readers price
     only their marginal work over the built view — the amortization the
     driver's one-session gate sees. Each cell runs the janitor, releases
-    the plugin caches (NOT a global clearCache, which would evict the
+    the tracked persists (NOT a global clearCache, which would evict the
     shared views mid-pass), then times a noop write. A ``compiles`` dict
     gets each name's generated-code compilations per timed cell, in pass
     order (``session.codegen_compilations``)."""

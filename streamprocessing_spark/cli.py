@@ -118,7 +118,6 @@ def _cmd_rainstorm(args: argparse.Namespace) -> int:
         print(f"rainstorm: {n} output records -> {args.dest}", file=sys.stderr)
     finally:
         out.unpersist()
-        E.release_plugin_caches()
     return 0
 
 

@@ -31,8 +31,13 @@ does (ops/*): app1_op1, app1_op2, app2_op1 and their ``vec_*`` twins
 emit, app2_op2 and vec_app2_op2 count. That contract is declared once,
 by ``@_declares`` on the callable at the bottom of this module, and
 ``PluginOp.declared`` / ``BatchPluginOp.declared`` build an op under it.
-A narrowed contract plans one branch with no persist; a record of the
-other kind fails the task rather than being dropped.
+A narrowed contract plans that one branch; a record of the other kind
+fails the task rather than being dropped. An undeclared ("mixed") op —
+an ``ExecOp`` or a user callable — keeps the reference's per-record
+classification: its tagged output collapses in one aggregate, so the
+kernel still runs once per record and nothing is persisted
+(``_collapse_tagged``). Mixed is batch-only; a stream needs a declared
+contract.
 
 Operator chaining. Each Python op (``PluginOp``, ``BatchPluginOp``) is a
 per-batch ``tagger``: a pandas batch of (key, value) records in, a tagged
@@ -111,13 +116,15 @@ class PluginOp:
 
     ``contract`` statically narrows the op's output kind:
     - "mixed" (default): records may be emits or counts — the general
-      batch contract; the output unions both branches.
+      batch contract; both kinds collapse in one aggregate.
     - "emit": the op never returns count records → output is the emit
       stream only. Required for streaming append mode.
     - "count": the op only returns count keys → output is the keyed
-      aggregate only. Required for streaming: the mixed union of an
-      aggregate with a stateless branch trips Spark's global-watermark
-      correctness checker (and genuinely mixes append/update semantics).
+      aggregate only.
+    A stream must declare "emit" or "count": a mixed op on a stream
+    raises ValueError, because a streaming aggregate would re-emit
+    earlier micro-batches' emits in update mode and lose them in
+    complete mode (Spark accepts both plans without error).
     The reference never needed the distinction because its sink printed
     whatever arrived; Spark's sink modes make the contract explicit.
     A narrowed contract is enforced: a record of the other kind fails the
@@ -169,32 +176,26 @@ class PluginOp:
 
 
 class _PluginCacheRegistry:
-    """Mixed-contract tagged caches awaiting eviction, oldest first (ops
-    under a narrowed contract plan one branch and persist nothing). The
-    cache must outlive _collapse_tagged (the returned union is lazy — the
-    caller materializes it later), so eviction is deferred: a long-lived
-    session calls release_plugin_caches() between jobs, and the registry
-    is bounded so even a caller that never releases pins at most a few
-    jobs' worth of partitions.
+    """tracked_persist's caches awaiting eviction, oldest first. A cache
+    must outlive the query that persisted it (its consumers run later),
+    so eviction is deferred: a long-lived session calls
+    release_plugin_caches() between jobs, and the registry is bounded so
+    even a caller that never releases pins at most KEEP intermediates.
 
     The registry is strictly driver-side state: it pickles as EMPTY
     (__reduce__), because this module ships by value to executors
     (shipping.ensure_shippable) and cached DataFrames hold a
     SparkContext, which must never ride along in a serialized task."""
 
-    KEEP = 4  # jobs' caches kept live before oldest-first eviction
+    # the deepest query persists 2 intermediates; 16 covers that times a
+    # bench session's interleaving, so none is evicted mid-flight
+    KEEP = 16
 
-    def __init__(self, keep: int | None = None) -> None:
+    def __init__(self) -> None:
         self.dfs: list[DataFrame] = []
-        if keep is not None:
-            self.KEEP = keep
 
     def __reduce__(self):
-        # preserve the instance's KEEP bound (ADVICE r09): reconstructing
-        # with no args would silently reset _QUERY_CACHES to KEEP=4,
-        # reintroducing the mid-flight eviction its keep=16 prevents —
-        # only the cached DataFrames themselves must not ride along
-        return (_PluginCacheRegistry, (self.KEEP,))
+        return (_PluginCacheRegistry, ())
 
     def add(self, df: DataFrame) -> None:
         self.dfs.append(df)
@@ -217,40 +218,28 @@ class _PluginCacheRegistry:
         return n
 
 
-_PLUGIN_CACHES = _PluginCacheRegistry()
-
-# Query-level persists live in their OWN registry (ADVICE r08):
-# t_closeness_audit registers two intermediates, and sharing the
-# plugin registry's KEEP=4 meant interleaved plugin ops could evict
-# cust/scored before all their consumers ran — correct (deterministic
-# recompute) but silently reintroducing the exact multi-consumer
-# rebuild tracked_persist exists to avoid. A separate bound keeps the
-# two lifetimes independent; KEEP=16 comfortably covers the deepest
-# query (2 intermediates) times a bench session's interleaving.
-_QUERY_CACHES = _PluginCacheRegistry(keep=16)
+_QUERY_CACHES = _PluginCacheRegistry()
 
 
 def release_plugin_caches(blocking: bool = False) -> int:
-    """Unpersist every tagged cache left by mixed-contract plugin runs
-    AND query-level tracked persists; returns how many were released.
-    Safe at any time: an unpersisted result that is re-collected later
-    just recomputes (correct for the deterministic ops this engine
-    ships; a non-deterministic user fn should be released only after
-    its output is materialized)."""
-    return _PLUGIN_CACHES.release(blocking) + _QUERY_CACHES.release(blocking)
+    """Unpersist every query-level tracked persist; returns how many were
+    released. Safe at any time: an unpersisted result that is
+    re-collected later just recomputes (correct for the deterministic
+    queries this engine ships)."""
+    return _QUERY_CACHES.release(blocking)
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
     """persist() a multi-consumer intermediate and register it for the
-    session's bounded eviction (release_plugin_caches / KEEP oldest-first,
-    in a query-level registry separate from plugin caches so interleaved
-    plugin ops can't evict a query's intermediates mid-flight).
+    session's bounded eviction (release_plugin_caches / KEEP oldest-first).
     Preferred over eager localCheckpoint for small intermediates: persist
     is lazy (the first consumer's job pipelines the build instead of
     paying a blocking materialization up front) and measured ~2× faster
     with far less variance on a busy session (t_closeness_audit r07
-    regression post-mortem). Recompute-after-eviction is correct for the
-    deterministic queries this engine ships."""
+    regression post-mortem). Recomputing instead of persisting costs
+    more still: t_closeness_audit without it took 14.1 s against 3.3 s
+    (sf0.1, 6 alternating reps). Recompute-after-eviction is correct for
+    the deterministic queries this engine ships."""
     df = df.persist()
     _QUERY_CACHES.add(df)
     return df
@@ -266,32 +255,33 @@ def _collapse_tagged(tagged: DataFrame, contract: str = "mixed") -> DataFrame:
     (key, total-as-string) — the framework half of the stdout contract
     (server.go:334-361). Under a static 'emit'/'count' contract the
     kernel has already refused every record of the other kind, so the
-    stream is that one branch (see PluginOp.contract)."""
+    stream is that one branch (see PluginOp.contract).
+
+    A mixed stream collapses in ONE aggregate over (kind, key, rid,
+    emitted), where rid is a fresh id and emitted the value on each emit
+    row, both null on count rows: an emit group is its own single row
+    (duplicate emits survive) and a count group is one key's total. The
+    kernel runs once per record and nothing is persisted. Mixed is
+    batch-only: a streaming aggregate would re-emit or drop earlier
+    micro-batches' emits, so a stream must declare its op's kind."""
     if contract == "emit":
         return tagged.select("key", "value")
     if contract == "count":
         return _count_keys(tagged)
-    # Both union branches consume `tagged`; without a persist each
-    # branch re-executes the Python kernel over the full input (2× per
-    # op, 4× for a job of two mixed PluginOps), and a non-deterministic
-    # user fn could split records inconsistently between the branches.
-    # Batch: persist the tagged output once; eviction is deferred via
-    # _PLUGIN_CACHES (the union is lazy). Streaming: persist is not
-    # applicable — each micro-batch is evaluated once per sink anyway.
-    if not tagged.isStreaming:
-        # Spark serves persist() from any live cache of the same plan, so
-        # a repeated job would read an earlier run's rows (and a
-        # non-deterministic op replay its first output): drop that entry
-        # and its registry handle (whose unpersist would drop ours).
-        _PLUGIN_CACHES.dfs = [d for d in _PLUGIN_CACHES.dfs if not d.sameSemantics(tagged)]
-        tagged.unpersist()
-        tagged = tagged.persist()
-        _PLUGIN_CACHES.add(tagged)
-    emits = tagged.where(F.col("kind") == "emit").select("key", "value")
-    counts = _count_keys(tagged.where(F.col("kind") == "count"))
-    # Either side may be empty; the union keeps the mixed-contract
-    # semantics of the reference framework.
-    return emits.unionByName(counts)
+    if tagged.isStreaming:
+        raise ValueError(
+            'a mixed-contract op cannot run on a stream: declare its contract "emit" or "count"'
+        )
+    emit = F.col("kind") == "emit"
+    # the emit's value is a grouping key too, not a first() buffer: a
+    # string buffer would demote the hash aggregate to a sort aggregate
+    rid = F.when(emit, F.monotonically_increasing_id()).alias("rid")
+    emitted = F.when(emit, F.col("value")).alias("emitted")
+    return (
+        tagged.groupBy("kind", "key", rid, emitted)
+        .agg(F.count(F.lit(1)).cast("string").alias("n"))
+        .select("key", F.when(emit, F.col("emitted")).otherwise(F.col("n")).alias("value"))
+    )
 
 
 def _run_tagged(records: DataFrame, tag: Tagger, contract: str) -> DataFrame:
@@ -334,7 +324,7 @@ class BatchPluginOp:
     This is the translation layer for plugin shapes that ARE vectorizable
     (regex filters, CSV projections, passthrough counts): the hot loop
     becomes pandas column ops over Arrow batches while the RainStormJob
-    facade, count aggregation, and mixed-contract union stay identical.
+    facade, count aggregation, and mixed-contract aggregate stay identical.
     The eliminated cost is the per-record Python loop, which grows
     linearly with rows while the batch ops stay vectorized (bench pair:
     rainstorm_vectorized_app2 vs rainstorm_plugin_app2)."""
@@ -409,15 +399,23 @@ class ExecOp:
     exists so reference parity includes the argv contract itself.
     Forks happen executor-side inside mapInPandas partitions, so the
     cost parallelizes across cores/executors and nothing flows through
-    the driver."""
+    the driver.
+
+    Fork latency, not data volume, is the cost, so ``apply`` first
+    spreads the records over ``defaultParallelism`` partitions: a small
+    input scans as a couple of splits, and AQE coalesces the shuffle of
+    an upstream (mixed or count) aggregate to one or two partitions,
+    either of which would serialize thousands of fork/execs behind 2-3
+    tasks."""
 
     exe: str
     contract: str = "mixed"
 
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
+        spread = records.repartition(records.sparkSession.sparkContext.defaultParallelism)
         # the per-record contract lives in PluginOp's kernel alone
         return PluginOp(functools.partial(exec_op_record, self.exe), self.contract).apply(
-            records, pattern
+            spread, pattern
         )
 
 

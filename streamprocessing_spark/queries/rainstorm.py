@@ -206,7 +206,8 @@ def rainstorm_exec_app2(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract's inherent cost (~10^4x an Arrow batch, SURVEY.md §4.2) and
     the adapter exists for parity, not throughput — the bounded slice
     keeps the correctness gate cheap while exercising the full path. The
-    forks run executor-side, in parallel across partitions."""
+    forks run executor-side, in parallel across partitions (ExecOp
+    spreads its input over every core)."""
     import os
 
     ops_dir = os.path.join(os.path.dirname(os.path.dirname(__file__)), "ops")
@@ -216,8 +217,4 @@ def rainstorm_exec_app2(spark: SparkSession, sf_dir: str) -> DataFrame:
         op2=E.ExecOp(os.path.join(ops_dir, "app2op2.py")),
         pattern="F",
     )
-    # fork latency, not data volume, is the cost: spread the records over
-    # every core (a parquet file this small scans as a couple of splits,
-    # which would serialize thousands of fork/execs behind 2-3 tasks)
-    records = _record_stream(spark, sf_dir, orders=o).repartition(64)
-    return job.run(records)
+    return job.run(_record_stream(spark, sf_dir, orders=o))

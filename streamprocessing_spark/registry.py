@@ -57,14 +57,13 @@ _QUERY_MODULES = (
     "streamprocessing_spark.queries.rainstorm",
 )
 
-# Queries whose code changed after their last gate oracle row: every
-# Python kernel now starts in a local session's own worker daemon
-# (session.worker_daemon_confs), so the rainstorm family plus one kernel
-# caller per other Python API. Keep each family contiguous so its shared
+# Queries whose code changed after their last gate oracle row: the
+# engine's op surfaces (mixed-contract ops collapse in one aggregate,
+# ExecOp spreads its input over every core) and the query that keeps
+# engine.tracked_persist. Keep each family contiguous so its shared
 # views are built once, builder ahead of consumers, and reset the tuple
 # to the queries a change touches.
 GATE_FIRST = (
-    # op1 → op2 in one mapInPandas pass
     "rainstorm_plugin_app1",
     "rainstorm_plugin_app2",
     "rainstorm_vectorized_app1",
@@ -72,12 +71,7 @@ GATE_FIRST = (
     "rainstorm_streaming_app1",
     "rainstorm_streaming_app2",
     "rainstorm_exec_app2",
-    # a mapInPandas similarity kernel, a pandas UDAF, a cogrouped
-    # applyInPandas and a Python UDTF
-    "bitext_mine_margin",
-    "udaf_geometric_mean",
-    "cogroup_asof_enrich",
-    "udtf_bigrams",
+    "t_closeness_audit",
 )
 
 

@@ -133,20 +133,18 @@ def test_chained_batch_op2_sees_key_value_columns(spark, records):
 
 def test_repeated_mixed_job_runs_its_own_kernel(spark, records, tmp_path):
     """Two runs of one mixed-contract job in a session, with no release in
-    between, each run the op: the second must not read the tagged stream
-    the first persisted (a non-deterministic op would replay it)."""
+    between, each run the op: the second must not read the first run's
+    output (a non-deterministic op would replay it)."""
     src = tmp_path / "value"
 
     def current(key, value, pattern):
         return [(key, src.read_text())]
 
     job = E.RainStormJob(E.PluginOp(current), E.PluginOp(lambda k, v, p: [(k, v)]))
-    E.release_plugin_caches(blocking=True)
     seen = []
     for text in ("first", "second"):
         src.write_text(text)
         seen.append({r.value for r in job.run(records).collect()})
-    E.release_plugin_caches(blocking=True)
     assert seen == [{"first"}, {"second"}]
 
 
@@ -209,55 +207,72 @@ def test_num_tasks_repartition(spark, records):
     assert job.run(records).count() == 1
 
 
-def test_mixed_contract_cache_released(spark, records):
-    """A mixed-contract job persists its tagged stream (both union
-    branches consume it); release_plugin_caches must leave no pinned
-    RDDs behind — a long-lived session running many jobs must not
-    accumulate cached partitions (VERDICT r01 'What's wrong' #3)."""
-    E.release_plugin_caches(blocking=True)
-    # Track RDD *ids*, not counts: other tests' localCheckpoint RDDs (e.g.
-    # connected components) stay pinned until GC and may disappear between
-    # the two measurements — only ids NEW since the baseline are ours.
-    def _ids():
+def test_mixed_contract_runs_op_once_and_persists_nothing(spark, records):
+    """A mixed-contract op collapses its emits and counts in one
+    aggregate: the op runs once per input record (two union branches
+    over an unpersisted stream would run it twice) and the job leaves no
+    persisted RDD behind. Track RDD *ids*: other tests' localCheckpoint
+    RDDs stay pinned until GC and may vanish between the two reads."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def persisted_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
-    baseline = _ids()
-    job = E.RainStormJob(op1=E.PluginOp(E.app2_op1), op2=E.PluginOp(E.app2_op2), pattern="F")
-    out = job.run(records)
-    out.collect()
-    ours = _ids() - baseline
-    assert ours  # cache was live
-    released = E.release_plugin_caches(blocking=True)
-    assert released >= 1
-    assert not (_ids() & ours)
+    def mixed(key, value, pattern):
+        calls.add(1)
+        return "bucket" if key == "f:2" else [(key, "x")]
+
+    baseline = persisted_ids()
+    job = E.RainStormJob(E.PluginOp(mixed), E.NativeOp(lambda df, p: df))
+    out = sorted(tuple(r) for r in job.run(records).collect())
+    assert out == [("bucket", "1"), ("f:1", "x"), ("f:3", "x")]
+    assert calls.value == 3
+    assert not (persisted_ids() - baseline)
 
 
-@pytest.mark.slow
-def test_plugin_cache_registry_bounded(spark, records):
-    """Even without explicit release, the cache registry is bounded:
-    running many mixed-contract jobs keeps at most _PLUGIN_CACHE_KEEP
-    tagged caches pinned (oldest evicted first)."""
-    E.release_plugin_caches(blocking=True)
-    baseline = len(spark.sparkContext._jsc.getPersistentRDDs())
-    job = E.RainStormJob(op1=E.PluginOp(E.app2_op1), op2=E.PluginOp(E.app2_op2), pattern="F")
-    for _ in range(E._PluginCacheRegistry.KEEP + 3):
-        job.run(records).collect()
-    assert len(E._PLUGIN_CACHES.dfs) <= E._PluginCacheRegistry.KEEP
-    E.release_plugin_caches(blocking=True)
-    assert len(spark.sparkContext._jsc.getPersistentRDDs()) <= baseline
+def test_mixed_contract_keeps_duplicate_emits(spark, records):
+    """Each emit is its own group in the mixed aggregate: an op that
+    emits the same record for every input returns one row per input."""
+    job = E.RainStormJob(E.PluginOp(lambda k, v, p: [("same", "row")]), E.NativeOp(lambda df, p: df))
+    assert [tuple(r) for r in job.run(records).collect()] == [("same", "row")] * 3
 
 
-def test_plugin_cache_registry_pickle_preserves_keep():
-    """__reduce__ must carry the instance KEEP bound (ADVICE r09): a
-    pickled _QUERY_CACHES (keep=16) reconstructing with the class
-    default 4 would silently reintroduce mid-flight eviction. The
-    DataFrame list still pickles empty (driver-only state)."""
+def test_mixed_contract_rejected_on_a_stream(spark):
+    """A streaming aggregate would re-emit (update mode) or drop
+    (complete mode) earlier micro-batches' emits, so a mixed op on a
+    stream fails at plan time, naming the fix."""
+    stream = spark.readStream.format("rate").load().select(
+        F.col("value").cast("string").alias("key"), F.col("value").cast("string").alias("value")
+    )
+    with pytest.raises(ValueError, match='declare its contract "emit" or "count"'):
+        E.PluginOp(lambda k, v, p: [(k, v)]).apply(stream, None)
+
+
+def test_tracked_persist_bounded_and_pickles_empty(spark):
+    """tracked_persist keeps at most KEEP intermediates live, evicting
+    the oldest first, and its registry pickles empty: it ships with this
+    module into every task and must not carry a DataFrame along."""
     import pickle
 
-    rt = pickle.loads(pickle.dumps(E._PluginCacheRegistry(keep=16)))
-    assert rt.KEEP == 16 and rt.dfs == []
-    rt_q = pickle.loads(pickle.dumps(E._QUERY_CACHES))
-    assert rt_q.KEEP == E._QUERY_CACHES.KEEP == 16 and rt_q.dfs == []
+    E.release_plugin_caches(blocking=True)
+    keep = E._PluginCacheRegistry.KEEP
+    dfs = [E.tracked_persist(spark.range(i + 1)) for i in range(keep + 3)]
+    assert [df.is_cached for df in dfs] == [False] * 3 + [True] * keep
+    assert len(E._QUERY_CACHES.dfs) == keep
+    assert pickle.loads(pickle.dumps(E._QUERY_CACHES)).dfs == []
+    assert E.release_plugin_caches(blocking=True) == keep
+    assert not any(df.is_cached for df in dfs)
+
+
+def test_exec_op_spreads_input_over_default_parallelism(spark, records, tmp_path):
+    """Fork latency is an ExecOp's cost, so its kernel runs on
+    defaultParallelism partitions even when the input is one partition."""
+    exe = tmp_path / "echo_op"
+    exe.write_text('#!/bin/sh\nprintf "%s\\n%s\\n" "$1" "$2"\n')
+    exe.chmod(0o755)
+    out = E.ExecOp(str(exe), "emit").apply(records.coalesce(1), None)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(out.collect()) == sorted(records.collect())
 
 
 @pytest.mark.slow
@@ -285,4 +300,3 @@ def test_exec_op_matches_plugin(spark, records):
     got = {(r.key, r.value) for r in exec_job.run(records).collect()}
     want = {(r.key, r.value) for r in plugin_job.run(records).collect()}
     assert got == want and got
-    E.release_plugin_caches(blocking=True)

@@ -349,16 +349,19 @@ def test_prototypicality_prune_scans_the_corpus_once(spark, sf_dir):
 def test_declared_rainstorm_ops_plan_one_branch(spark, sf_dir):
     """The shipped ops each declare one output kind, so the batch plugin
     and vectorized apps plan the declared branch alone: no persisted
-    tagged stream and no union with an empty other branch. An undeclared
-    (mixed) op, as in rainstorm_exec_app2, still plans both."""
+    tagged stream and no union with an empty other branch. The
+    undeclared (mixed) ops of rainstorm_exec_app2 collapse in one
+    aggregate each: no persist, no union, one Python pass per op."""
     for name in (
         "rainstorm_plugin_app1", "rainstorm_plugin_app2",
         "rainstorm_vectorized_app1", "rainstorm_vectorized_app2",
     ):
         plan = X.formatted_plan(SPECS[name].fn(spark, sf_dir))
         assert "InMemoryRelation" not in plan and "Union" not in plan, (name, plan)
-    plan = X.formatted_plan(SPECS["rainstorm_exec_app2"].fn(spark, sf_dir))
-    assert "InMemoryRelation" in plan and "Union" in plan, plan
+    df = SPECS["rainstorm_exec_app2"].fn(spark, sf_dir)
+    plan = X.formatted_plan(df)
+    assert "InMemoryRelation" not in plan and "Union" not in plan, plan
+    assert X.count_python_passes(df) == 2, plan
 
 
 def test_declared_rainstorm_jobs_chain_into_one_python_pass(spark, sf_dir, monkeypatch):
