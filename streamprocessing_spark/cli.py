@@ -35,6 +35,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from dataclasses import dataclass
 
 from streamprocessing_spark import engine as E
 
@@ -57,6 +58,26 @@ def _resolve_op(arg: str) -> E.Op:
     )
 
 
+def _chaotic(fn: E.PluginFn) -> E.PluginFn:
+    def chaotic(key: str, value: str, pattern: str | None):
+        from pyspark import TaskContext
+
+        tc = TaskContext.get()
+        if tc is not None and tc.partitionId() < 2 and tc.attemptNumber() == 0:
+            raise RuntimeError("chaos: injected worker failure (RainStormWithFail)")
+        return fn(key, value, pattern)
+
+    return chaotic
+
+
+@dataclass(frozen=True)
+class _ChaosExecOp(E.ExecOp):
+    """Keeps ExecOp's spread: the two killed tasks are two of many."""
+
+    def record_fn(self) -> E.PluginFn:
+        return _chaotic(super().record_fn())
+
+
 def _chaos_wrap(op: E.Op) -> E.Op:
     """RainStormWithFail analogue (main.go:223-243, server.go:553-572):
     the reference kills 2 workers mid-job and recovers by WAL replay.
@@ -64,23 +85,11 @@ def _chaos_wrap(op: E.Op) -> E.Op:
     and 1; Spark's task retry (session.py runs local[n,2]) replays them
     and the job must still produce exactly-once output. Only PluginOp /
     ExecOp wrap (they run in tasks); NativeOp has no task-side hook."""
-    if not isinstance(op, (E.PluginOp, E.ExecOp)):
-        return op
-
-    inner_fn = op.fn if isinstance(op, E.PluginOp) else None
-    inner_exe = op.exe if isinstance(op, E.ExecOp) else None
-
-    def chaotic(key: str, value: str, pattern: str | None):
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        if tc is not None and tc.partitionId() < 2 and tc.attemptNumber() == 0:
-            raise RuntimeError("chaos: injected worker failure (RainStormWithFail)")
-        if inner_fn is not None:
-            return inner_fn(key, value, pattern)
-        return E.exec_op_record(inner_exe, key, value, pattern)
-
-    return E.PluginOp(chaotic, contract=op.contract)
+    if isinstance(op, E.PluginOp):
+        return E.PluginOp(_chaotic(op.fn), contract=op.contract)
+    if isinstance(op, E.ExecOp):
+        return _ChaosExecOp(op.exe, op.contract)
+    return op
 
 
 def _cmd_rainstorm(args: argparse.Namespace) -> int:

@@ -411,12 +411,14 @@ class ExecOp:
     exe: str
     contract: str = "mixed"
 
+    def record_fn(self) -> PluginFn:
+        """The per-record callable PluginOp's kernel runs."""
+        return functools.partial(exec_op_record, self.exe)
+
     def apply(self, records: DataFrame, pattern: str | None) -> DataFrame:
         spread = records.repartition(records.sparkSession.sparkContext.defaultParallelism)
         # the per-record contract lives in PluginOp's kernel alone
-        return PluginOp(functools.partial(exec_op_record, self.exe), self.contract).apply(
-            spread, pattern
-        )
+        return PluginOp(self.record_fn(), self.contract).apply(spread, pattern)
 
 
 Op = NativeOp | PluginOp | BatchPluginOp | ExecOp

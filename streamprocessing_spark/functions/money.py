@@ -12,9 +12,8 @@ aggregate (``floor(x*10000+0.5)`` cast BIGINT — source money values carry
 at most 4 decimals: prices 2, discount×price 4). Integer sums are
 accumulation-order-insensitive, so every aggregate/window/rank computed on
 them is bit-identical across engines; divide back to dollars only at
-output. The SQL constants below are the DuckDB spellings of the identical
-expression trees — oracles must inline them verbatim so both engines run
-the same IEEE ops.
+output. Oracles spell the identical expression trees in DuckDB SQL, so
+both engines run the same IEEE ops.
 """
 
 from __future__ import annotations
@@ -31,18 +30,3 @@ def tt(expr: Column) -> Column:
 def money(sum_tt: Column) -> Column:
     """BIGINT sum of ten-thousandths → 2-decimal dollars (portable)."""
     return F.floor(sum_tt / F.lit(10000.0) * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)
-
-
-def money4(sum_tt: Column) -> Column:
-    """BIGINT sum of ten-thousandths → 4-decimal value (for avg-like
-    outputs that were previously round(x, 4))."""
-    return sum_tt / F.lit(10000.0)
-
-
-# DuckDB spellings (keep textually in sync with the Column builders above).
-def sql_tt(expr: str) -> str:
-    return f"CAST(floor(({expr}) * 10000.0 + 0.5) AS BIGINT)"
-
-
-def sql_money(sum_expr: str) -> str:
-    return f"floor(({sum_expr}) / 10000.0 * 100.0 + 0.5) / 100.0"

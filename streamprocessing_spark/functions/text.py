@@ -103,14 +103,6 @@ def lang_pick(hits: dict[str, Column], text: Column) -> Column:
     return F.when(has_cjk, F.lit("zh")).otherwise(best)
 
 
-def lang_id(text: Column) -> Column:
-    """Single-column convenience form of lang_pick (tokenizes inline —
-    fine for ad-hoc use; the registered query materializes the token array
-    and hit counts in projections first)."""
-    toks = tokens(text)
-    return lang_pick({lang: stopword_hits(toks, lang) for lang in STOPWORDS}, text)
-
-
 def quality_from_stats(n_tok: Column, stop_hits: Column, n_chars: Column, n_alpha: Column) -> Column:
     """Composite document-quality score in [0,1] from pre-materialized
     surface stats (materialize them in a projection — each is referenced
@@ -134,14 +126,6 @@ def quality_from_stats(n_tok: Column, stop_hits: Column, n_chars: Column, n_alph
 
 def alpha_count(text: Column) -> Column:
     return F.length(F.regexp_replace(text, r"[^A-Za-z0-9]", ""))
-
-
-def quality_score(text: Column) -> Column:
-    """Single-column convenience form of quality_from_stats."""
-    toks = tokens(text)
-    return quality_from_stats(
-        F.size(toks), stopword_hits(toks, "en"), F.length(text), alpha_count(text)
-    )
 
 
 def fingerprint(text: Column) -> Column:

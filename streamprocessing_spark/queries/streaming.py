@@ -8,9 +8,12 @@ tests/test_streaming.py, where a batch oracle can't express them.
 
 Execution shape: all the pipelines are independent bounded replays of
 the same source, so the first query call starts ALL of them concurrently
-and awaits the batch (start_memory_sink); results are memoized per
-(session, sf_dir). Sequential drains would each pay stream startup +
-state-store spin-up; the concurrent batch costs roughly the slowest one.
+and awaits the batch (start_memory_sink). Each memory sink and each
+ingest twin's result is a shared view (shared_views.view_name), so the
+session catalog memoizes them per (session, sf_dir) and
+release_shared_views releases them, the ingest stores on disk with them.
+Sequential drains would each pay stream startup + state-store spin-up;
+the concurrent batch costs roughly the slowest one.
 This mirrors a production deployment too — multiple streaming queries
 sharing one SparkSession is the normal multi-sink topology.
 """
@@ -23,6 +26,7 @@ from pyspark.sql import functions as F
 from streamprocessing_spark.functions import money as M
 
 from streamprocessing_spark.registry import register
+from streamprocessing_spark.shared_views import ingest_root, view_name
 from streamprocessing_spark.streaming.replay import (
     run_to_memory_sink,
     start_memory_sink,
@@ -328,36 +332,29 @@ _PIPELINES: dict[str, tuple] = {
     "streaming_malformed_json_quarantine": (_build_malformed_json_quarantine, "complete"),
 }
 
-# (applicationId, sf_dir) -> {query_name: memory-sink table name}
-_DRAINED: dict[tuple[str, str], dict[str, str]] = {}
-
-
 def _drained(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Return `name`'s end-of-stream result, draining ALL pipelines
-    concurrently on first use (memoized per session + sf_dir). Falls back
-    to a solo sequential drain if the batch start fails."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sinks = _DRAINED.get(key)
-    if sinks is not None and name in sinks:
-        return spark.table(sinks[name])
+    concurrently, each into a memory sink named by its shared view, on
+    first use. Falls back to a solo sequential drain if the batch fails."""
+    view = view_name(name, sf_dir)
+    if spark.catalog.tableExists(view):
+        return spark.table(view)
     started = []
     try:
-        table_names: dict[str, str] = {}
         for qname, (build, mode) in _PIPELINES.items():
-            q, sink_name, cleanup = start_memory_sink(build(spark, sf_dir), mode)
-            started.append((q, cleanup))
-            table_names[qname] = sink_name
-        for q, cleanup in started:
+            started.append(
+                start_memory_sink(build(spark, sf_dir), mode, view_name(qname, sf_dir))
+            )
+        for q, _, _ in started:
             q.awaitTermination()
-            cleanup()
-        _DRAINED[key] = table_names
-        return spark.table(table_names[name])
+        return spark.table(view)
     except Exception as exc:
         # concurrent batch failed (e.g. another test holds conflicting
         # session state) — surface the root cause (a silent fallback
         # would hide a broken pipeline behind uniformly slow results),
-        # stop stragglers and drop their throwaway checkpoints, then run
-        # just the requested pipeline sequentially, unmemoized
+        # stop stragglers and drop their partial views so no later call
+        # serves them, then run just the requested pipeline
+        # sequentially, unmemoized
         import sys
 
         print(
@@ -365,14 +362,17 @@ def _drained(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             f"falling back to a solo drain of {name!r}",
             file=sys.stderr,
         )
-        for q, cleanup in started:
+        for q, sink, _ in started:
             try:
                 q.stop()
             except Exception:  # noqa: BLE001
                 pass
-            cleanup()
+            spark.catalog.dropTempView(sink)
         build, mode = _PIPELINES[name]
         return run_to_memory_sink(build(spark, sf_dir), mode)
+    finally:
+        for _, _, cleanup in started:
+            cleanup()
 
 
 @register(
@@ -953,35 +953,25 @@ def streaming_ivf_pairs_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-# Ingest-twin drains: (tag, applicationId, sf_dir) -> the drained sink
-# (a frozen dataclass of strings and numbers — module globals must never
-# hold a DataFrame; shipping.ensure_shippable pickles this module by value).
-_INGEST: dict[tuple[str, str, str], object] = {}
-
-
-def _ingest_drain(spark: SparkSession, sf_dir: str, tag: str, make_sink):
+def _ingest_drain(spark: SparkSession, sf_dir: str, tag: str, make_sink, result) -> DataFrame:
     """Drain the documents table through the sink ``make_sink(state_dir,
-    docs)`` builds, once per (session, sf_dir), and return that sink.
-    Staging law shared by every ingest twin (and the ingest-dedup and
+    docs)`` builds, once per (session, sf_dir), and return
+    ``result(sink, spark)``, the sink's read of its store. Staging law
+    shared by every ingest twin (and the ingest-dedup and
     checkpoint-restart tests): three doc_id%3 single-file chunks replayed
     as one-batch-per-file micro-batches. The store lives under
-    ``graft_<tag>_ingest`` in the non-/tmp scratch root, and a memoized
-    store is trusted only once its _DONE marker exists."""
-    import hashlib
+    ``shared_views.ingest_root``; the result, uncached, is the shared
+    view ``<tag>_ingest``, trusted only while the store's _DONE exists."""
     import os
     import shutil
 
-    from streamprocessing_spark.session import scratch_root
     from streamprocessing_spark.sources.readers import load_table
 
-    app_id = spark.sparkContext.applicationId
-    key = (tag, app_id, sf_dir)
-    sink = _INGEST.get(key)
-    if sink is not None and os.path.isfile(os.path.join(os.path.dirname(sink.base), "_DONE")):
-        return sink
+    view = view_name(f"{tag}_ingest", sf_dir)
+    base = os.path.join(ingest_root(spark), view)
+    if spark.catalog.tableExists(view) and os.path.isfile(os.path.join(base, "_DONE")):
+        return spark.table(view)
 
-    digest = hashlib.md5(f"{app_id}:{sf_dir}".encode()).hexdigest()[:12]
-    base = os.path.join(scratch_root(), f"graft_{tag}_ingest", digest)
     shutil.rmtree(base, ignore_errors=True)  # a half-built prior attempt
     src = os.path.join(base, "src")
     os.makedirs(src, exist_ok=True)
@@ -1004,10 +994,10 @@ def _ingest_drain(spark: SparkSession, sf_dir: str, tag: str, make_sink):
         .start()
     )
     q.awaitTermination()
+    result(sink, spark).createOrReplaceTempView(view)
     with open(os.path.join(base, "_DONE"), "w") as fh:
         fh.write("ok")
-    _INGEST[key] = sink
-    return sink
+    return spark.table(view)
 
 
 # safe top-level import: queries.dedup precedes queries.streaming in
@@ -1051,7 +1041,7 @@ def streaming_paragraph_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFr
             n_total_units=D.paragraph_df(docs, "doc_id", "text").count(),
         )
 
-    pairs = _ingest_drain(spark, sf_dir, "para", make_sink).dup_pairs(spark)
+    pairs = _ingest_drain(spark, sf_dir, "para", make_sink, ParagraphIngestDedup.dup_pairs)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     per_doc = (
         D.paragraph_df(docs, "doc_id", "text")
@@ -1108,8 +1098,8 @@ def streaming_cdc_chunks_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         CdcIngestDedup,
     )
 
-    sink = _ingest_drain(spark, sf_dir, "cdc", lambda state, _: CdcIngestDedup(state, 0.0))
-    dups = sink.dup_instances(spark)
+    make_sink = lambda state, _: CdcIngestDedup(state, 0.0)  # noqa: E731
+    dups = _ingest_drain(spark, sf_dir, "cdc", make_sink, CdcIngestDedup.dup_instances)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     per_doc = (
         D.cdc_chunk_df(docs, "doc_id", "text")
@@ -1157,7 +1147,5 @@ def streaming_containment_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     and retry idempotence pinned in tests/test_round10_ops.py."""
     from streamprocessing_spark.streaming.ingest_dedup import ContainmentIngestDedup
 
-    sink = _ingest_drain(
-        spark, sf_dir, "cont", lambda state, _: ContainmentIngestDedup(state, 0.0)
-    )
-    return sink.containment_pairs(spark)
+    make_sink = lambda state, _: ContainmentIngestDedup(state, 0.0)  # noqa: E731
+    return _ingest_drain(spark, sf_dir, "cont", make_sink, ContainmentIngestDedup.containment_pairs)

@@ -64,14 +64,30 @@ _QUERY_MODULES = (
 # views are built once, builder ahead of consumers, and reset the tuple
 # to the queries a change touches.
 GATE_FIRST = (
-    "rainstorm_plugin_app1",
-    "rainstorm_plugin_app2",
-    "rainstorm_vectorized_app1",
-    "rainstorm_vectorized_app2",
     "rainstorm_streaming_app1",
     "rainstorm_streaming_app2",
-    "rainstorm_exec_app2",
-    "t_closeness_audit",
+    "streaming_count_update",
+    "streaming_append_sink",
+    "streaming_dedup_by_id",
+    "streaming_dedup_watermarked",
+    "streaming_windowed_count",
+    "streaming_session_window",
+    "streaming_session_timeout",
+    "streaming_dedup_then_window",
+    "streaming_complete_topk",
+    "streaming_left_outer_join",
+    "streaming_hourly_daily_rollup",
+    "streaming_sliding_window",
+    "streaming_static_join",
+    "streaming_interval_join",
+    "streaming_stateful_alerts",
+    "streaming_transition_pairs",
+    "streaming_windowed_distinct_users",
+    "streaming_malformed_json_quarantine",
+    "streaming_ivf_pairs_ingest",
+    "streaming_paragraph_dedup_ingest",
+    "streaming_cdc_chunks_ingest",
+    "streaming_containment_ingest",
 )
 
 

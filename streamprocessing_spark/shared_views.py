@@ -9,18 +9,19 @@ the whole cascade; with the driver's correctness gate walking queries
 sequentially in ONE session, that is pure waste (measured: the dedup
 cascade alone re-ran ~5× for ~35 s of the sf0.01 gate budget).
 
-The pattern (proven by queries/graph.py in round 2, factored here):
-materialize the shared relation ONCE per (session, sf_dir) as an eagerly
-built CACHE behind a temp view. A cache — not a localCheckpoint — because
-cached blocks recompute from lineage after executor loss where checkpoint
-blocks would fail the query, and CacheManager can actually free them.
-Module globals hold only view NAMES plus a registry that pickles empty
-(house rule: shippable modules must never capture a DataFrame — it holds
-a SparkContext, which must never ride along in a serialized task; see
-shipping.ensure_shippable and engine._PluginCacheRegistry).
+The session's catalog is the only memo: each kept result is a temp view
+named after what it holds, and "the view exists" is the hit test. A
+shared view is an eagerly built CACHE (a cache, not a localCheckpoint:
+cached blocks recompute from lineage after executor loss where
+checkpoint blocks would fail the query, and CacheManager can free them).
+queries/streaming keeps its drain sinks and ingest-twin results as
+``graft_sv_*`` views too; one-off memory sinks are ``graft_sink_*`` (see
+streaming/replay). Module state holds no view, so nothing here captures
+a DataFrame, which holds a SparkContext and must never ride along in a
+task (this module ships by value: shipping.ensure_shippable).
 
 Staleness contract: each view is a SNAPSHOT — if files under sf_dir
-change within the session, consumers keep serving the cached data until
+change within the session, consumers keep serving the held result until
 ``release_shared_views`` runs (the read-consistency a materialized view
 gives; invalidation is an explicit hook, not guessed from mtimes).
 """
@@ -28,21 +29,26 @@ gives; invalidation is an explicit hook, not guessed from mtimes).
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from streamprocessing_spark.session import scratch_root
 
-class _SharedViewRegistry(dict):
-    """view name -> the cached DataFrame backing it (dropping the temp
-    view alone would leave the cache entry pinned in the CacheManager).
-    Pickles as EMPTY — see module docstring."""
-
-    def __reduce__(self):
-        return (_SharedViewRegistry, ())
+# SHOW VIEWS pattern: `*` is any run of characters, `|` separates choices
+_HELD = "graft_sv_*|graft_sink_*"
 
 
-_VIEWS: dict[str, DataFrame] = _SharedViewRegistry()
+def view_name(kind: str, sf_dir: str) -> str:
+    """The catalog name of the shared result ``kind`` for ``sf_dir``."""
+    return f"graft_sv_{kind}_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+
+
+def ingest_root(spark: SparkSession) -> str:
+    """This session's ingest stores, under ``session.scratch_root()``."""
+    return os.path.join(scratch_root(), "graft_ingest", spark.sparkContext.applicationId)
 
 
 def shared_view(
@@ -54,30 +60,28 @@ def shared_view(
     """Return the shared relation ``kind`` for ``sf_dir``, building and
     eagerly caching it on first use in this session. ``builder`` runs
     only on a miss."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    name = f"graft_sv_{kind}_{digest}"
+    name = view_name(kind, sf_dir)
     if not spark.catalog.tableExists(name):
         df = builder().persist()
         df.count()  # eager: every consumer reads a built cache
         df.createOrReplaceTempView(name)
-        _VIEWS[name] = df
     return spark.table(name)
 
 
+def held_views(spark: SparkSession) -> list[str]:
+    """Every held temp view; SHOW VIEWS runs no Spark job (listTables does)."""
+    rows = spark.sql(f"SHOW VIEWS LIKE '{_HELD}'").collect()
+    return [r.viewName for r in rows if r.isTemporary]
+
+
 def release_shared_views(spark: SparkSession) -> int:
-    """Drop every shared temp view and unpersist its cache — the eviction
-    hook mirroring engine.release_plugin_caches. Returns the number of
-    views released; safe on a session that built none."""
-    released = 0
-    for name, df in list(_VIEWS.items()):
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:  # noqa: BLE001 — view may belong to a dead session
-            pass
-        try:
-            df.unpersist(blocking=True)
-        except Exception:  # noqa: BLE001
-            pass
-        del _VIEWS[name]
-        released += 1
-    return released
+    """Unpersist and drop every held view, then remove this session's
+    ingest stores. Returns the number of views released; safe on a
+    session that holds none."""
+    names = held_views(spark)
+    for name in names:
+        # dropping the view alone would leave a cache pinned in CacheManager
+        spark.table(name).unpersist(blocking=True)
+        spark.catalog.dropTempView(name)
+    shutil.rmtree(ingest_root(spark), ignore_errors=True)
+    return len(names)

@@ -72,8 +72,10 @@ def run_to_memory_sink(
     parquet/Kafka with the same trigger + checkpointLocation arguments.
     """
     q, name, cleanup = start_memory_sink(df, output_mode, query_name, checkpoint_dir)
-    q.awaitTermination()
-    cleanup()
+    try:
+        q.awaitTermination()
+    finally:
+        cleanup()
     return df.sparkSession.table(name)
 
 
@@ -86,19 +88,18 @@ def start_memory_sink(
     """Start (without awaiting) a streaming DataFrame into a memory sink.
 
     Returns ``(query, sink_name, cleanup)``; the caller awaits termination
-    then calls ``cleanup()`` to drop the throwaway checkpoint. Splitting
+    and calls ``cleanup()`` in a ``finally`` to drop the throwaway
+    checkpoint, which a failed stream would otherwise leak. Splitting
     start from await lets independent replays run CONCURRENTLY — n bounded
     drains cost roughly the slowest one instead of the sum (each query is
     its own checkpointed Structured Streaming job; concurrency is the
     normal multi-query deployment shape, not a test trick)."""
-    name = query_name or f"sink_{uuid.uuid4().hex[:12]}"
-    spark = df.sparkSession
-    # A previous run under the same name would leave its memory table
-    # pinned in driver heap; replace rather than accumulate.
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:  # noqa: BLE001
-        pass
+    # The sink registers a temp view under its query name, so the view is
+    # the result's only handle: shared_views.release_shared_views drops
+    # every graft_sink_* and graft_sv_* view, and a rerun under a given
+    # name replaces the previous run's view rather than pinning both.
+    name = query_name or f"graft_sink_{uuid.uuid4().hex[:12]}"
+    df.sparkSession.catalog.dropTempView(name)
     writer = (
         df.writeStream.format("memory")
         .queryName(name)

@@ -30,8 +30,11 @@ def pytest_terminal_summary(terminalreporter, config):
 
 @pytest.fixture(scope="session")
 def spark():
+    from streamprocessing_spark.shared_views import release_shared_views
+
     s = get_spark("tests")
     yield s
+    release_shared_views(s)  # a run leaves no ingest stores behind
 
 
 @pytest.fixture(scope="session")

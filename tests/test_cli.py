@@ -77,6 +77,25 @@ def test_cli_rainstorm_with_fail_exactly_once(spark, tmp_path):
     assert _read_out(dest) == {("PRI-0", "10"), ("PRI-1", "10"), ("PRI-2", "10")}
 
 
+def test_chaos_wrapped_exec_op_keeps_its_spread(spark, tmp_path):
+    """--with-fail keeps ExecOp's spread over defaultParallelism: on a
+    one-partition input the chaotic kernel runs on that many partitions,
+    so the killed first attempts are two tasks of many, and the retried
+    output is still exactly once."""
+    from streamprocessing_spark import engine as E
+    from streamprocessing_spark.cli import _chaos_wrap
+
+    exe = tmp_path / "echo_op"
+    exe.write_text('#!/bin/sh\nprintf "%s\\n%s\\n" "$1" "$2"\n')
+    exe.chmod(0o755)
+    records = spark.createDataFrame(
+        [(f"f:{i}", f"v{i}") for i in range(40)], E.RECORD_SCHEMA
+    ).coalesce(1)
+    out = _chaos_wrap(E.ExecOp(str(exe), "emit")).apply(records, None)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(out.collect()) == sorted(records.collect())
+
+
 def test_cli_explain_prints_plan(spark, capsys):
     """`explain <query>` prints the formatted physical plan with the
     scan and pushdown details visible."""

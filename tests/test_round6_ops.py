@@ -16,7 +16,7 @@ def test_release_shared_views_unpins_graph_cache(spark, sf_dir):
 
     SV.release_shared_views(spark)  # clean slate (other tests may have built views)
     baseline = len(spark.sparkContext._jsc.getPersistentRDDs())
-    n_graph = lambda: sum(1 for k in SV._VIEWS if k.startswith("graft_sv_graphop_"))  # noqa: E731
+    n_graph = lambda: sum(1 for k in SV.held_views(spark) if k.startswith("graft_sv_graphop_"))  # noqa: E731
     df = G._op_view(spark, sf_dir)
     assert df.count() > 0
     assert n_graph() == 1
@@ -51,9 +51,9 @@ def test_dedup_shared_views_release_all_families(spark, sf_dir):
     comp = DQ._components_view(spark, sf_dir)
     assert comp.count() >= pairs.count() > 0
     G._op_view(spark, sf_dir)
-    assert sum(1 for k in SV._VIEWS if k.startswith("graft_sv_mh")) == 2
+    assert sum(1 for k in SV.held_views(spark) if k.startswith("graft_sv_mh")) == 2
     assert SV.release_shared_views(spark) == 3
-    assert len(SV._VIEWS) == 0
+    assert SV.held_views(spark) == []
 
 
 @pytest.mark.slow
@@ -73,7 +73,7 @@ def test_bench_rep_hygiene_prices_build_to_builder(spark, sf_dir):
     SV.release_shared_views(spark)
     try:
         DQ._pairs_view(spark, sf_dir)
-        name = next(k for k in SV._VIEWS if k.startswith("graft_sv_mhpairs"))
+        name = next(k for k in SV.held_views(spark) if k.startswith("graft_sv_mhpairs"))
         assert spark.catalog.isCached(name)
         # consumer path: repeat call serves the SAME cached view
         assert DQ._pairs_view(spark, sf_dir) is not None
@@ -87,18 +87,20 @@ def test_bench_rep_hygiene_prices_build_to_builder(spark, sf_dir):
         SV.release_shared_views(spark)
 
 
-def test_op_view_registry_pickles_empty():
-    """shared_views ships by value to executors — its view registry must
-    serialize as an EMPTY mapping (a DataFrame holds a SparkContext,
-    which must never ride along in a task closure)."""
-    import pickle
+def test_shared_views_module_holds_no_view_state():
+    """shared_views ships by value to executors, so its module globals
+    must never hold a view, sink or store handle (a DataFrame holds a
+    SparkContext, which must never ride along in a task closure): the
+    session catalog is the only memo."""
+    from streamprocessing_spark import shared_views as SV
+    from streamprocessing_spark.queries import streaming as S
 
-    from streamprocessing_spark.shared_views import _SharedViewRegistry
-
-    reg = _SharedViewRegistry()
-    reg["k"] = object()  # stand-in for a DataFrame
-    clone = pickle.loads(pickle.dumps(reg))
-    assert isinstance(clone, _SharedViewRegistry) and len(clone) == 0
+    for mod in (SV, S):
+        held = [
+            k for k, v in vars(mod).items()
+            if isinstance(v, (dict, list, set)) and not k.startswith("__")
+        ]
+        assert held == ([] if mod is SV else ["_PIPELINES"])
 
 
 def test_repetition_dup_trigram_matches_python(spark, sf_dir):

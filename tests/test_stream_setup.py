@@ -6,13 +6,19 @@ manager."""
 
 from __future__ import annotations
 
-import hashlib
 import os
+import tempfile
 from collections import Counter
 
 import pytest
 
 from streamprocessing_spark.queries import streaming as S
+from streamprocessing_spark.shared_views import (
+    held_views,
+    ingest_root,
+    release_shared_views,
+    view_name,
+)
 from streamprocessing_spark.sources import readers
 from streamprocessing_spark.sources.readers import load_table
 from streamprocessing_spark.streaming.ingest_dedup import (
@@ -20,7 +26,7 @@ from streamprocessing_spark.streaming.ingest_dedup import (
     ContainmentIngestDedup,
     ParagraphIngestDedup,
 )
-from streamprocessing_spark.streaming.replay import stream_table
+from streamprocessing_spark.streaming.replay import run_to_memory_sink, stream_table
 
 
 def _jobs_in_group(spark, group, fn):
@@ -108,8 +114,9 @@ _TWINS = {
 def test_ingest_drain_runs_once_per_session_and_rebuilds_without_done(
     spark, sf_dir, tmp_path, monkeypatch
 ):
+    # a view over a store outside tmp_path has no _DONE marker here, so
+    # the first round of calls drains afresh
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", str(tmp_path))
-    monkeypatch.setattr(S, "_INGEST", {})
     # a drain is one streaming query from a fresh checkpoint: count the
     # queries by their first micro-batch
     starts: Counter = Counter()
@@ -129,16 +136,73 @@ def test_ingest_drain_runs_once_per_session_and_rebuilds_without_done(
     assert rows() == first
     assert starts == Counter({t: 1 for t in _TWINS})
 
-    digest = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:{sf_dir}".encode()
-    ).hexdigest()[:12]
+    root = ingest_root(spark)
+    assert root.startswith(str(tmp_path))
     for tag in _TWINS:
-        base = tmp_path / f"graft_{tag}_ingest" / digest
-        assert sorted(os.listdir(base / "src")) == ["c0.parquet", "c1.parquet", "c2.parquet"]
-        os.remove(base / "_DONE")
+        base = os.path.join(root, view_name(f"{tag}_ingest", sf_dir))
+        assert sorted(os.listdir(f"{base}/src")) == ["c0.parquet", "c1.parquet", "c2.parquet"]
+        os.remove(f"{base}/_DONE")
 
     assert rows() == first
     assert starts == Counter({t: 2 for t in _TWINS})
+    release_shared_views(spark)
+    assert not os.path.exists(root)
+
+
+def test_release_drops_one_off_sinks_without_a_job(spark, sf_dir):
+    """A one-off memory sink is a graft_sink_* view; release drops it
+    and runs no Spark job, and a DataFrame read from the sink before
+    the release still reads."""
+    release_shared_views(spark)
+    out = run_to_memory_sink(stream_table(spark, sf_dir, "orders").select("o_orderkey"), "append")
+    n = out.count()
+    [sink] = held_views(spark)
+    assert sink.startswith("graft_sink_")
+    assert _jobs_in_group(spark, "release_sinks", lambda: release_shared_views(spark)) == []
+    assert held_views(spark) == []
+    assert out.count() == n
+
+
+def test_failed_stream_leaves_no_checkpoint(spark, sf_dir, tmp_path, monkeypatch):
+    """run_to_memory_sink drops its throwaway checkpoint when the stream
+    raises, not only when it completes."""
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    failing = stream_table(spark, sf_dir, "orders").select(F.raise_error(F.lit("op failed")))
+    with pytest.raises(Exception, match="op failed"):
+        run_to_memory_sink(failing, "append")
+    assert [p.name for p in tmp_path.glob("sp_ckpt_*")] == []
+    release_shared_views(spark)
+
+
+@pytest.mark.slow
+def test_release_leaves_no_view_store_or_job_and_calls_rebuild(spark, sf_dir):
+    """After a one-off sink (rainstorm_streaming_app1), a drained query
+    and an ingest twin, one release leaves no held view, no ingest store
+    and runs no Spark job; repeating the calls rebuilds equal rows."""
+    from streamprocessing_spark.registry import all_specs
+
+    specs = all_specs()
+    names = ("rainstorm_streaming_app1", "streaming_count_update", "streaming_cdc_chunks_ingest")
+
+    def rows():
+        return {n: sorted(specs[n].fn(spark, sf_dir).collect()) for n in names}
+
+    release_shared_views(spark)
+    first = rows()
+    held = set(held_views(spark))
+    assert any(v.startswith("graft_sink_") for v in held)
+    assert view_name("streaming_count_update", sf_dir) in held
+    assert view_name("cdc_ingest", sf_dir) in held
+    assert os.path.isdir(ingest_root(spark))
+
+    assert _jobs_in_group(spark, "release_all", lambda: release_shared_views(spark)) == []
+    assert held_views(spark) == []
+    assert not os.path.exists(ingest_root(spark))
+
+    assert rows() == first
+    release_shared_views(spark)
 
 
 def test_get_spark_renames_checkpoints_through_the_filesystem(spark):

@@ -24,6 +24,7 @@ import duckdb  # noqa: E402
 
 from streamprocessing_spark.registry import all_specs  # noqa: E402
 from streamprocessing_spark.session import get_spark  # noqa: E402
+from streamprocessing_spark.shared_views import release_shared_views  # noqa: E402
 from streamprocessing_spark.sources.readers import TABLES  # noqa: E402
 
 
@@ -134,6 +135,7 @@ def main() -> int:
         status = "OK  " if r["ok"] else "FAIL"
         print(f"{status} {n}: {r['detail']}")
         failures += 0 if r["ok"] else 1
+    release_shared_views(spark)  # the ingest twins' stores go with their views
     print(f"\n{len(names) - failures}/{len(names)} pass")
     return 1 if failures else 0
 
